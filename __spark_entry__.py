@@ -100,13 +100,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     long-lived session embedding these queries must do the same, or
     cache entries accrete. Operators that both persist AND run to
     completion inside one call (ml/grid.py, classifiers.py) still pair
-    persist with unpersist themselves."""
+    persist with unpersist themselves.
+
+    A query module that fails to import raises here: the registry never
+    shrinks silently."""
     regs: dict[str, Callable] = {}
     for modname in QUERY_MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ImportError:
-            continue
+        mod = importlib.import_module(modname)
         regs.update(
             {
                 name: fn
@@ -122,11 +122,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    """DuckDB SQL per registered query; like queries(), an oracle module
+    that fails to import raises."""
     out: dict[str, str] = {}
     for modname in ORACLE_MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ImportError:
-            continue
-        out.update(mod.ORACLES)
+        out.update(importlib.import_module(modname).ORACLES)
     return out

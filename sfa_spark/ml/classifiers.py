@@ -27,8 +27,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from sfa_spark.operators import bags, folds, knn, sfa, select, tfidf
 from sfa_spark.operators.words import mask_word
@@ -367,20 +369,24 @@ def _fit_local_softmax(
     routes to _fit_mllib_lr — no driver collect of the bags at all."""
     from sfa_spark.ml import linear
 
-    nnz = kept.count()
-    if nnz * 24 > SOLVE_NNZ_BUDGET_BYTES:
-        return _fit_mllib_lr(kept, labels, key_schema, max_iter, reg_param)
-
     spark = kept.sparkSession
-    label_rows = labels.select("series_id", "label").collect()
-    label_map = sorted({r["label"] for r in label_rows})
-    lab_idx = {l: i for i, l in enumerate(label_map)}
-    all_sids = sorted({r["series_id"] for r in label_rows})
-    y = np.asarray(
-        [lab_idx[r["label"]] for r in sorted(label_rows, key=lambda r: r["series_id"])],
-        dtype=np.int64,
-    )
-    keys, X = _collect_bags(kept, all_sids)
+    # persisted: the count and the bag collect (or the MLlib fit) would
+    # each re-run the whole χ² selection chain
+    kept = kept.persist()
+    try:
+        if kept.count() * 24 > SOLVE_NNZ_BUDGET_BYTES:
+            return _fit_mllib_lr(kept, labels, key_schema, max_iter, reg_param)
+        label_rows = labels.select("series_id", "label").collect()
+        label_map = sorted({r["label"] for r in label_rows})
+        lab_idx = {l: i for i, l in enumerate(label_map)}
+        all_sids = sorted({r["series_id"] for r in label_rows})
+        y = np.asarray(
+            [lab_idx[r["label"]] for r in sorted(label_rows, key=lambda r: r["series_id"])],
+            dtype=np.int64,
+        )
+        keys, X = _collect_bags(kept, all_sids)
+    finally:
+        kept.unpersist()
     lam = 1.0 / (reg_param * max(len(all_sids), 1))
     model = linear.fit_softmax(X, y, len(label_map), lam, max_iter=max_iter)
     weights = spark.createDataFrame(
@@ -436,15 +442,37 @@ def _score_with_weights(
 def _weasel_features(
     sfa_models: dict[int, sfa.SFAModel], arrays: DataFrame
 ) -> DataFrame:
-    """Union of unigram+bigram key bags across all window lengths."""
-    parts = []
-    for w, model in sfa_models.items():
-        words = sfa.transform_windowing(model, arrays)
-        parts.append(bags.weasel_keys(words, window_length=w, bigrams=True))
-    allk = parts[0]
-    for p in parts[1:]:
-        allk = allk.unionByName(p)
-    return bags.bag_of_keys(allk)
+    """Unigram+bigram key bags across all window lengths:
+    (series_id, key bigint, cnt bigint). One Arrow pass per series:
+    words per window length (SFAModel.word_kernel, as
+    transform_windowing), keys (bags.weasel_key_array, as
+    weasel_keys), counts by np.unique (as bag_of_keys) — no window-lag
+    sort and no shuffle. Keys of different window lengths never collide
+    (the window tag), so one count over their concatenation is the
+    union of the per-window bags."""
+    # tags first: a window too wide for the key format fails here on the
+    # driver, before any model is read or any job runs
+    tags = {w: bags.weasel_tag(w) for w in sfa_models}
+    kernels = [(w, tags[w], m.word_kernel()) for w, m in sfa_models.items()]
+
+    @pandas_udf("struct<key:array<bigint>,cnt:array<bigint>>")
+    def _bag(vals: pd.Series) -> pd.DataFrame:
+        keys, cnts = [], []
+        for v in vals:
+            x = np.asarray(v, dtype=np.float64)
+            k, c = np.unique(
+                np.concatenate(
+                    [bags.weasel_key_array(kern(x), w, t) for w, t, kern in kernels]
+                ),
+                return_counts=True,
+            )
+            keys.append(k)
+            cnts.append(c.astype(np.int64))
+        return pd.DataFrame({"key": keys, "cnt": cnts})
+
+    return arrays.select("series_id", _bag("values").alias("b")).select(
+        "series_id", F.inline(F.arrays_zip("b.key", "b.cnt"))
+    )
 
 
 def weasel_fit(

@@ -13,11 +13,15 @@ Reference parity:
 
 Everything here is lag/filter/groupBy — pure SQL, map-side combinable.
 The words input is (series_id, win, word) sorted within series; the lag
-window reuses the (series_id) partitioning.
+window reuses the (series_id) partitioning. weasel_key_array is the
+numpy twin of weasel_keys over one series' words, for per-series Arrow
+UDFs (ml/classifiers.py WEASEL features); both take the key format
+from HIGHEST_BIT and the tag check from weasel_tag.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -46,10 +50,33 @@ def bag_of_words(words: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
+# bits under each word for the window tag: one name owns the WEASEL key
+# format, shared by weasel_keys and weasel_key_array (the reference's
+# highestBit = binlog(highestOneBit(MAX_WINDOW_LENGTH)) + 1)
+HIGHEST_BIT = 9
+
+
+def weasel_tag(
+    window_length: int, window_tag: int | None = None, highest_bit: int = HIGHEST_BIT
+) -> int:
+    """The tag packed under each word of one window length (the window
+    length itself unless `window_tag` is given). Raises ValueError when
+    it does not fit in highest_bit bits — call it on the driver, before
+    any key is built."""
+    tag = window_length if window_tag is None else window_tag
+    if not 0 <= tag < (1 << highest_bit):
+        raise ValueError(
+            f"window tag {tag} (window length {window_length}) needs more than "
+            f"highest_bit={highest_bit} bits; use a smaller window or tag, "
+            "or raise highest_bit"
+        )
+    return tag
+
+
 def weasel_keys(
     words: DataFrame,
     window_length: int,
-    highest_bit: int = 9,
+    highest_bit: int = HIGHEST_BIT,
     bigrams: bool = True,
     window_tag: int | None = None,
 ) -> DataFrame:
@@ -65,12 +92,7 @@ def weasel_keys(
     = 9 bits — any injective tag < 2**highest_bit is equivalent, so we
     default to the window length itself and assert it fits.
     """
-    tag = window_length if window_tag is None else window_tag
-    if not 0 <= tag < (1 << highest_bit):
-        raise ValueError(
-            f"window tag {tag} needs more than highest_bit={highest_bit} bits; "
-            "pass window_tag=<window index> or raise highest_bit"
-        )
+    tag = weasel_tag(window_length, window_tag, highest_bit)
     uni_key = F.shiftleft(F.col("word"), highest_bit).bitwiseOR(F.lit(tag))
     uni = words.select("series_id", uni_key.alias("key"))
     if not bigrams:
@@ -94,6 +116,18 @@ def weasel_keys(
             ).alias("key"),
         )
     )
+
+
+def weasel_key_array(words: np.ndarray, window_length: int, tag: int) -> np.ndarray:
+    """weasel_keys (bigrams on, highest_bit = HIGHEST_BIT) for ONE series:
+    `words` (int64) in window order → its unigram keys, then its bigram
+    keys, as one int64 array. `tag` comes from weasel_tag, checked on the
+    driver. The lag of window_length rows is a slice; counting is left
+    to the caller (np.unique)."""
+    uni = (words << HIGHEST_BIT) | tag
+    prev = words[: max(len(words) - window_length, 0)]
+    bi = (prev << 32) | uni[window_length:]
+    return np.concatenate([uni, bi[prev != 0]])
 
 
 def bag_of_keys(keys: DataFrame) -> DataFrame:

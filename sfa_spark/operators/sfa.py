@@ -16,16 +16,25 @@ Reference parity:
 Spark shape: fit = pandas-UDF MFT → explode to coefficient long form →
 group-aggregate binning (equi-width pure SQL, equi-depth exact
 percentile, IG grouped applyInPandas). The fitted model is a tiny bins
-table — broadcast into every transform. No driver-side loops over
-series anywhere.
+table (at most word_length rows), read to the driver once per model.
+The sliding transform is one Arrow-batched scalar UDF per series
+(MFT → rank-order column pick → searchsorted quantize → bit-pack)
+followed by one posexplode: no coefficient explode, no join, no
+shuffle. The whole-series index transform keeps the long form, whose
+DFT values the lower bounds need. No driver-side loops over series
+anywhere.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from sfa_spark.functions import spectral
 from sfa_spark.operators import quantize as QZ
@@ -45,6 +54,43 @@ class SFAModel:
     bins: DataFrame  # (seg int, bins array<double>) — alphabet-1 ascending boundaries
     best_segs: list[int] | None = None  # supervised: kept value indices (rank order)
     fit_l: int | None = None  # supervised: number of Fourier values ranked at fit
+
+    @cached_property
+    def bin_arrays(self) -> dict[int, np.ndarray]:
+        """seg → ascending boundaries, read from the bins table on first
+        use and kept for the model's lifetime."""
+        return {
+            r["seg"]: np.asarray(r["bins"], dtype=np.float64)
+            for r in self.bins.collect()
+        }
+
+    def word_kernel(self):
+        """numpy kernel for one series: values → one packed word per
+        sliding window, int64, in window order (see transform_windowing)."""
+        w, norm_mean, lower_bounding = self.window, self.norm_mean, self.lower_bounding
+        supervised = self.best_segs is not None
+        l = self.fit_l if supervised else self.word_length
+        cols = self.best_segs if supervised else list(range(self.word_length))
+        bits = WD.binlog(self.alphabet)
+        bins = self.bin_arrays
+        # (value column, packed position, boundaries); a position with
+        # no bins row contributes nothing, as the inner bins join did
+        plan = [(c, pos, bins[pos]) for pos, c in enumerate(cols) if pos in bins]
+
+        def kernel(x: np.ndarray) -> np.ndarray:
+            coefs = spectral.mft_all_windows(
+                x, w, l, norm_mean=norm_mean, lower_bounding=lower_bounding
+            )
+            word = np.zeros(len(coefs), dtype=np.int64)
+            for c, pos, b in plan:
+                v = coefs[:, c]
+                # NaN: the long form carried it to Spark as null, which
+                # no boundary is <= → symbol 0
+                sym = np.where(np.isnan(v), 0, np.searchsorted(b, v, side="right"))
+                word += sym.astype(np.int64) << (bits * pos)
+            return word
+
+        return kernel
 
     def save(self, path: str) -> None:
         """Persist as parquet (reference uses Kryo; parquet is the
@@ -261,35 +307,31 @@ def fit_supervised(
 
 
 def transform_windowing(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Sliding words for every series: (series_id, win, word bigint).
+    """Sliding words for every series: (series_id, win bigint, word bigint).
 
-    MFT (pandas UDF) → coefficient long form → broadcast-bin quantize →
-    bit-pack. For supervised models only best_segs are quantized, and
-    the packed position is the coefficient's RANK (reference quantizes
-    bestValues in rank order, SFASupervised.java:38-54).
+    One Arrow-batched scalar UDF over `values` runs the model's
+    word_kernel per series — MFT, quantize each kept value with
+    searchsorted(bins, v, side="right") (the count of boundaries <= v;
+    a NaN value gets symbol 0), bit-pack with binlog(alphabet) bits per
+    symbol — and one posexplode assigns window ids. For supervised
+    models only best_segs are quantized, and the packed position is the
+    coefficient's RANK (reference quantizes bestValues in rank order,
+    SFASupervised.java:38-54).
+    Row-for-row equal to the long-form composition mft_sliding →
+    coefs_to_long → rank remap → quantize_with_bins → pack_words
+    (tests/test_spectral.py), without its 8× explode, joins and
+    shuffle. Series shorter than the window yield one zero-padded
+    window, as mft_all_windows does.
     """
-    coefs = spectral.mft_sliding(
-        arrays,
-        w=model.window,
-        l=model.fit_l if model.best_segs else model.word_length,
-        norm_mean=model.norm_mean,
-        lower_bounding=model.lower_bounding,
-    )
-    long = spectral.coefs_to_long(coefs)
-    if model.best_segs is not None:
-        spark = arrays.sparkSession
-        seg_rank = spark.createDataFrame(
-            [(s, i) for i, s in enumerate(model.best_segs)], "seg int, rank int"
-        )
-        long = (
-            long.join(F.broadcast(seg_rank), "seg")
-            .drop("seg")
-            .withColumnRenamed("rank", "seg")
-        )
-    sym = QZ.quantize_with_bins(long, model.bins)
-    return WD.pack_words(
-        sym.select("series_id", "win", "seg", "symbol"), model.alphabet
-    )
+    kernel = model.word_kernel()
+
+    @pandas_udf("array<bigint>")
+    def _words(vals: pd.Series) -> pd.Series:
+        return vals.map(lambda v: kernel(np.asarray(v, dtype=np.float64)))
+
+    return arrays.select(
+        "series_id", F.posexplode(_words("values")).alias("win", "word")
+    ).select("series_id", F.col("win").cast("bigint").alias("win"), "word")
 
 
 def transform(model: SFAModel, arrays: DataFrame) -> DataFrame:

@@ -27,8 +27,12 @@ def _sfa_bag_ctes(
     reduction + bag for ALL corpus series. k_lo=0 ⇒ norm_mean=False
     (seg0 = DC, seg1 = the zeroed packed slot — Σ value·sin(0) = 0, so
     the generic trig sum already matches); k_lo=1 ⇒ norm_mean=True.
-    Mirrors sfa.fit/transform_windowing + bags (operators/sfa.py:86-168,
-    263-292; reference SFA.java:260-338,402,436-450)."""
+    Mirrors sfa.fit + sfa.transform_windowing + bags (operators/sfa.py
+    fit, SFAModel.word_kernel, transform_windowing; reference
+    SFA.java:260-338,402,436-450). The engine quantizes with
+    searchsorted over each window's value row inside one Arrow UDF;
+    the per-(window, seg) count of boundaries <= value here is the
+    same symbol."""
     return f"""{SERIES},
 corp AS (SELECT * FROM series WHERE {corp_filter}),
 ks AS (SELECT unnest(generate_series({k_lo}, {k_lo + n_ks - 1})) AS k),

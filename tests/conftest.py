@@ -22,5 +22,29 @@ def _drop_cache_after_heavy_fits(request):
 
 
 @pytest.fixture(scope="session")
+def plan_node_names():
+    """df → class names of every node of its executed plan, through the
+    AQE wrapper and query stages (run the query first for the final
+    adaptive plan). Plan tests match node classes, not plan strings."""
+
+    def names(df):
+        stack, out = [df._jdf.queryExecution().executedPlan()], set()
+        while stack:
+            node = stack.pop()
+            name = node.getClass().getSimpleName()
+            out.add(name)
+            if name == "AdaptiveSparkPlanExec":
+                stack.append(node.executedPlan())
+            elif name.endswith("QueryStageExec"):
+                stack.append(node.plan())
+            else:
+                kids = node.children()
+                stack.extend(kids.apply(i) for i in range(kids.size()))
+        return out
+
+    return names
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

@@ -113,3 +113,49 @@ def test_mllib_fallback_matches_local_solve(spark, monkeypatch):
               for r in C._score_with_weights(kept, ids, w_dist, b_dist, lm_dist).collect()}
     agree = sum(p_loc[s] == p_dist[s] for s in p_loc) / len(p_loc)
     assert agree >= 0.95, f"local vs MLlib prediction agreement {agree}"
+
+
+def test_weasel_features_match_sql_key_bags(spark, cbf, plan_node_names):
+    """The one-pass Arrow featurization equals the SQL composition it
+    replaced (transform_windowing → weasel_keys → union → bag_of_keys)
+    for windows [12, 16], and its executed plan has no shuffle."""
+    from sfa_spark.operators import bags, sfa
+
+    tr_a, tr_l, te_a, _ = cbf
+    models = {
+        w: sfa.fit_supervised(tr_a, tr_l, window=w, word_length=4, alphabet=4,
+                              histogram="information_gain", max_coefs=8)
+        for w in (12, 16)
+    }
+    parts = [
+        bags.weasel_keys(sfa.transform_windowing(m, te_a), window_length=w)
+        for w, m in models.items()
+    ]
+    want = bags.bag_of_keys(parts[0].unionByName(parts[1]))
+    got = C._weasel_features(models, te_a)
+    assert got.columns == ["series_id", "key", "cnt"]
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in want.collect()
+    )
+    names = plan_node_names(got)
+    assert "ShuffleExchangeExec" not in names, names
+
+
+def test_weasel_features_reject_wide_window_before_any_job(spark, cbf):
+    """A window too wide for the key's tag bits raises ValueError from
+    _weasel_features itself, on the driver, before any Spark job — not
+    from a worker at the first action. The model is a window-12 fit
+    keyed under 600, so only the tag is out of range."""
+    from sfa_spark.operators import sfa
+
+    tr_a, tr_l, te_a, _ = cbf
+    model = sfa.fit_supervised(tr_a, tr_l, window=12, word_length=4, alphabet=4,
+                               histogram="information_gain", max_coefs=8)
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "weasel-wide-window")
+    try:
+        with pytest.raises(ValueError, match="window tag 600"):
+            C._weasel_features({600: model}, te_a)
+        assert sc.statusTracker().getJobIdsForGroup("weasel-wide-window") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

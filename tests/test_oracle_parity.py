@@ -49,3 +49,20 @@ def test_entry_smoke(spark):
     df = E.entry(spark)
     assert df.count() > 0
     assert df.columns == ["series_id", "word", "cnt", "rk"]
+
+
+def test_registry_is_complete():
+    """172 queries, each with an oracle, and no oracle without a query."""
+    assert len(QUERIES) == 172
+    assert set(SQLS) == {name for name, _ in QUERIES}
+
+
+def test_registry_raises_on_broken_module(monkeypatch):
+    """A module that fails to import fails the registry instead of
+    silently dropping its queries (or oracles)."""
+    monkeypatch.setattr(E, "QUERY_MODULES", [*E.QUERY_MODULES, "sfa_spark.no_such"])
+    with pytest.raises(ImportError):
+        E.queries()
+    monkeypatch.setattr(E, "ORACLE_MODULES", [*E.ORACLE_MODULES, "sfa_spark.no_such"])
+    with pytest.raises(ImportError):
+        E.oracle_sql()

@@ -165,3 +165,89 @@ def test_variable_length_series_words(spark):
     words = sfa.transform_windowing(model, usable)
     counts = {r["series_id"]: r["count"] for r in words.groupBy("series_id").count().collect()}
     assert counts == {0: 25, 1: 41, 2: 49, 3: 15}
+
+
+def _long_form_words(model, arrays):
+    """The pre-fusion composition, kept as the reference for the fused
+    transform: mft_sliding → coefs_to_long → rank remap → broadcast
+    quantize_with_bins → pack_words."""
+    from sfa_spark.operators import quantize, words
+
+    coefs = spectral.mft_sliding(
+        arrays,
+        w=model.window,
+        l=model.fit_l if model.best_segs else model.word_length,
+        norm_mean=model.norm_mean,
+        lower_bounding=model.lower_bounding,
+    )
+    long = spectral.coefs_to_long(coefs)
+    if model.best_segs is not None:
+        seg_rank = arrays.sparkSession.createDataFrame(
+            [(s, i) for i, s in enumerate(model.best_segs)], "seg int, rank int"
+        )
+        long = (
+            long.join(F.broadcast(seg_rank), "seg")
+            .drop("seg")
+            .withColumnRenamed("rank", "seg")
+        )
+    sym = quantize.quantize_with_bins(long, model.bins)
+    return words.pack_words(
+        sym.select("series_id", "win", "seg", "symbol"), model.alphabet
+    )
+
+
+@pytest.fixture(scope="module")
+def ragged_arrays(spark):
+    """Random walks of variable length (one shorter than every window
+    below), plus a copy of one walk with a NaN in the middle."""
+    rng = np.random.default_rng(17)
+    rows = [
+        (i, np.cumsum(rng.normal(0, 1, n)).tolist())
+        for i, n in enumerate([64, 40, 57, 33, 90, 48, 71, 36, 5])
+    ]
+    nan_walk = list(rows[0][1])
+    nan_walk[30] = float("nan")
+    rows.append((99, nan_walk))
+    return spark.createDataFrame(rows, "series_id long, values array<double>")
+
+
+def _fit_case(ragged_arrays, case):
+    clean = ragged_arrays.where(
+        (F.col("series_id") != 99) & (F.size("values") >= 16)
+    )
+    if case == "equi_depth":
+        return sfa.fit(clean, window=12, word_length=6, alphabet=4,
+                       histogram="equi_depth")
+    if case == "equi_width_norm_mean":
+        return sfa.fit(clean, window=16, word_length=8, alphabet=8,
+                       histogram="equi_width", norm_mean=True)
+    if case == "odd_window_kstar":  # l + offset >= w → packed kstar pair
+        return sfa.fit(clean, window=7, word_length=8, alphabet=4,
+                       histogram="equi_depth")
+    labels = clean.select(
+        "series_id", (F.col("series_id") % 2).cast("double").alias("label")
+    )
+    return sfa.fit_supervised(clean, labels, window=12, word_length=4,
+                              alphabet=4, histogram="information_gain",
+                              max_coefs=8)
+
+
+@pytest.mark.parametrize(
+    "case", ["equi_depth", "equi_width_norm_mean", "odd_window_kstar", "supervised_ig"]
+)
+def test_fused_transform_windowing_matches_long_form(
+    spark, ragged_arrays, plan_node_names, case
+):
+    model = _fit_case(ragged_arrays, case)
+    fused = sfa.transform_windowing(model, ragged_arrays)
+    got = sorted(tuple(r) for r in fused.collect())
+    want = sorted(tuple(r) for r in _long_form_words(model, ragged_arrays).collect())
+    assert got == want
+    assert [f.dataType.simpleString() for f in fused.schema.fields[1:]] == [
+        "bigint", "bigint"
+    ]
+    # every series has words: the 5-point walk as one zero-padded window
+    assert {r[0] for r in got} == set(range(9)) | {99}
+    names = plan_node_names(fused)
+    assert "ShuffleExchangeExec" not in names, names
+    assert "ArrowEvalPythonExec" in names

@@ -139,3 +139,59 @@ def test_approx_equi_depth_close_to_exact(spark):
     assert len(exact) == len(approx) == 7
     for e, a in zip(exact, approx):
         assert abs(e - a) < 0.05, (e, a)  # tight at eps=1e-4 on 4k samples
+
+
+def test_weasel_key_array_matches_spark_key_bag(spark):
+    """The numpy key builder + np.unique counts against weasel_keys +
+    bag_of_keys over two window lengths. Words are drawn from 0..3 so
+    zero prev words (suppressed bigrams) are frequent; series lengths
+    n give n - w + 1 windows, from one window (n < w) through fewer
+    than w + 1 windows (n < 2w: no bigram at all) to many."""
+    import numpy as np
+
+    rng = np.random.default_rng(29)
+    windows = [12, 16]
+    lengths = {1: 8, 2: 20, 3: 27, 4: 31, 5: 33, 6: 64, 7: 100}
+    words_of = {
+        (sid, w): rng.integers(0, 4, max(n - w + 1, 1)).astype(np.int64)
+        for sid, n in lengths.items()
+        for w in windows
+    }
+    parts = []
+    for w in windows:
+        df = spark.createDataFrame(
+            [
+                (sid, i, int(x))
+                for sid in lengths
+                for i, x in enumerate(words_of[(sid, w)])
+            ],
+            "series_id long, win long, word long",
+        )
+        parts.append(bags.weasel_keys(df, window_length=w, bigrams=True))
+    want = {
+        (r["series_id"], r["key"]): r["cnt"]
+        for r in bags.bag_of_keys(parts[0].unionByName(parts[1])).collect()
+    }
+    got = {}
+    for sid in lengths:
+        keys = np.concatenate(
+            [
+                bags.weasel_key_array(words_of[(sid, w)], w, bags.weasel_tag(w))
+                for w in windows
+            ]
+        )
+        k, c = np.unique(keys, return_counts=True)
+        got.update({(sid, int(kk)): int(cc) for kk, cc in zip(k, c)})
+    assert got == want
+    suppressed = sum(
+        int((ws[:-w] == 0).sum()) for (_, w), ws in words_of.items() if len(ws) > w
+    )
+    assert suppressed > 0  # the data exercises the prev == 0 guard
+    assert any(key >= 1 << 32 for _, key in got)  # and emits bigrams
+
+
+def test_weasel_tag_rejects_wide_tag():
+    assert bags.weasel_tag(511) == 511
+    assert bags.weasel_tag(600, window_tag=3) == 3
+    with pytest.raises(ValueError, match="window tag 600"):
+        bags.weasel_tag(600)
