@@ -89,8 +89,6 @@ def boss_1nn_blocked(
     train_bags: DataFrame,
     loo: bool = False,
     n_chunks: int | None = None,
-    n_query_blocks: int = 1,
-    assume_dense_vocab: bool = False,
 ) -> DataFrame:
     """boss_1nn with the SAME semantics (exact integer BOSS distances,
     reference acceptance rule corr ≠ 0 ∧ dist > 0, ties → smaller
@@ -106,88 +104,49 @@ def boss_1nn_blocked(
         dist(q, c) = sumsq(q) − 2·(Q Cᵀ)[q,c] + (M_q (C∘C)ᵀ)[q,c]
 
     with M_q = (Q > 0) the query's word mask (the asymmetric "test
-    words only" term). The corpus is hash-chunked, queries replicated
-    per chunk (or hash-blocked too via n_query_blocks — shotgun_1nn's
-    grid layout), each (qblock, chunk) group densifies its long rows
-    into local matrices (widx is globally assigned, so per-group
-    scatter aligns; missing high columns are zero and cancel), and
-    resolves its LOCAL argmin in numpy without materializing the pair
-    matrix into the plan; a final min(struct(dist, nn_id)) merges
-    chunks. Shuffle volume is |bags_q|·n_chunks + |bags_c|·n_query_blocks
-    long rows — linear in the corpus, never pairs.
+    words only" term). The corpus is hash-chunked and the queries (a
+    classification test set) are replicated to every chunk; each chunk
+    group densifies its long rows into local matrices and resolves its
+    LOCAL argmin in numpy without materializing the pair matrix into
+    the plan; a final min(struct(dist, nn_id)) merges chunks. Shuffle
+    volume is |bags_q|·n_chunks + |bags_c| long rows — linear in the
+    corpus, never pairs. n_chunks defaults to defaultParallelism;
+    q_boss_1nn sizes it from its input.
+
+    The word id itself is the dense column index, so words must be
+    small non-negative ints — packed SFA words live in
+    [0, alphabet^word_length), 256 here; anything else raises
+    ValueError. Columns for words absent from a group are all-zero on
+    both sides and cancel in every term (mask·(C∘C), Q·Cᵀ, sumsq), so
+    no global vocabulary index (three driver-blocking stages, ~1.2 s of
+    q_boss_1nn's 2.8 s at sf0.1) is needed.
 
     Counts are small ints so float64 GEMMs are exact; dist is cast
     back to long. Zero-overlap candidates have corr == 0 (excluded),
     identical-projection candidates dist == 0 (excluded) — matching
     BOSSEnsembleClassifier.java:216 exactly like the sparse path.
     Output: (series_id, nn_id, dist) — bit-identical to boss_1nn
-    (asserted by tests/test_knn equivalence test).
-
-    assume_dense_vocab=True (r8): skip the global vocabulary index and
-    use the word id itself as the dense column index. Correct whenever
-    word ids are already small non-negative ints — packed SFA words
-    live in [0, alphabet^word_length), 256 here — because columns for
-    absent words are all-zero on both sides and cancel in every term
-    (mask·(C∘C), Q·Cᵀ, sumsq). The index chain it removes (union →
-    distinct → single-partition row_number window → broadcast join on
-    EACH side) is 3 driver-blocking stages; at sf0.1 it was ~1.2 s of
-    the query's 2.8 s — pure stage latency, not data work (guide §1.2:
-    fix the distributed algorithm first; fixed per-job overhead is the
-    'shuffle' of tiny inputs). Distances are bit-identical (asserted
-    by tests/test_models.py::test_boss_1nn_blocked_dense_vocab).
+    (tests/test_models.py::test_boss_1nn_blocked_dense_vocab).
     """
     import numpy as np
     import pandas as pd
 
     spark = test_bags.sparkSession
     P = int(n_chunks or spark.sparkContext.defaultParallelism)
-    B = max(1, int(n_query_blocks))
-
-    if assume_dense_vocab:
-        q_proj = test_bags.select(
-            "series_id", F.col("word").cast("int").alias("widx"), "cnt"
-        )
-        c_proj = train_bags.select(
-            "series_id", F.col("word").cast("int").alias("widx"), "cnt"
-        )
-    else:
-        vocab = (
-            test_bags.select("word")
-            .unionByName(train_bags.select("word"))
-            .distinct()
-        )
-        vocab = vocab.select(
-            "word",
-            (F.row_number().over(Window.orderBy("word")) - 1).alias("widx"),
-        )
-        q_proj = test_bags.join(F.broadcast(vocab), "word").select(
-            "series_id", "widx", "cnt"
-        )
-        c_proj = train_bags.join(F.broadcast(vocab), "word").select(
-            "series_id", "widx", "cnt"
-        )
 
     chunks = spark.range(P).select(F.col("id").cast("int").alias("chunk"))
-    qblocks = spark.range(B).select(F.col("id").cast("int").alias("qblock"))
-    q = (
-        q_proj.select(
-            F.col("series_id").alias("sid"),
-            "widx",
-            "cnt",
-            F.lit(True).alias("is_q"),
-            F.pmod(F.hash("series_id"), F.lit(B)).cast("int").alias("qblock"),
-        )
-        .join(F.broadcast(chunks))
-    )
-    c = (
-        c_proj.select(
-            F.col("series_id").alias("sid"),
-            "widx",
-            "cnt",
-            F.lit(False).alias("is_q"),
-            F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
-        )
-        .join(F.broadcast(qblocks))
+    q = test_bags.select(
+        F.col("series_id").alias("sid"),
+        F.col("word").cast("int").alias("widx"),
+        "cnt",
+        F.lit(True).alias("is_q"),
+    ).join(F.broadcast(chunks))
+    c = train_bags.select(
+        F.col("series_id").alias("sid"),
+        F.col("word").cast("int").alias("widx"),
+        "cnt",
+        F.lit(False).alias("is_q"),
+        F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
     )
 
     def _dense(pdf):
@@ -205,17 +164,17 @@ def boss_1nn_blocked(
         if not len(qs) or not len(cs):
             return pd.DataFrame({"q_id": [], "c_id": [], "dist": []})
         V = int(pdf["widx"].max()) + 1
-        # assume_dense_vocab contract: word ids ARE the dense column
-        # index, so they must be small non-negative ints. A hashed or
-        # negative id would silently wrap on the int cast or allocate
-        # a max(widx)+1-wide zero matrix per group — fail fast instead
+        # word ids ARE the dense column index, so they must be small
+        # non-negative ints. A hashed or negative id would silently
+        # wrap on the int cast or allocate a max(widx)+1-wide zero
+        # matrix per group — fail fast instead
         # (1<<22 ≈ 32 MB/row of float64, far above any packed-SFA
         # vocabulary: alphabet**word_length is 256 here).
         if int(pdf["widx"].min()) < 0 or V > (1 << 22):
             raise ValueError(
                 f"dense word index out of range: [{pdf['widx'].min()}, "
-                f"{V - 1}] — boss_1nn_blocked(assume_dense_vocab=True) "
-                "requires word ids in [0, alphabet**word_length)"
+                f"{V - 1}] — boss_1nn_blocked requires word ids in "
+                "[0, alphabet**word_length)"
             )
         q_ids, Q = _dense(qs)
         c_ids, C = _dense(cs)
@@ -258,7 +217,7 @@ def boss_1nn_blocked(
 
     local = (
         q.unionByName(c)
-        .groupBy("qblock", "chunk")
+        .groupBy("chunk")
         .applyInPandas(_group, schema="q_id bigint, c_id bigint, dist double")
     )
     return (
@@ -278,7 +237,6 @@ def shotgun_1nn(
     window: int,
     norm_mean: bool = True,
     n_chunks: int | None = None,
-    n_query_blocks: int = 1,
 ) -> DataFrame:
     """Shotgun distance 1-NN (reference ShotgunClassifier.java:161-238):
     the query is cut into DISJOINT windows; each window's best (min) ED
@@ -296,13 +254,6 @@ def shotgun_1nn(
     shuffled |Q|·n/w × |C|·n pair ROWS; this ships each series array
     once per chunk).
 
-    n_query_blocks > 1 is the NON-broadcast-query path: queries are
-    hash-blocked too, giving a (block × chunk) grid — each group holds
-    |Q|/n_query_blocks queries and |C|/n_chunks candidates, so neither
-    side needs to fit a single task. Shipped volume becomes
-    |Q|·n_chunks + |C|·n_query_blocks (vs |Q|·n_chunks + |C|); pick
-    n_query_blocks ≈ |Q|·row_bytes / task_budget. The default (1)
-    keeps the replicate-broadcast-sized-queries plan bit-for-bit.
     Output: (series_id, nn_id, dist).
     """
     import numpy as np
@@ -310,30 +261,19 @@ def shotgun_1nn(
 
     spark = query_arrays.sparkSession
     P = int(n_chunks or spark.sparkContext.defaultParallelism)
-    B = max(1, int(n_query_blocks))
     w_len, nm = int(window), bool(norm_mean)
 
     chunks = spark.range(P).select(F.col("id").cast("int").alias("chunk"))
-    qblocks = spark.range(B).select(F.col("id").cast("int").alias("qblock"))
     q = (
         query_arrays.where(F.size("values") >= w_len)
-        .select(
-            "series_id",
-            "values",
-            F.lit(True).alias("is_q"),
-            F.pmod(F.hash("series_id"), F.lit(B)).cast("int").alias("qblock"),
-        )
+        .select("series_id", "values", F.lit(True).alias("is_q"))
         .join(F.broadcast(chunks))
     )
-    c = (
-        corpus_arrays.where(F.size("values") >= w_len)
-        .select(
-            "series_id",
-            "values",
-            F.lit(False).alias("is_q"),
-            F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
-        )
-        .join(F.broadcast(qblocks))
+    c = corpus_arrays.where(F.size("values") >= w_len).select(
+        "series_id",
+        "values",
+        F.lit(False).alias("is_q"),
+        F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
     )
 
     def _norm(m):
@@ -377,7 +317,7 @@ def shotgun_1nn(
 
     local = (
         q.unionByName(c)
-        .groupBy("qblock", "chunk")
+        .groupBy("chunk")
         .applyInPandas(_group, schema="q_id bigint, c_id bigint, dist double")
     )
     return (

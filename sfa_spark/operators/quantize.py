@@ -87,7 +87,6 @@ def fit_equi_depth_bins(
     coef_long: DataFrame,
     alphabet: int,
     relative_error: float = 0.0,
-    method: str = "reference",
     keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Fit equi-depth bin BOUNDARIES per coefficient.
@@ -98,25 +97,19 @@ def fit_equi_depth_bins(
       * relative_error > 0 → percentile_approx with that ε — the 100 TB
         mode (exact per-seg scans don't scale; downstream quantize join
         is identical).
-      * method="reference" (default) — exact parity with
+      * relative_error = 0 (default) — exact parity with
         SFA.divideEquiDepthHistogram (`SFA.java:436-450`): walk the
         sorted orderline, set bins[pos] to the value at the first
         1-based position > ceil(depth·(pos+1)), skipping values equal
         to the previous boundary (duplicate suppression). Grouped
         applyInPandas per seg — group size is #series × #windows for
         ONE coefficient, the same bounded shape as fit_ig_bins.
-      * method="interpolated" — exact interpolated percentile
-        (deviates from the reference for boundaries that fall between
-        data points; kept for the rank-quantile oracle queries).
     """
     ks = list(keys)
     qs = [i / alphabet for i in range(1, alphabet)]
     if relative_error > 0:
         acc = max(1, int(1.0 / relative_error))
         agg = F.percentile_approx("coef", F.array(*[F.lit(q) for q in qs]), acc)
-        return coef_long.groupBy(*ks, "seg").agg(agg.alias("bins"))
-    if method == "interpolated":
-        agg = F.percentile("coef", F.array(*[F.lit(q) for q in qs]))
         return coef_long.groupBy(*ks, "seg").agg(agg.alias("bins"))
 
     import math

@@ -171,6 +171,8 @@ def fit(
     histogram: equi_depth (exact percentile, or approx with
     quantile_error>0 at scale), equi_width, or information_gain
     (labels required — grouped applyInPandas recursion).
+    quantile_error is a model parameter, not a plan switch: an
+    approximate percentile gives different bins.
     Orderline rounding to 2 decimals replicated (SFA.java:402).
     """
     if histogram not in HISTOGRAMS:
@@ -180,23 +182,7 @@ def fit(
         "coef", F.round("coef", 2)  # reference orderline rounding
     )
     if histogram == "equi_width":
-        stats = long.groupBy("seg").agg(
-            F.min("coef").alias("vmin"), F.max("coef").alias("vmax")
-        )
-        step = (F.col("vmax") - F.col("vmin")) / alphabet
-        bins = stats.select(
-            "seg",
-            F.when(
-                step <= 0, F.array(*[F.lit(float("inf"))] * (alphabet - 1))
-            )
-            .otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(alphabet - 1)),
-                    lambda i: F.col("vmin") + i * step,
-                )
-            )
-            .alias("bins"),
-        )
+        bins = QZ.fit_equi_width_bins(long, alphabet)
     elif histogram == "equi_depth":
         bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
     else:
@@ -227,21 +213,7 @@ def fit_whole(
     coefs = spectral.dft(arrays, word_length, pad_pow2=True)
     long = spectral.coefs_to_long(coefs).withColumn("coef", F.round("coef", 2))
     if histogram == "equi_width":
-        stats = long.groupBy("seg").agg(
-            F.min("coef").alias("vmin"), F.max("coef").alias("vmax")
-        )
-        step = (F.col("vmax") - F.col("vmin")) / alphabet
-        bins = stats.select(
-            "seg",
-            F.when(step <= 0, F.array(*[F.lit(float("inf"))] * (alphabet - 1)))
-            .otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(alphabet - 1)),
-                    lambda i: F.col("vmin") + i * step,
-                )
-            )
-            .alias("bins"),
-        )
+        bins = QZ.fit_equi_width_bins(long, alphabet)
     else:
         bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
     return SFAModel(

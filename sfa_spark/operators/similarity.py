@@ -23,6 +23,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# corpus size estimate (bytes) from which exact cosine scores with the
+# Arrow GEMM instead of the JVM fold; see _brute_cosine_rank
+GEMM_MIN_BYTES = 16 << 20
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -74,45 +78,34 @@ def _brute_cosine_rank(
     oracle's +1e-9 nudge — verified green at sf0.001/0.01/0.1.
 
     The switch is SIZE-ADAPTIVE (measured crossover, interleaved
-    noop A/Bs on this box): the GEMM pays ~0.4-0.5 s fixed — a
+    noop A/Bs): the GEMM pays ~0.4-0.5 s fixed — a
     construction-time collect of the query side plus Python worker
     spin-up — so at 20k corpus rows (sf1, 5.7 MB) the fold wins
     (1.10 vs 1.50 s) while at 500k rows (42 MB estimated) the GEMM
-    wins (3.6 vs 5.1 s) and the gap grows linearly with |C|. `auto`
-    picks GEMM when the optimizer's corpus size estimate exceeds
-    SPARK_GRAFT_GEMM_MIN_BYTES (default 16 MB ≈ the ~200k-row
-    crossover); SPARK_GRAFT_COSINE_GEMM=on|off forces either arm;
-    streaming frames always fold.
+    wins (3.6 vs 5.1 s) and the gap grows linearly with |C|. The GEMM
+    runs when the optimizer's corpus size estimate is at least
+    GEMM_MIN_BYTES (16 MB ≈ the ~200k-row crossover); streaming frames
+    and corpora without a size estimate always fold.
     """
-    import os
-
-    mode = os.environ.get("SPARK_GRAFT_COSINE_GEMM", "auto")
-    use_gemm = mode == "on"
-    if mode == "auto" and not (queries.isStreaming or corpus.isStreaming):
-        try:
-            est = int(
-                str(
-                    corpus._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
-            )
-            thresh = int(
-                os.environ.get("SPARK_GRAFT_GEMM_MIN_BYTES", str(16 << 20))
-            )
-            # estimates near Long.MaxValue mean "unknown" (Spark's
-            # defaultSizeInBytes for un-stat'd relations) — fold then
-            use_gemm = thresh <= est < (1 << 62)
-        except Exception:  # noqa: BLE001 — stats unavailable: fold
-            use_gemm = False
-    if not use_gemm or queries.isStreaming or corpus.isStreaming:
+    if queries.isStreaming or corpus.isStreaming or not _gemm_sized(corpus):
         return _brute_cosine_rank_fold(
             queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
         )
     return _brute_cosine_rank_gemm(
         queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
     )
+
+
+def _gemm_sized(corpus: DataFrame) -> bool:
+    try:
+        est = int(
+            str(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        )
+    except Exception:  # noqa: BLE001 — stats unavailable: fold
+        return False
+    # estimates near Long.MaxValue mean "unknown" (Spark's
+    # defaultSizeInBytes for un-stat'd relations) — fold then
+    return GEMM_MIN_BYTES <= est < (1 << 62)
 
 
 def _brute_cosine_rank_fold(

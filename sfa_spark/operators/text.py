@@ -189,8 +189,8 @@ def bm25_search(
     Scale shape: the term→postings table is filtered by the BROADCAST
     query-term list before anything heavy (an inverted-index probe, not
     a corpus scan per query); N/avgdl/df stay in-plan as broadcast
-    aggregates; the final top-k is TakeOrderedAndProject + the k×k rank
-    join. Output: (doc_id, score, rk).
+    aggregates; the final top-k is TakeOrderedAndProject + a row_number
+    over the k-row limit output. Output: (doc_id, score, rk).
     """
     spark = docs.sparkSession
     d = with_tokens(docs)

@@ -1,4 +1,5 @@
-"""Global top-k with dense ranks, computed in one pass over the input.
+"""Global top-k with ranks 1..k under a total order, computed in one
+pass over the input.
 
 orderBy().limit(k) plans as TakeOrderedAndProject — a parallel partial
 top-k per partition merged on the driver, the shape that survives any

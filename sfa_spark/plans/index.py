@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -60,15 +61,15 @@ def _box_lb(qcols: list, mins, maxs):
     return total
 
 
-def _sfa_row_lb(qdft_col, syms_col, bins_map: dict[int, list[float]], l: int):
+def _sfa_row_lb(qdft_col, syms_col, bins_map: dict[int, np.ndarray], l: int):
     """Squared SFA lower bound (SFADistance.java:22-67) as a codegen'd
     expression: per coefficient, gap from the query's DFT value to the
     candidate symbol's bin interval, 2·gap² summed. CASE branches guard
     the ANSI element_at bounds."""
     total = F.lit(0.0)
     for i in range(l):
-        bs = bins_map.get(i, [])
-        if not bs:
+        bs = bins_map.get(i, ())
+        if len(bs) == 0:
             continue
         v = F.element_at(qdft_col, i + 1)
         c = F.element_at(syms_col, i + 1)
@@ -281,9 +282,7 @@ class SFAIndex:
             ],
         ).join(queries.select(F.col("series_id").alias("q_id"), F.col("values").alias("qvals")), "q_id")
 
-    def knn(
-        self, queries: DataFrame, k: int, broadcast_queries: bool = True
-    ) -> DataFrame:
+    def knn(self, queries: DataFrame, k: int) -> DataFrame:
         """Exact batch k-NN. Output: (q_id, nn_id, dist, rk).
 
         Phase 1 (probe): exact distances inside each query's own prefix
@@ -293,33 +292,23 @@ class SFAIndex:
         take the global top-k. Equality with brute force is asserted in
         tests (reference SFATrieTest invariant).
 
-        broadcast_queries=True (default) ships the query side — and the
-        Phase-2 (query × surviving-prefix) candidate table carrying
-        qvals/qdft arrays — as broadcasts: the right plan for
-        classification-sized batches (the documented contract, and the
-        Spark-native win over SFATrie.java:651-718 one-at-a-time
-        search). For batches past the broadcast budget, pass False:
-        both phases become plain equi-joins ON THE PREFIX COLUMNS, so
-        the engine shuffle-partitions data and queries by prefix —
-        nothing query-sized is ever broadcast, co-location comes from
-        the shuffle, and the summary (index metadata, KB-sized
-        regardless of batch) stays the only broadcast. Same rows
-        either way (plan- and equality-tested)."""
+        The query side — and the Phase-2 (query × surviving-prefix)
+        candidate table carrying qvals/qdft arrays — is broadcast into
+        both prefix joins: the plan for classification-sized batches
+        (the Spark-native win over SFATrie.java:651-718's one-at-a-time
+        search), so the prefix joins never shuffle the indexed data."""
         spark = queries.sparkSession
         data = spark.read.parquet(f"{self.path}/data")
         summary = spark.read.parquet(f"{self.path}/summary")
         q = self._query_side(queries).cache()
         pk = [f"p{i}" for i in range(self.prefix_len)]
 
-        def _side(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if broadcast_queries else df
-
         # Phase 1: own-bucket probe — equi-join on the prefix columns
         q_eq = q.select(
             "q_id", "qvals", "qdft",
             *[F.col(f"qp{i}").alias(f"p{i}") for i in range(self.prefix_len)],
         )
-        probe = data.join(_side(q_eq), on=pk).select(
+        probe = data.join(F.broadcast(q_eq), on=pk).select(
             "q_id", F.col("series_id").alias("nn_id"),
             _sq_ed(F.col("qvals"), F.col("values")).alias("sqdist"),
         )
@@ -346,14 +335,11 @@ class SFAIndex:
         # third pruning level: row-wise SFA lower bound (reference
         # SFADistance, Q9) against the candidate's word symbols — skips
         # the exact ED fold for rows whose LB already exceeds the bound
-        bins_map = {
-            r["seg"]: list(r["bins"]) for r in self.model.bins.collect()
-        }
         row_lb = _sfa_row_lb(
-            F.col("qdft"), F.col("syms"), bins_map, self.model.word_length
+            F.col("qdft"), F.col("syms"), self.model.bin_arrays, self.model.word_length
         )
         verify = (
-            data.join(_side(cand_prefixes), on=pk)
+            data.join(F.broadcast(cand_prefixes), on=pk)
             .where(row_lb <= F.col("ub"))
             .select(
                 "q_id", F.col("series_id").alias("nn_id"),

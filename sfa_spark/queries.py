@@ -54,31 +54,24 @@ def series_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return series_from_events(load_table(spark, sf_dir, "events"))
 
 
-def coef_df(spark: SparkSession, sf_dir: str, fast: bool = False) -> DataFrame:
+def coef_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → sliding windows → per-window znorm → PAA coefficients.
 
-    Three value-identical plans (division distributes over the segment
-    mean, so z-norm-then-average ≡ average-then-normalize):
-
-    * fast=False (default, r8): sliding explode (w× rows) → ONE hash
-      aggregate straight to (series, win, seg) running sums →
-      window-combine the l=4 segment partials into per-window
-      mean/std → coef = (seg_mean − win_mean)/win_std. The r1-r7 plan
-      z-normalized every exploded ROW first, which forced a Sort +
-      WindowExec over the w×-amplified rows (1.6M at sf0.1) BEFORE
-      the aggregate; partial-aggregating first shrinks the sorted/
-      windowed row count w/l = 4× (guide §2.3 "aggregate before you
-      shuffle" — here: before you SORT) while the single series_id
-      Exchange is unchanged. Measured sf0.1 (qtime, min-of-3):
-      q_sfa_words 0.81 → 0.55 s with this + the words_df persist.
-    * fast=True: sliding PAA as SHIFTED ROLLING AGGREGATES —
-      coef(win, j) = (avg(frame [j·w/l, (j+1)·w/l−1]) − mean([0,w−1]))
-      / std([0,w−1]); no row amplification at all. The right plan when
-      w is large (explode volume w× dominates) — e.g. w ≥ 64 windows
-      over long series, or memory-constrained executors.
+    Plan (r8): sliding explode (w× rows) → ONE hash aggregate straight
+    to (series, win, seg) partials → window-combine the l=4 segment
+    partials into per-window mean/std → coef = (seg_mean −
+    win_mean)/win_std. Division distributes over the segment mean, so
+    this equals z-normalizing every window row first and averaging.
+    The r1-r7 plan did exactly that, which forced a Sort + WindowExec
+    over the w×-amplified rows (1.6M at sf0.1) BEFORE the aggregate;
+    partial-aggregating first shrinks the sorted/windowed row count
+    w/l = 4× (guide §2.3 "aggregate before you shuffle" — here: before
+    you SORT) while the single series_id Exchange is unchanged.
+    Measured sf0.1 (qtime, min-of-3): q_sfa_words 0.81 → 0.55 s with
+    this + the words_df persist.
 
     The DuckDB oracles mirror the row-znorm explode formulation as the
-    spec; all plans hash-match it (the 4-dp rnd() nudge absorbs the
+    spec; this plan hash-matches it (the 4-dp rnd() nudge absorbs the
     ulp-level reassociation differences exactly as it already absorbs
     the Spark↔DuckDB aggregation-order differences; re-verified at
     sf0.001/sf0.01/sf0.1 for every consumer of this chain).
@@ -97,63 +90,34 @@ def coef_df(spark: SparkSession, sf_dir: str, fast: bool = False) -> DataFrame:
     (series×windows×l)-row table.
     """
     s = series_df(spark, sf_dir)
-    if not fast:
-        sw = window.sliding_long(s, W)
-        part = (
-            sw.withColumn("seg", F.floor(F.col("off") * L / W).cast("int"))
-            .groupBy("series_id", "win", "seg")
-            .agg(
-                F.avg("value").alias("_m"),
-                F.var_pop("value").alias("_v"),
-                F.count(F.lit(1)).alias("_c"),
-            )
+    sw = window.sliding_long(s, W)
+    part = (
+        sw.withColumn("seg", F.floor(F.col("off") * L / W).cast("int"))
+        .groupBy("series_id", "win", "seg")
+        .agg(
+            F.avg("value").alias("_m"),
+            F.var_pop("value").alias("_v"),
+            F.count(F.lit(1)).alias("_c"),
         )
-        wwin = Window.partitionBy("series_id", "win")
-        C = F.sum("_c").over(wwin)
-        mean = F.sum(F.col("_m") * F.col("_c")).over(wwin) / C
-        lay = part.select(
-            "series_id",
-            "win",
-            "seg",
-            "_m",
-            "_v",
-            "_c",
-            mean.alias("_mean"),
-            C.alias("_n"),
-        )
-        dm = F.col("_m") - F.col("_mean")
-        m2 = F.sum(F.col("_v") * F.col("_c") + F.col("_c") * dm * dm).over(
-            wwin
-        )
-        std_raw = F.sqrt(m2 / F.col("_n"))
-        std = F.when(std_raw < 1e-8, F.lit(1.0)).otherwise(std_raw)
-        return lay.select(
-            "series_id",
-            "win",
-            "seg",
-            (dm / std).alias("coef"),
-        )
-    seg_len = W // L
-    w_ord = Window.partitionBy("series_id").orderBy("pos")
-    full = w_ord.rowsBetween(0, W - 1)
-    mean = F.avg("value").over(full)
-    std_raw = F.stddev_pop("value").over(full)
-    std = F.when(std_raw < 1e-8, F.lit(1.0)).otherwise(std_raw)
-    seg_cols = [
-        (
-            (F.avg("value").over(w_ord.rowsBetween(j * seg_len, (j + 1) * seg_len - 1)) - mean)
-            / std
-        ).alias(f"c{j}")
-        for j in range(L)
-    ]
-    wide = s.select(
-        "series_id", F.col("pos").alias("win"), "n", *seg_cols
-    ).where((F.col("win") <= F.col("n") - W) & (F.col("n") >= W))
-    return wide.select(
+    )
+    wwin = Window.partitionBy("series_id", "win")
+    C = F.sum("_c").over(wwin)
+    mean = F.sum(F.col("_m") * F.col("_c")).over(wwin) / C
+    lay = part.select(
         "series_id",
         "win",
-        F.posexplode(F.array(*[F.col(f"c{j}") for j in range(L)])).alias("seg", "coef"),
-    ).withColumn("seg", F.col("seg").cast("int"))
+        "seg",
+        "_m",
+        "_v",
+        "_c",
+        mean.alias("_mean"),
+        C.alias("_n"),
+    )
+    dm = F.col("_m") - F.col("_mean")
+    m2 = F.sum(F.col("_v") * F.col("_c") + F.col("_c") * dm * dm).over(wwin)
+    std_raw = F.sqrt(m2 / F.col("_n"))
+    std = F.when(std_raw < 1e-8, F.lit(1.0)).otherwise(std_raw)
+    return lay.select("series_id", "win", "seg", (dm / std).alias("coef"))
 
 
 def words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,19 +370,12 @@ def q_boss_1nn(spark, sf_dir):
     argmins in two exact GEMMs. The sparse path remains the keyed
     grid-fit route (bounded UCR-size inputs).
 
-    r8: packed SFA words are already dense ints < alphabet^L = 256,
-    so the global vocab index is skipped (assume_dense_vocab) and the
-    chunk count adapts to the input size instead of pinning to the
-    core count — at sf0.1 the fixed vocab/stage overhead was ~1.6 s
-    of the 2.8 s walltime; at sf10 the chunk count still saturates
-    the cluster (clamped to defaultParallelism)."""
+    r8: the chunk count adapts to the input size instead of pinning to
+    the core count, which cuts fixed per-task overhead at small scale;
+    at sf10 the chunk count still saturates the cluster (clamped to
+    defaultParallelism)."""
     train, test = _split_bags(spark, sf_dir)
-    nn = knn.boss_1nn_blocked(
-        test,
-        train,
-        n_chunks=_adaptive_chunks(spark, sf_dir),
-        assume_dense_vocab=True,
-    )
+    nn = knn.boss_1nn_blocked(test, train, n_chunks=_adaptive_chunks(spark, sf_dir))
     return nn.select("series_id", "nn_id", F.col("dist").cast("bigint").alias("dist"))
 
 
@@ -461,8 +418,8 @@ def q_top_customers(spark, sf_dir):
         .agg(dec_sum("o_totalprice").alias("revenue"))
     )
     # top-k via orderBy().limit() → TakeOrderedAndProject (parallel
-    # partial top-k); ranks attach via the k×k ordered self-join so no
-    # single-partition WindowExec appears anywhere in the plan
+    # partial top-k); ranks 1..k attach by a row_number over the k-row
+    # limit output (operators/topk.py)
     from sfa_spark.operators.topk import ranked_top_k
 
     return ranked_top_k(
@@ -697,7 +654,8 @@ def q_tpch_shipping(spark, sf_dir):
     """TPC-H Q3 shape (shipping priority): revenue of orders placed
     before the cutoff whose lineitems shipped after it — orders dim
     broadcast into the lineitem fact scan, top-10 via
-    TakeOrderedAndProject + the k×k rank join (no global window)."""
+    TakeOrderedAndProject + a row_number over the 10-row limit output
+    (no window over the raw input)."""
     from sfa_spark.operators.topk import ranked_top_k
 
     cut = F.lit("1998-01-01").cast("timestamp")

@@ -25,7 +25,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+        shuffle_partitions = 32
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -40,19 +40,12 @@ def get_spark(
         # diff shapes (measured sf0.1: q_merge_changes 0.65 → 0.50 s,
         # SMJ→SHJ in-plan). AQE additionally rewrites SMJ→SHJ at
         # runtime when every post-shuffle partition is under the local
-        # map threshold. Both parameterized: a cluster with small
-        # executor memory can restore sort-merge with
-        # SPARK_GRAFT_PREFER_SMJ=true / SPARK_GRAFT_SHJ_LOCALMAP=0
-        # (sort-merge spills gracefully; hash maps must fit — §3.1's
-        # documented trade).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "64m"),
-        )
+        # map threshold. A cluster with small executor memory can
+        # restore sort-merge through extra_conf (preferSortMergeJoin
+        # "true", the local map threshold "0"): sort-merge spills
+        # gracefully, hash maps must fit — §3.1's documented trade.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # driver testdata parquet carries TIMESTAMP(NANOS) — read as

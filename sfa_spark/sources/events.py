@@ -11,8 +11,6 @@ sort so results are stable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -89,10 +87,7 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     partitions and this is the identity — no extra pass of the corpus
     at 100 TB, where the input split count, not this guard, provides
     the parallelism. Streaming inputs pass through untouched.
-    SPARK_GRAFT_SPREAD_SCAN=off disables the guard outright.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCAN", "auto") == "off":
-        return df
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext

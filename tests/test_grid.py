@@ -167,40 +167,3 @@ def test_teaser_weasel_early_and_accurate(synth):
     assert (r[0] or 0) >= 0.8, f"teaser acc {r[0]}"
     assert r[1] is not None and r[1] <= 1.0
     assert r[2] == te.count()  # every test series gets a decision
-
-
-def test_shotgun_1nn_query_blocks_match_broadcast_path(spark):
-    """The (block × chunk) grid path must reproduce the broadcast-query
-    plan exactly, while bounding per-group query volume to
-    ~|Q|/n_query_blocks (the non-broadcast-query scale path)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sfa_spark.operators import knn
-
-    rng = np.random.default_rng(29)
-    mk = lambda i, n: (i, rng.normal(0, 1, n).tolist())
-    qdf = spark.createDataFrame(
-        [mk(i, 40) for i in range(24)], "series_id long, values array<double>"
-    )
-    cdf = spark.createDataFrame(
-        [mk(100 + i, 50) for i in range(30)], "series_id long, values array<double>"
-    )
-    base = sorted(
-        (r["series_id"], r["nn_id"], round(r["dist"], 9))
-        for r in knn.shotgun_1nn(qdf, cdf, window=8, n_chunks=3).collect()
-    )
-    blocked = sorted(
-        (r["series_id"], r["nn_id"], round(r["dist"], 9))
-        for r in knn.shotgun_1nn(
-            qdf, cdf, window=8, n_chunks=3, n_query_blocks=4
-        ).collect()
-    )
-    assert base == blocked
-    # per-(qblock, chunk) group sees only its block's queries: the max
-    # group query count is ≤ the largest hash-block, not |Q|
-    sizes = (
-        qdf.select(F.pmod(F.hash("series_id"), F.lit(4)).alias("qblock"))
-        .groupBy("qblock").count().collect()
-    )
-    assert max(r["count"] for r in sizes) < 24

@@ -227,16 +227,19 @@ def test_cosine_topk_matches_numpy(spark):
         assert S[r["q_id"], r["nn_id"]] == pytest.approx(r["cosine"], abs=1e-9)
 
 
-def test_brute_cosine_gemm_matches_fold(spark, monkeypatch):
+def test_brute_cosine_gemm_matches_fold(spark, monkeypatch, tmp_path):
     """r9: the Arrow GEMM scorer must return the SAME rows as the JVM
     fold path — ids and ranks exactly, cosine to fp tolerance — for
-    both the plain top-k and the excl_pair (hard_negatives) shapes."""
+    both the plain top-k and the excl_pair (hard_negatives) shapes.
+    The corpus is a parquet scan, so the optimizer has the size
+    estimate the arm choice reads."""
     rng = np.random.default_rng(11)
     E = rng.normal(0, 1, (60, 16))
-    df = spark.createDataFrame(
+    spark.createDataFrame(
         [(i, [float(x) for x in row], int(i % 3)) for i, row in enumerate(E)],
         "vec_id long, embedding array<double>, label int",
-    )
+    ).write.parquet(str(tmp_path / "emb"))
+    df = spark.read.parquet(str(tmp_path / "emb"))
 
     def rows(res, keys):
         return sorted(
@@ -244,28 +247,29 @@ def test_brute_cosine_gemm_matches_fold(spark, monkeypatch):
             for r in res.collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "on")  # force: tiny corpus
+    # force each arm through the size threshold: 0 → every corpus
+    # scores with the GEMM, 2**62 → none does
+    monkeypatch.setattr(similarity, "GEMM_MIN_BYTES", 0)
     gemm = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "off")
-    fold = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_GEMM")
-    assert rows(gemm, ("q_id", "nn_id", "rk")) == rows(fold, ("q_id", "nn_id", "rk"))
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "on")
     gemm_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_GEMM", "off")
+    monkeypatch.setattr(similarity, "GEMM_MIN_BYTES", 1 << 62)
+    fold = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
     fold_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
+    monkeypatch.undo()
+    assert rows(gemm, ("q_id", "nn_id", "rk")) == rows(fold, ("q_id", "nn_id", "rk"))
     ks = ("q_id", "q_label", "neg_id", "neg_label", "rk")
     assert rows(gemm_hn, ks) == rows(fold_hn, ks)
     # the exclusion really applied
     assert all(r["q_label"] != r["neg_label"] for r in gemm_hn.collect())
 
-    # plan shapes: forced GEMM crosses the Arrow boundary; auto on a
-    # tiny corpus stays on the JVM fold (below SPARK_GRAFT_GEMM_MIN_BYTES)
-    assert "MapInArrow" in gemm._jdf.queryExecution().executedPlan().toString()
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_GEMM")
+    # plan shapes: the GEMM arm crosses the Arrow boundary, the fold
+    # does not; at the default threshold a tiny corpus folds
+    def arrow(df_):
+        return "MapInArrow" in df_._jdf.queryExecution().executedPlan().toString()
+
+    assert arrow(gemm) and not arrow(fold)
     auto = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    assert "MapInArrow" not in auto._jdf.queryExecution().executedPlan().toString()
+    assert not arrow(auto)
 
 
 def test_bucketed_neighbors_subset_of_bucket(spark):
@@ -1973,20 +1977,26 @@ def test_incremental_lsh_dedup_statuses(spark, docs):
         assert out[d] == want, (d, out[d], want)
 
 
-def test_shingles_shuffle_free_and_distinct(spark, monkeypatch):
+def test_shingles_shuffle_free_and_distinct(spark):
     """r8: shingles dedups per-row (array_distinct) instead of a global
     distinct() — rows must still be the distinct (doc_id, shingle)
-    pairs, and (with the r9 scan-spread guard disabled) the plan must
-    contain NO Exchange: the dedup itself is doc-local. The guard's
-    own behaviour is covered by test_sources.py::test_spread_scan_*."""
+    pairs, and the plan must contain NO Exchange: the dedup itself is
+    doc-local. The input has one row per core, so its scan is already
+    split defaultParallelism ways and the r9 scan-spread guard is the
+    identity (its own behaviour is covered by
+    test_sources.py::test_spread_scan_*)."""
     from sfa_spark.operators.text import shingles
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
+    pad = [
+        (10 + i, "z")  # shorter than k → no shingles
+        for i in range(spark.sparkContext.defaultParallelism)
+    ]
     docs = spark.createDataFrame(
         [
             (1, "a b c a b c a b c"),  # duplicate shingles within doc
             (2, "a b c d"),
             (3, "x y"),               # shorter than k → no shingles
+            *pad,
         ],
         "doc_id long, text string",
     )

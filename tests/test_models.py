@@ -98,12 +98,14 @@ def test_boss_1nn_vs_bruteforce(spark):
     assert got == expected
 
 
-def test_boss_1nn_blocked_equals_sparse(spark):
-    """The dense blocked-BLAS path must be BIT-identical to the sparse
-    word-join path — same argmin, same exact integer distances, same
-    acceptance rule (zero-overlap and identical-bag candidates
-    skipped), same smaller-nn_id tie-break — including with multiple
-    chunks/query-blocks so the block merge is exercised."""
+def test_boss_1nn_blocked_dense_vocab(spark):
+    """The dense blocked-BLAS path (word id = dense column index) must
+    be BIT-identical to the sparse word-join path — same argmin, same
+    exact integer distances, same acceptance rule (zero-overlap and
+    identical-bag candidates skipped), same smaller-nn_id tie-break —
+    with one and with several corpus chunks, so the chunk merge is
+    exercised. Absent-word columns are all-zero on both sides and
+    cancel in every distance term."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -117,8 +119,8 @@ def test_boss_1nn_blocked_equals_sparse(spark):
         for i in range(n_test)
     }
     # planted edge cases: a candidate identical to one query's bag
-    # (dist 0 → skipped) and a candidate with no word overlap with it
-    # (corr 0 → skipped)
+    # (dist 0 → skipped) and a candidate with no word overlap with any
+    # query (corr 0 → skipped)
     train[200] = dict(test[100])
     train[201] = {w + vocab: 3 for w in range(4)}
 
@@ -130,49 +132,13 @@ def test_boss_1nn_blocked_equals_sparse(spark):
         r["series_id"]: (r["nn_id"], r["dist"])
         for r in knn.boss_1nn(to_df(test), to_df(train)).collect()
     }
-    for n_chunks, n_qb in ((1, 1), (4, 1), (3, 2)):
-        blocked = {
-            r["series_id"]: (r["nn_id"], r["dist"])
-            for r in knn.boss_1nn_blocked(
-                to_df(test), to_df(train), n_chunks=n_chunks, n_query_blocks=n_qb
-            ).collect()
-        }
-        assert blocked == sparse, (n_chunks, n_qb)
-
-
-def test_boss_1nn_blocked_dense_vocab(spark):
-    """assume_dense_vocab=True (word id used directly as the dense
-    column index, no global vocab index) must stay bit-identical to
-    both the indexed blocked path and the sparse path — absent-word
-    columns are all-zero on both sides and cancel in every distance
-    term."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    vocab = 64  # dense-packed word space, ids in [0, vocab)
-    train = {
-        i: {int(w): int(rng.integers(1, 6)) for w in rng.choice(vocab, 8, replace=False)}
-        for i in range(30)
-    }
-    test = {
-        100 + i: {int(w): int(rng.integers(1, 6)) for w in rng.choice(vocab, 8, replace=False)}
-        for i in range(12)
-    }
-    train[200] = dict(test[100])  # dist 0 → skipped
-    to_df = lambda bags: spark.createDataFrame(
-        [(sid, w, c) for sid, b in bags.items() for w, c in b.items()],
-        "series_id long, word long, cnt long",
-    )
-    sparse = {
-        r["series_id"]: (r["nn_id"], r["dist"])
-        for r in knn.boss_1nn(to_df(test), to_df(train)).collect()
-    }
-    for n_chunks in (1, 4):
+    assert sparse.get(100, (None,))[0] != 200
+    assert all(nn != 201 for nn, _ in sparse.values())
+    for n_chunks in (1, 3, 4):
         dense = {
             r["series_id"]: (r["nn_id"], r["dist"])
             for r in knn.boss_1nn_blocked(
-                to_df(test), to_df(train), n_chunks=n_chunks,
-                assume_dense_vocab=True,
+                to_df(test), to_df(train), n_chunks=n_chunks
             ).collect()
         }
         assert dense == sparse, n_chunks

@@ -358,14 +358,11 @@ def test_spread_scan_under_split_scan_repartitions(spark, sf_dir):
     assert a == b
 
 
-def test_spread_scan_identity_when_parallel_or_disabled(spark, sf_dir, monkeypatch):
+def test_spread_scan_identity_when_parallel(spark, sf_dir):
     """The guard is the identity when the input already has enough
-    partitions (the cluster-scale case) and when disabled by env."""
+    partitions (the cluster-scale case)."""
     from sfa_spark.sources.events import load_table, spread_scan
 
     docs = load_table(spark, sf_dir, "documents")
     wide = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     assert spread_scan(wide, "doc_id") is wide
-
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
-    assert spread_scan(docs, "doc_id") is docs

@@ -251,3 +251,37 @@ def test_fused_transform_windowing_matches_long_form(
     names = plan_node_names(fused)
     assert "ShuffleExchangeExec" not in names, names
     assert "ArrowEvalPythonExec" in names
+
+
+def test_equi_width_constant_coefficient_matches_quantize(spark):
+    """DFT value 1 (the imaginary part of the mean term) is 0 in every
+    window, so its equi-width orderline is constant. sfa.fit bins it as
+    quantize.fit_equi_width_bins does: every boundary equals the value,
+    which quantizes to the top symbol (the reference's
+    `value < bins[c]` scan falls through every boundary)."""
+    from sfa_spark.operators import quantize
+    from sfa_spark.operators import words as WD
+
+    rng = np.random.default_rng(5)
+    arrays = spark.createDataFrame(
+        [(i, np.cumsum(rng.normal(0, 1, 48)).tolist()) for i in range(6)],
+        "series_id long, values array<double>",
+    )
+    A, w, l = 4, 16, 4
+    model = sfa.fit(arrays, window=w, word_length=l, alphabet=A,
+                    histogram="equi_width")
+    long = spectral.coefs_to_long(
+        sfa._disjoint_window_coefs(arrays, w, l, False, True)
+    ).withColumn("coef", F.round("coef", 2))
+    helper = quantize.fit_equi_width_bins(long, A)
+    want = {r["seg"]: list(r["bins"]) for r in helper.collect()}
+    got = {s: list(b) for s, b in model.bin_arrays.items()}
+    assert got == want
+    assert got[1] == [0.0] * (A - 1)
+
+    bits = WD.binlog(A)
+    words = sfa.transform_windowing(model, arrays).collect()
+    assert words
+    assert {(r["word"] >> bits) & ((1 << bits) - 1) for r in words} == {A - 1}
+    sym = quantize.quantize_with_bins(long.where("seg = 1"), helper)
+    assert {r["symbol"] for r in sym.collect()} == {A - 1}

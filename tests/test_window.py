@@ -119,25 +119,8 @@ def test_sqrt_spaced_windows():
     assert gaps[0] < gaps[-1]  # denser at the small end
 
 
-def test_fast_and_explode_coef_paths_agree(spark):
-    """The shifted-rolling-aggregate PAA plan must produce the same
-    coefficients as the explode plan (algebraic identity)."""
-    from sfa_spark import queries as Q
-
-    sf = "/root/testdata/sf0.001"
-    a = {
-        (r["series_id"], r["win"], r["seg"]): round(r["coef"], 9)
-        for r in Q.coef_df(spark, sf, fast=False).collect()
-    }
-    b = {
-        (r["series_id"], r["win"], r["seg"]): round(r["coef"], 9)
-        for r in Q.coef_df(spark, sf, fast=True).collect()
-    }
-    assert a == b
-
-
 def test_coef_large_mean_stability(spark, tmp_path):
-    """r9 (ADVICE): the fast=False coef combine must not lose precision
+    """r9 (ADVICE): the coef combine must not lose precision
     to E[x²]−E[x]² cancellation. Values of magnitude 1e8 with
     unit-scale structure make the old form's S2/C − mean² lose ~all
     significant digits of the window variance (1e16·ulp ≈ O(1)); the
@@ -170,7 +153,7 @@ def test_coef_large_mean_stability(spark, tmp_path):
             ref[(1, win, seg)] = (seg_mean - mean) / std
     got = {
         (r["series_id"], r["win"], r["seg"]): r["coef"]
-        for r in Q.coef_df(spark, sf, fast=False).collect()
+        for r in Q.coef_df(spark, sf).collect()
     }
     assert got.keys() == ref.keys()
     for k, v in ref.items():
