@@ -629,68 +629,3 @@ def muse_predict(model: MuseModel, mv_arrays: DataFrame, bigrams: bool = True) -
         model.intercept,
         model.label_map,
     )
-
-
-def weasel_fit_grid(
-    train_arrays: DataFrame,
-    labels: DataFrame,
-    windows: list[int],
-    word_lengths: tuple[int, ...] = (4, 6),
-    alphabet: int = 4,
-    n_folds: int = 3,
-    **kw,
-) -> WeaselModel:
-    """WEASEL grid fit (reference WEASELClassifier.fitWeasel,
-    WEASELClassifier.java:214-263): grid over word lengths f, each
-    scored by stratified k-fold CV accuracy of the logistic model;
-    early exit on a perfect CV score; refit the winner on all data.
-    (Reference grids norm ∈ {T,F} too; norm_mean passes through **kw.)
-    """
-    from sfa_spark.ml import linear
-
-    fold_of = {
-        r["series_id"]: r["fold"]
-        for r in folds.stratified_folds(labels, n_folds).collect()
-    }
-    best_f, best_acc = word_lengths[0], -1.0
-    for f in word_lengths:
-        model = weasel_fit(
-            train_arrays, labels, windows, word_length=f, alphabet=alphabet, **kw
-        )
-        # CV accuracy on the fitted featurization: bags collected once,
-        # every fold solve is driver-local (liblinear architecture)
-        key_bags = _weasel_features(model.sfa_models, train_arrays)
-        kept = key_bags.join(
-            F.broadcast(model.weights.select("key")), "key", "left_semi"
-        )
-        label_rows = labels.select("series_id", "label").collect()
-        lab_idx = {l: i for i, l in enumerate(model.label_map)}
-        all_sids = sorted({r["series_id"] for r in label_rows})
-        y = np.asarray(
-            [
-                lab_idx[r["label"]]
-                for r in sorted(label_rows, key=lambda r: r["series_id"])
-            ],
-            dtype=np.int64,
-        )
-        _, X = _collect_bags(kept, all_sids)
-        fold_arr = np.asarray([fold_of[s] for s in all_sids], dtype=np.int64)
-        correct = total = 0
-        for i in range(n_folds):
-            te = fold_arr == i
-            tr = ~te
-            if not te.any() or not tr.any():
-                continue
-            m = linear.fit_softmax(
-                X[tr], y[tr], len(model.label_map), 0.5, max_iter=15
-            )
-            correct += int((m.predict_idx(X[te]) == y[te]).sum())
-            total += int(te.sum())
-        acc = correct / total if total else 0.0
-        if acc > best_acc:
-            best_acc, best_f = acc, f
-        if acc == 1.0:  # reference early exit on perfect score
-            break
-    return weasel_fit(
-        train_arrays, labels, windows, word_length=best_f, alphabet=alphabet, **kw
-    )

@@ -137,12 +137,3 @@ def bag_of_keys(keys: DataFrame) -> DataFrame:
     )
 
 
-def merge_bags(*bags: DataFrame) -> DataFrame:
-    """Union per-window-length bags and re-sum (reference mergeBobs,
-    WEASELClassifier.java:324-335). In long form this is a trivial
-    union + groupBy; usually unnecessary because keys embed the window
-    length already."""
-    out = bags[0]
-    for b in bags[1:]:
-        out = out.unionByName(b)
-    return out.groupBy("series_id", "key").agg(F.sum("cnt").alias("cnt"))

@@ -494,11 +494,6 @@ def simhash_bits(docs: DataFrame, bits: int = 64) -> DataFrame:
     return counts.select("doc_id", sig.alias("sig"))
 
 
-def hamming_distance(col_a, col_b, bits: int = 32):
-    """Popcount of XOR — bit_count is built-in in both engines."""
-    return F.bit_count(col_a.bitwiseXOR(col_b))
-
-
 def embedding_neardup(
     emb: DataFrame,
     tau: float = 0.35,

@@ -20,9 +20,11 @@ table (at most word_length rows), read to the driver once per model.
 The sliding transform is one Arrow-batched scalar UDF per series
 (MFT → rank-order column pick → searchsorted quantize → bit-pack)
 followed by one posexplode: no coefficient explode, no join, no
-shuffle. The whole-series index transform keeps the long form, whose
-DFT values the lower bounds need. No driver-side loops over series
-anywhere.
+shuffle. The whole-series index transform is one Arrow-batched scalar
+UDF per series too (DFT → searchsorted quantize), returning the DFT
+values next to the symbols, since the index's lower bounds need both.
+Both transforms quantize with one rule, quantize_symbols. No
+driver-side loops over series anywhere.
 """
 
 from __future__ import annotations
@@ -42,6 +44,14 @@ from sfa_spark.operators import select as SEL
 from sfa_spark.operators import words as WD
 
 HISTOGRAMS = ("equi_depth", "equi_width", "information_gain")
+
+
+def quantize_symbols(bins: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Symbols of values v against ascending boundaries: the count of
+    boundaries <= v, quantize_with_bins' rule (the reference's first
+    bin > value). NaN gets symbol 0, as quantize_with_bins gives a
+    null value."""
+    return np.where(np.isnan(v), 0, np.searchsorted(bins, v, side="right"))
 
 
 @dataclass
@@ -83,12 +93,26 @@ class SFAModel:
             )
             word = np.zeros(len(coefs), dtype=np.int64)
             for c, pos, b in plan:
-                v = coefs[:, c]
-                # NaN: the long form carried it to Spark as null, which
-                # no boundary is <= → symbol 0
-                sym = np.where(np.isnan(v), 0, np.searchsorted(b, v, side="right"))
-                word += sym.astype(np.int64) << (bits * pos)
+                word += quantize_symbols(b, coefs[:, c]).astype(np.int64) << (bits * pos)
             return word
+
+        return kernel
+
+    def whole_kernel(self):
+        """numpy kernel for a batch of whole series: list of value
+        arrays → (dft, syms), each (n, word_length): the DFT values of
+        each zero-padded series and their symbols (see transform_whole)."""
+        l = self.word_length
+        plan = [(pos, self.bin_arrays[pos]) for pos in range(l)]
+
+        def kernel(xs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
+            dft = np.zeros((len(xs), l))
+            for i, x in enumerate(xs):
+                dft[i] = spectral.dft_values(x, l, pad_pow2=True)
+            syms = np.zeros((len(xs), l), dtype=np.int32)
+            for pos, b in plan:
+                syms[:, pos] = quantize_symbols(b, dft[:, pos])
+            return dft, syms
 
         return kernel
 
@@ -226,13 +250,29 @@ def fit_whole(
     )
 
 
-def transform_whole_long(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Whole-series transform keeping both symbols and DFT values:
-    (series_id, seg, coef, symbol) — the indexing path needs the DFT
-    values for lower-bound distances, not just the packed word."""
-    coefs = spectral.dft(arrays, model.word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs)
-    return QZ.quantize_with_bins(long, model.bins)
+def transform_whole(model: SFAModel, arrays: DataFrame) -> DataFrame:
+    """Whole-series transform keeping both DFT values and symbols: the
+    input's columns plus dft array<double> and syms array<int>, each
+    word_length long — the indexing path needs the DFT values for
+    lower-bound distances, not just the word.
+
+    One Arrow-batched scalar UDF over `values` runs the model's
+    whole_kernel (dft_values on the zero-padded series, then
+    quantize_symbols per position); a NaN DFT value reaches Spark as
+    null. Row-for-row equal to the long-form
+    composition dft → coefs_to_long → quantize_with_bins regathered by
+    seg (tests/test_spectral.py), with no explode, join or shuffle.
+    """
+    kernel = model.whole_kernel()
+
+    @pandas_udf("dft array<double>, syms array<int>")
+    def _sfa(vals: pd.Series) -> pd.DataFrame:
+        dft, syms = kernel([np.asarray(v, dtype=np.float64) for v in vals])
+        return pd.DataFrame({"dft": list(dft), "syms": list(syms)})
+
+    return arrays.select("*", _sfa("values").alias("_sfa")).select(
+        *arrays.columns, "_sfa.dft", "_sfa.syms"
+    )
 
 
 def fit_supervised(
@@ -305,12 +345,3 @@ def transform_windowing(model: SFAModel, arrays: DataFrame) -> DataFrame:
         "series_id", F.posexplode(_words("values")).alias("win", "word")
     ).select("series_id", F.col("win").cast("bigint").alias("win"), "word")
 
-
-def transform(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Whole-series words (one word per series): DFT → quantize → pack."""
-    coefs = spectral.dft(arrays, model.word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs)
-    sym = QZ.quantize_with_bins(long, model.bins)
-    return WD.pack_words(
-        sym.select("series_id", "win", "seg", "symbol"), model.alphabet
-    ).drop("win")

@@ -34,15 +34,26 @@ def _as_double(col):
 
 def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Attach the L2 norm (JVM fold, deterministic order)."""
-    v = _as_double(F.col(vec_col))
-    return emb.withColumn(
-        "norm",
-        F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)),
-    )
+    return emb.withColumn("norm", norm_expr(_as_double(F.col(vec_col))))
+
+
+def norm_expr(a):
+    """sqrt(Σ a[i]²) as a deterministic left-to-right JVM fold."""
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def dot_expr(a, b):
+    """Σ a[i]·b[i] as a deterministic left-to-right JVM fold."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def sqdist_expr(a, b):
+    """Σ (a[i]−b[i])² as a deterministic left-to-right JVM fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def _brute_cosine_rank(
@@ -373,11 +384,7 @@ def sq_reconstructed_topk(
         .select(
             "q_id",
             "nn_id",
-            F.aggregate(
-                F.zip_with(F.col("qr"), F.col("cr"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("sqdist"),
+            sqdist_expr(F.col("qr"), F.col("cr")).alias("sqdist"),
         )
     )
     w = Window.partitionBy("q_id").orderBy(F.col("sqdist").asc(), F.col("nn_id").asc())
@@ -581,15 +588,6 @@ def kmeans_fit(
     )
 
 
-def _sqdist_expr(a, b):
-    """Σ (a[i]−b[i])² as a deterministic left-to-right JVM fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 # max total inlined doubles (C × dim) for ivf_assign's literal
 # array-of-structs form; beyond this Catalyst analysis/codegen cost
 # dominates and the pandas-UDF path wins
@@ -673,7 +671,7 @@ def ivf_assign(
     darr = F.array(
         *[
             F.struct(
-                _sqdist_expr(
+                sqdist_expr(
                     v, F.array(*[F.lit(float(x)) for x in r["cvec"]])
                 ).alias("d"),
                 F.lit(int(r["centroid_id"])).cast("int").alias("centroid_id"),
@@ -861,7 +859,7 @@ def pq_encode(
     codes = []
     for s in range(m):
         sub = F.slice(v, s * dsub + 1, dsub)
-        dists = F.transform(cb[s], lambda c: _sqdist_expr(sub, c))
+        dists = F.transform(cb[s], lambda c: sqdist_expr(sub, c))
         codes.append(
             (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
         )
@@ -895,7 +893,7 @@ def pq_adc_topk(
         *[
             F.transform(
                 cb[s],
-                (lambda _s: (lambda c: _sqdist_expr(F.slice(qv, _s * dsub + 1, dsub), c)))(s),
+                (lambda _s: (lambda c: sqdist_expr(F.slice(qv, _s * dsub + 1, dsub), c)))(s),
             )
             for s in range(m)
         ]
@@ -957,7 +955,7 @@ def pq_topk_rerank(
     exact = (
         c.join(F.broadcast(cand), "nn_id")
         .join(F.broadcast(q), "q_id")
-        .select("q_id", "nn_id", _sqdist_expr(F.col("qv"), F.col("cv")).alias("sqdist"))
+        .select("q_id", "nn_id", sqdist_expr(F.col("qv"), F.col("cv")).alias("sqdist"))
     )
     w = Window.partitionBy("q_id").orderBy(F.col("sqdist").asc(), F.col("nn_id").asc())
     return exact.withColumn("rk", F.row_number().over(w).cast("int")).where(
@@ -1067,7 +1065,7 @@ def ivfpq_topk(
         *[
             F.transform(
                 cb[s],
-                (lambda _s: (lambda c: _sqdist_expr(
+                (lambda _s: (lambda c: sqdist_expr(
                     F.slice(F.col("qr"), _s * dsub + 1, dsub), c
                 )))(s),
             )

@@ -38,15 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sfa_spark.operators import sfa as SFA
-
-
-def _sq_ed(a, b):
-    """Squared Euclidean distance between two array columns (JVM fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from sfa_spark.operators.similarity import sqdist_expr
 
 
 def _box_lb(qcols: list, mins, maxs):
@@ -102,47 +94,48 @@ class SFAIndex:
         """Index z-normalized fixed-length series for whole-matching.
 
         Writes:
-          path/data    — (p0..p{d-1}, series_id, dft, values) partitioned
-                         by the prefix symbols (trie layout).
+          path/data    — (series_id, dft, syms, values) partitioned by
+                         the prefix symbols p0..p{d-1} (trie layout).
           path/summary — (p0.., mins, maxs, cnt) bounding boxes.
           path/model   — SFA bins.
-        Bulk load ≡ reference SFATrie.buildIndex: the partitionBy shuffle
-        IS the bucket-sort by word prefix (SFATrie.java:171-184).
+        Bulk load ≡ reference SFATrie.buildIndex: the partitionBy write
+        IS the bucket-sort by word prefix (SFATrie.java:171-184). The
+        data is one narrow projection of the corpus (_prefix_rows: one
+        Arrow pass per series, no shuffle); the summary aggregates the
+        written data, so the corpus is transformed twice in all — once
+        for the bin fit, once for the data.
         """
         model = SFA.fit_whole(arrays, word_length, alphabet, histogram)
-        tl = SFA.transform_whole_long(model, arrays)
-        # gather per-series symbol/coef arrays (word_length elements)
-        gathered = tl.groupBy("series_id").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "coef"))), lambda s: s["coef"]
-            ).alias("dft"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "symbol"))),
-                lambda s: s["symbol"],
-            ).alias("syms"),
-        )
-        pcols = [
-            F.element_at("syms", i + 1).alias(f"p{i}") for i in range(prefix_len)
-        ]
-        data = gathered.join(arrays.select("series_id", "values"), "series_id").select(
-            *pcols, "series_id", "dft", "syms", "values"
-        )
-        data.write.mode("overwrite").partitionBy(
-            *[f"p{i}" for i in range(prefix_len)]
-        ).parquet(f"{path}/data")
+        pk = [f"p{i}" for i in range(prefix_len)]
+        cls._prefix_rows(model, arrays, prefix_len).write.mode(
+            "overwrite"
+        ).partitionBy(*pk).parquet(f"{path}/data")
 
+        data = arrays.sparkSession.read.parquet(f"{path}/data")
         mins = F.array(
             *[F.min(F.element_at("dft", i + 1)) for i in range(word_length)]
         ).alias("mins")
         maxs = F.array(
             *[F.max(F.element_at("dft", i + 1)) for i in range(word_length)]
         ).alias("maxs")
-        summary = data.groupBy(*[f"p{i}" for i in range(prefix_len)]).agg(
-            mins, maxs, F.count(F.lit(1)).alias("cnt")
-        )
+        summary = data.groupBy(*pk).agg(mins, maxs, F.count(F.lit(1)).alias("cnt"))
         summary.write.mode("overwrite").parquet(f"{path}/summary")
         model.save(f"{path}/model")
         return cls(path=path, model=model, prefix_len=prefix_len)
+
+    @staticmethod
+    def _prefix_rows(
+        model: SFA.SFAModel, arrays: DataFrame, prefix_len: int
+    ) -> DataFrame:
+        """(p0..p{d-1}, series_id, dft, syms, values): each series' DFT
+        values and symbols from sfa.transform_whole, its first d
+        symbols as prefix columns. A narrow projection of `arrays` — no
+        aggregate, join or shuffle — shared by the build and the query
+        side."""
+        return SFA.transform_whole(model, arrays).select(
+            *[F.element_at("syms", i + 1).alias(f"p{i}") for i in range(prefix_len)],
+            "series_id", "dft", "syms", "values",
+        )
 
     @staticmethod
     def _subsequence_window_rows(
@@ -262,25 +255,15 @@ class SFAIndex:
     # ------------------------------------------------------------ queries
 
     def _query_side(self, queries: DataFrame) -> DataFrame:
-        """(q_id, qdft array, qp0..qp{d-1})"""
-        tl = SFA.transform_whole_long(self.model, queries)
-        g = tl.groupBy("series_id").agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "coef"))), lambda s: s["coef"]
-            ).alias("qdft"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("seg", "symbol"))),
-                lambda s: s["symbol"],
-            ).alias("qsyms"),
-        )
-        return g.select(
+        """(q_id, qvals, qdft, qp0..qp{d-1}): the build's _prefix_rows
+        projection of the query batch, renamed — one Arrow pass per
+        query series, no aggregate, join or shuffle."""
+        return self._prefix_rows(self.model, queries, self.prefix_len).select(
             F.col("series_id").alias("q_id"),
-            "qdft",
-            *[
-                F.element_at("qsyms", i + 1).alias(f"qp{i}")
-                for i in range(self.prefix_len)
-            ],
-        ).join(queries.select(F.col("series_id").alias("q_id"), F.col("values").alias("qvals")), "q_id")
+            F.col("values").alias("qvals"),
+            F.col("dft").alias("qdft"),
+            *[F.col(f"p{i}").alias(f"qp{i}") for i in range(self.prefix_len)],
+        )
 
     def knn(self, queries: DataFrame, k: int) -> DataFrame:
         """Exact batch k-NN. Output: (q_id, nn_id, dist, rk).
@@ -292,15 +275,19 @@ class SFAIndex:
         take the global top-k. Equality with brute force is asserted in
         tests (reference SFATrieTest invariant).
 
-        The query side — and the Phase-2 (query × surviving-prefix)
-        candidate table carrying qvals/qdft arrays — is broadcast into
-        both prefix joins: the plan for classification-sized batches
-        (the Spark-native win over SFATrie.java:651-718's one-at-a-time
-        search), so the prefix joins never shuffle the indexed data."""
+        The query side (_query_side) — and the Phase-2 (query ×
+        surviving-prefix) candidate table carrying qvals/qdft arrays —
+        is broadcast into both prefix joins: the plan for
+        classification-sized batches (the Spark-native win over
+        SFATrie.java:651-718's one-at-a-time search), so the prefix
+        joins never shuffle the indexed data. Both phases read the
+        query side; it is a narrow projection of the batch, so each
+        reads it afresh rather than through a cache entry that the
+        call would leave behind."""
         spark = queries.sparkSession
         data = spark.read.parquet(f"{self.path}/data")
         summary = spark.read.parquet(f"{self.path}/summary")
-        q = self._query_side(queries).cache()
+        q = self._query_side(queries)
         pk = [f"p{i}" for i in range(self.prefix_len)]
 
         # Phase 1: own-bucket probe — equi-join on the prefix columns
@@ -310,7 +297,7 @@ class SFAIndex:
         )
         probe = data.join(F.broadcast(q_eq), on=pk).select(
             "q_id", F.col("series_id").alias("nn_id"),
-            _sq_ed(F.col("qvals"), F.col("values")).alias("sqdist"),
+            sqdist_expr(F.col("qvals"), F.col("values")).alias("sqdist"),
         )
         wk = Window.partitionBy("q_id").orderBy(F.col("sqdist").asc(), F.col("nn_id").asc())
         ub = (
@@ -343,7 +330,7 @@ class SFAIndex:
             .where(row_lb <= F.col("ub"))
             .select(
                 "q_id", F.col("series_id").alias("nn_id"),
-                _sq_ed(F.col("qvals"), F.col("values")).alias("sqdist"),
+                sqdist_expr(F.col("qvals"), F.col("values")).alias("sqdist"),
             )
         )
         return (
@@ -372,7 +359,7 @@ class SFAIndex:
             .select(
                 "q_id",
                 F.col("series_id").alias("nn_id"),
-                F.sqrt(_sq_ed(F.col("qvals"), F.col("values"))).alias("dist"),
+                F.sqrt(sqdist_expr(F.col("qvals"), F.col("values"))).alias("dist"),
             )
             .where(F.col("dist") <= epsilon)
         )

@@ -211,17 +211,9 @@ def q_embedding_drift(spark, sf_dir):
     old = centroid(emb.where(F.col("vec_id") % 2 == 0), "c_old")
     new = centroid(emb.where(F.col("vec_id") % 2 == 1), "c_new")
     j = old.crossJoin(F.broadcast(new))
-    dot = F.aggregate(
-        F.zip_with("c_old", "c_new", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n_old = F.sqrt(
-        F.aggregate("c_old", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    n_new = F.sqrt(
-        F.aggregate("c_new", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+    dot = similarity.dot_expr(F.col("c_old"), F.col("c_new"))
+    n_old = similarity.norm_expr(F.col("c_old"))
+    n_new = similarity.norm_expr(F.col("c_new"))
     return j.select(
         rnd(dot, 6).alias("dot"),
         rnd(n_old, 6).alias("norm_old"),

@@ -68,12 +68,6 @@ def stream_dedup_exact(
     return hashed.dropDuplicates(["content_hash"])
 
 
-def stream_ingest(doc_stream: DataFrame, min_quality: float = 0.5) -> DataFrame:
-    """The standard ingest chain: exact-dedup → quality gate. Output:
-    (doc_id, lang, n_tokens, quality) of first-seen, above-bar docs."""
-    return stream_quality_gate(stream_dedup_exact(doc_stream), min_quality)
-
-
 def row_minhash_bands(
     docs: DataFrame,
     n_seeds: int = 8,

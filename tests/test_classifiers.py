@@ -71,16 +71,6 @@ def test_mllib_pipeline_composition(spark, cbf):
     assert out.select("series_id").distinct().count() == te_a.count()
 
 
-@pytest.mark.grid
-def test_weasel_grid_cbf(spark, cbf):
-    tr_a, tr_l, te_a, te_l = cbf
-    model = C.weasel_fit_grid(
-        tr_a, tr_l, windows=[16, 24], word_lengths=(4, 6), n_folds=3
-    )
-    acc = _accuracy(C.weasel_predict(model, te_a), te_l)
-    assert acc >= 0.75, f"WEASEL grid CBF accuracy {acc}"
-
-
 def test_mllib_fallback_matches_local_solve(spark, monkeypatch):
     """Above the nnz gate the linear solve routes to MLlib
     LogisticRegression over distributed SparseVectors (same objective as

@@ -18,6 +18,8 @@ Golden numbers (BASELINE.md rows 1-10):
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,10 +28,18 @@ from sfa_spark.sources.ucr import read_ucr
 # Slow tier: full reference default-grid fits on the bundled UCR
 # fixtures. Deselected by the default gate (pytest.ini addopts); run
 # explicitly with `pytest -m golden`.
-pytestmark = pytest.mark.golden
+pytestmark = [pytest.mark.golden]
 
 DATA = "/root/reference/src/main/resources/datasets/univariate"
 DELTA = 0.05
+
+# The fixtures ship with the reference checkout, not with this repo:
+# without it, skip and say so.
+pytestmark.append(
+    pytest.mark.skipif(
+        not os.path.isdir(DATA), reason=f"reference UCR fixtures not found at {DATA}"
+    )
+)
 
 
 def _load(spark, name):

@@ -1,8 +1,6 @@
 """Index vs brute force — the reference SFATrieTest invariant: indexed
 k-NN distances equal linear-scan distances exactly."""
 
-import re
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -104,7 +102,7 @@ def test_subsequence_index_finds_planted_motif(spark, tmp_path):
     assert all(r["dist"] < 1e-6 for r in res)
 
 
-def test_subsequence_window_rows_chunked_matches_numpy(spark):
+def test_subsequence_window_rows_chunked_matches_numpy(spark, plan_node_names):
     """The chunked Arrow window materialization must produce exactly
     one row per sliding window (no w× amplification), with per-window
     z-normalized values matching numpy, across chunk boundaries (small
@@ -130,9 +128,9 @@ def test_subsequence_window_rows_chunked_matches_numpy(spark):
         rows, "series_id long, pos long, value double, n long"
     )
     out = SFAIndex._subsequence_window_rows(long_df, w, chunk_size=cs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" not in plan, plan  # no explode anywhere
     got = {r["series_id"]: np.asarray(r["values"]) for r in out.collect()}
+    names = plan_node_names(out)
+    assert "GenerateExec" not in names, names  # no explode anywhere
     assert set(got) == set(expect)  # exactly n-w+1 rows per series
     for k, z in expect.items():
         assert np.allclose(got[k], z, atol=1e-9), k
@@ -149,17 +147,15 @@ def test_sfa_lb_distance_property(spark, corpus, tmp_path):
     df, Z = corpus
     sub = df.where("series_id < 30")
     model = SFA.fit_whole(sub, word_length=8, alphabet=8)
-    tl = SFA.transform_whole_long(model, sub).collect()
+    rows = SFA.transform_whole(model, sub).collect()
     bins = {r["seg"]: list(r["bins"]) for r in model.bins.collect()}
-    dfts, syms = {}, {}
-    for r in tl:
-        dfts.setdefault(r["series_id"], {})[r["seg"]] = r["coef"]
-        syms.setdefault(r["series_id"], {})[r["seg"]] = r["symbol"]
+    dfts = {r["series_id"]: list(r["dft"]) for r in rows}
+    syms = {r["series_id"]: list(r["syms"]) for r in rows}
     ids = sorted(dfts)
+    assert len(ids) == 30
     for qi in ids[:10]:
-        q = [dfts[qi][i] for i in range(8)]
         for ci in ids:
-            lb = sfa_lb_distance(q, [syms[ci][i] for i in range(8)], bins)
+            lb = sfa_lb_distance(dfts[qi], syms[ci], bins)
             ed = float(np.sqrt(((Z[qi] - Z[ci]) ** 2).sum()))
             assert lb <= ed + 1e-6, (qi, ci, lb, ed)
 
@@ -224,10 +220,12 @@ def test_index_load_roundtrip(spark, corpus, tmp_path):
     assert a == b
 
 
-def test_knn_broadcasts_prefix_join(spark, corpus, tmp_path):
+def test_knn_broadcasts_prefix_join(spark, corpus, tmp_path, plan_node_names):
     """knn broadcasts the query side into the prefix joins by hint, so
     the join stays a BroadcastHashJoin on the prefix columns even when
-    autoBroadcastJoinThreshold=-1 turns off size-based broadcasts."""
+    autoBroadcastJoinThreshold=-1 turns off size-based broadcasts. The
+    query side and the build's data rows are narrow projections: no
+    shuffle, aggregate or join."""
     df, Z = corpus
     idx = SFAIndex.build(
         df, str(tmp_path / "idxbc"), word_length=8, alphabet=8, prefix_len=2
@@ -238,7 +236,18 @@ def test_knn_broadcasts_prefix_join(spark, corpus, tmp_path):
     try:
         res = idx.knn(queries, k=3)
         assert len(res.collect()) == 8 * 3
-        plan = res._jdf.queryExecution().executedPlan().toString()
+        names = plan_node_names(res)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert re.search(r"BroadcastHashJoin \[p0#", plan), plan
+    # with size-based broadcasts off, only the hinted joins broadcast:
+    # the two prefix equi-joins (the summary cross join is a nested loop)
+    assert "BroadcastHashJoinExec" in names, names
+    sides = {
+        "query": idx._query_side(queries),
+        "data": SFAIndex._prefix_rows(idx.model, df, 2),
+    }
+    for side, frame in sides.items():
+        names = plan_node_names(frame)
+        assert "ShuffleExchangeExec" not in names, (side, names)
+        assert not {n for n in names if "Join" in n or "Aggregate" in n}, (side, names)
+    assert sides["query"].columns == ["q_id", "qvals", "qdft", "qp0", "qp1"]

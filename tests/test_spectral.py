@@ -285,3 +285,64 @@ def test_equi_width_constant_coefficient_matches_quantize(spark):
     assert {(r["word"] >> bits) & ((1 << bits) - 1) for r in words} == {A - 1}
     sym = quantize.quantize_with_bins(long.where("seg = 1"), helper)
     assert {r["symbol"] for r in sym.collect()} == {A - 1}
+
+
+def _long_form_whole(model, arrays):
+    """The long-form whole-series composition: dft → coefs_to_long →
+    quantize_with_bins, regathered per series in seg order."""
+    from sfa_spark.operators import quantize
+
+    long = quantize.quantize_with_bins(
+        spectral.coefs_to_long(spectral.dft(arrays, model.word_length)), model.bins
+    )
+    return long.groupBy("series_id").agg(
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("seg", "coef"))), lambda s: s["coef"]
+        ).alias("dft"),
+        F.transform(
+            F.sort_array(F.collect_list(F.struct("seg", "symbol"))), lambda s: s["symbol"]
+        ).alias("syms"),
+    )
+
+
+@pytest.mark.parametrize("histogram", ["equi_width", "equi_depth"])
+def test_transform_whole_matches_long_form(spark, plan_node_names, histogram):
+    """Row for row, transform_whole's dft is bit-equal and its syms are
+    equal to the long form's, on random walks of length 64, lengths 50
+    and 37 (zero-padded to 64), a constant series and a series with a
+    NaN value (null DFT values, symbol 0 in both)."""
+    rng = np.random.default_rng(11)
+    rows = [(i, np.cumsum(rng.normal(0, 1, 64)).tolist()) for i in range(20)]
+    rows += [
+        (50, np.cumsum(rng.normal(0, 1, 50)).tolist()),
+        (37, np.cumsum(rng.normal(0, 1, 37)).tolist()),
+        (60, [2.5] * 64),
+        (70, [1.0, float("nan")] + np.cumsum(rng.normal(0, 1, 62)).tolist()),
+    ]
+    arrays = spark.createDataFrame(rows, "series_id long, values array<double>")
+    model = sfa.fit_whole(arrays, word_length=8, alphabet=8, histogram=histogram)
+    fused = sfa.transform_whole(model, arrays)
+    assert fused.columns == ["series_id", "values", "dft", "syms"]
+    assert [f.dataType.simpleString() for f in fused.schema.fields[2:]] == [
+        "array<double>", "array<int>"
+    ]
+
+    def bits(r):
+        return (
+            [None if v is None else v.hex() for v in r["dft"]],
+            list(r["syms"]),
+        )
+
+    got = {r["series_id"]: bits(r) for r in fused.collect()}
+    want = {r["series_id"]: bits(r) for r in _long_form_whole(model, arrays).collect()}
+    assert got == want
+    assert set(got) == {r[0] for r in rows}
+    assert all(len(d) == 8 for d, _ in got.values())
+    # the DC term is dropped, so a constant series has an all-zero DFT
+    assert all(float.fromhex(h) == 0.0 for h in got[60][0])
+    assert got[70] == ([None] * 8, [0] * 8)
+    names = plan_node_names(fused)
+    assert "ShuffleExchangeExec" not in names, names
+    assert not {n for n in names if "Join" in n or "Aggregate" in n}, names
+    assert "ArrowEvalPythonExec" in names
+
