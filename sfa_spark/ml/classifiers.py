@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from sfa_spark.ml import grid
 from sfa_spark.operators import bags, folds, knn, sfa, select, tfidf
 from sfa_spark.operators.words import mask_word
 
@@ -486,17 +487,15 @@ def weasel_fit(
     max_iter: int = 25,
     reg_param: float = 1.0,
 ) -> WeaselModel:
-    """Fit WEASEL: supervised SFA per window → key bags → χ² →
-    driver-local softmax solve (the liblinear L2R_LR analogue —
-    single-node in the reference too, WEASELClassifier.java:35)."""
-    sfa_models = {
-        w: sfa.fit_supervised(
-            train_arrays, labels, window=w, word_length=word_length,
-            alphabet=alphabet, histogram="information_gain",
-            max_coefs=max(8, word_length * 2),
-        )
-        for w in windows
-    }
+    """Fit WEASEL: supervised SFA for every window in one keyed plan
+    (grid.fit_supervised_sfa) → key bags → χ² → driver-local softmax
+    solve (the liblinear L2R_LR analogue — single-node in the reference
+    too, WEASELClassifier.java:35)."""
+    fitted = grid.fit_supervised_sfa(
+        train_arrays, labels, [(False, w) for w in windows], word_length,
+        alphabet, lower_bounding=True,
+    )
+    sfa_models = {w: m for (_, w), m in fitted.items()}
     key_bags = _weasel_features(sfa_models, train_arrays).cache()
     selected = select.chi_squared(
         key_bags.join(labels, "series_id"),

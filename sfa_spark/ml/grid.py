@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sfa_spark.functions import spectral
-from sfa_spark.operators import bags, folds, knn, quantize, select, tfidf
+from sfa_spark.operators import bags, folds, knn, quantize, select, sfa, tfidf
 from sfa_spark.operators.words import binlog
 
 __all__ = [
@@ -848,98 +848,95 @@ def weasel_windows(max_len: int, norm: bool, min_w: int = 2, max_w: int = 350) -
     return list(range(lo, min(max_w, max_len) + 1))
 
 
-def _supervised_grid_model(
+def fit_supervised_sfa(
     arrays: DataFrame,
     labels: DataFrame,
     combos: list[tuple[bool, int]],
-    max_f: int,
+    word_length: int,
     alphabet: int,
     lower_bounding: bool = False,
-):
-    """Per-(nm, w) supervised SFA (SFASupervised.fitTransform,
-    java:70-96) as one keyed plan: full-length DFT of disjoint chunks →
-    ANOVA-F per (nm, w, seg) with the reference's NaN-drop / inf-keep
-    semantics → top max_f segs per (nm, w) (F desc, seg asc — the
-    stable descending sort of Indices) → IG bins per (nm, w, rank) on
-    2-dp-rounded coefs. Returns (best, bins, lens):
-      best  — (nm, w, seg, rank) broadcastable rank map
-      bins  — (nm, w, seg=rank, bins)
-      lens  — {(nm, w): maxWordLength} for the sliding transform
+) -> dict[tuple[bool, int], sfa.SFAModel]:
+    """Supervised SFA (SFASupervised.fitTransform, java:70-96) for
+    every (nm, w) in one keyed plan: full-length DFT of disjoint chunks
+    → ANOVA-F per (nm, w, seg) (select.anova_f: NaN dropped, ±inf kept)
+    → top word_length segs per (nm, w) (F desc, seg asc — the stable
+    descending sort of Indices) → IG bins per (nm, w, rank) on
+    2-dp-rounded coefs.
+
+    The labelled long form is cached across the ANOVA and the bin fit;
+    the driver reads the ranked segs (≤ word_length per combo) once and
+    the bins once, so the job count does not grow with len(combos).
+    Each model has best_segs in rank order, fit_l = max kept seg + 1
+    rounded up to even (the sliding transform's maxWordLength), and
+    bin_arrays already set. A combo whose every F is NaN gets no model.
     """
+    spark = arrays.sparkSession
     dis = _multi_coefs(
         arrays, combos, l=None, sliding=False, lower_bounding=lower_bounding
     )
-    lab = labels.select("series_id", "label")
-    labeled = dis.join(F.broadcast(lab), "series_id")
-
-    # DECIMAL sums: double aggregation merges partials in task-
-    # completion order, so f_stat carried run-to-run ulp noise that
-    # FLIPPED near-tied seg ranks (different vocabulary → different
-    # model → TEASER earliness wobbled 0.48↔0.53 on Coffee). Decimal
-    # addition is exact and order-independent; each per-row term is
-    # deterministic, so f_stat is now bit-stable under any scheduling.
-    dec = "decimal(38,18)"
-    g = labeled.groupBy("nm", "w", "seg", "label").agg(
-        F.sum(F.col("coef").cast(dec)).cast("double").alias("s"),
-        F.sum((F.col("coef") * F.col("coef")).cast(dec)).cast("double").alias("ss"),
-        F.count(F.lit(1)).cast("double").alias("m"),
-    )
-    tot = g.groupBy("nm", "w", "seg").agg(
-        F.sum(F.col("s").cast(dec)).cast("double").alias("S"),
-        F.sum(F.col("ss").cast(dec)).cast("double").alias("SS"),
-        F.sum("m").alias("N"),
-        F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum((F.col("s") * F.col("s") / F.col("m")).cast(dec))
-        .cast("double")
-        .alias("sq_over_m"),
-    )
-    ssbn = F.col("sq_over_m") - F.col("S") * F.col("S") / F.col("N")
-    sswn = (F.col("SS") - F.col("S") * F.col("S") / F.col("N")) - ssbn
-    dfwn = F.col("N") - F.col("k")
-    # Java double semantics under Spark ANSI mode: msw == 0 gives ±inf
-    # (kept, ranks first) or NaN (dropped) instead of a divide error
-    f_expr = (
-        F.when((F.col("k") <= 1) | (dfwn <= 0), F.lit(float("nan")))
-        .when(sswn != 0, (ssbn / (F.col("k") - 1)) / (sswn / dfwn))
-        .when(ssbn > 0, F.lit(float("inf")))
-        .when(ssbn < 0, F.lit(float("-inf")))
-        .otherwise(F.lit(float("nan")))
-    )
-    f_stats = tot.select("nm", "w", "seg", f_expr.alias("f_stat")).where(
-        ~F.isnan("f_stat")
-    )  # reference drops NaN, keeps +inf first
-
-    rk = Window.partitionBy("nm", "w").orderBy(
-        F.col("f_stat").desc(), F.col("seg").asc()
-    )
-    best = (
-        f_stats.withColumn("rank", F.row_number().over(rk))
-        .where(F.col("rank") <= max_f)
-        .select("nm", "w", "seg", (F.col("rank") - 1).cast("int").alias("rank"))
+    labeled = (
+        dis.join(F.broadcast(labels.select("series_id", "label")), "series_id")
+        .select("nm", "w", "seg", "coef", "label")
         .cache()
     )
-    # maxWordLength per (nm, w): max kept seg + 1, rounded up to even
-    lens = {
-        (r["nm"], r["w"]): int(r["ml"] + r["ml"] % 2)
-        for r in best.groupBy("nm", "w")
-        .agg((F.max("seg") + 1).alias("ml"))
-        .collect()
-    }
-    kept = (
-        labeled.join(F.broadcast(best), ["nm", "w", "seg"])
-        .select(
+    try:
+        rk = Window.partitionBy(*GRID_KEYS).orderBy(
+            F.col("f_stat").desc(), F.col("seg").asc()
+        )
+        ranked = (
+            select.anova_f(labeled, keys=GRID_KEYS)
+            .withColumn("rank", F.row_number().over(rk))
+            .where(F.col("rank") <= word_length)
+            .select("nm", "w", "seg", (F.col("rank") - 1).cast("int").alias("rank"))
+            .collect()
+        )
+        if not ranked:
+            return {}
+        # pandas in, so the rank map is a local relation: a list of rows
+        # would be a Python RDD, and broadcasting it costs a Python job
+        rank_map = spark.createDataFrame(
+            pd.DataFrame(ranked, columns=["nm", "w", "seg", "rank"]),
+            "nm boolean, w int, seg int, rank int",
+        )
+        kept = labeled.join(F.broadcast(rank_map), ["nm", "w", "seg"]).select(
             "nm", "w",
             F.col("rank").alias("seg"),
             F.round("coef", 2).alias("coef"),  # orderline rounding
             "label",
         )
-    )
-    bins = quantize.fit_ig_bins(kept, alphabet, keys=GRID_KEYS).cache()
-    # rank-ordered original segs per combo, for column-sliced transforms
-    seg_map: dict[tuple[bool, int], list[int]] = {}
-    for r in best.orderBy("nm", "w", "rank").collect():
-        seg_map.setdefault((r["nm"], r["w"]), []).append(r["seg"])
-    return best, bins, lens, seg_map
+        bin_rows = quantize.fit_ig_bins(kept, alphabet, keys=GRID_KEYS).collect()
+    finally:
+        labeled.unpersist()
+
+    segs: dict[tuple[bool, int], list[int]] = {}
+    for r in sorted(ranked, key=lambda r: (r["nm"], r["w"], r["rank"])):
+        segs.setdefault((r["nm"], r["w"]), []).append(r["seg"])
+    bins: dict[tuple[bool, int], dict[int, list[float]]] = {}
+    for r in bin_rows:
+        bins.setdefault((r["nm"], r["w"]), {})[r["seg"]] = r["bins"]
+    models = {}
+    for (nm, w), best_segs in segs.items():
+        ml = max(best_segs) + 1
+        b = {
+            seg: np.asarray(v, dtype=np.float64)
+            for seg, v in sorted(bins.get((nm, w), {}).items())
+        }
+        m = sfa.SFAModel(
+            word_length=word_length,
+            alphabet=alphabet,
+            window=w,
+            norm_mean=nm,
+            lower_bounding=lower_bounding,
+            bins=spark.createDataFrame(
+                pd.DataFrame({"seg": list(b), "bins": list(b.values())}),
+                "seg int, bins array<double>",
+            ),
+            best_segs=best_segs,
+            fit_l=ml + ml % 2,
+        )
+        m.bin_arrays = b
+        models[(nm, w)] = m
+    return models
 
 
 def _weasel_grid_keys(
@@ -1128,10 +1125,22 @@ def weasel_grid_fit(
     max_f = max(word_lengths)
     lab = labels.select("series_id", "label")
 
-    best, bins, lens, seg_map = _supervised_grid_model(
+    models = fit_supervised_sfa(
         train_arrays, lab, combos, max_f, alphabet, lower_bounding=lower_bounding
     )
-    best.unpersist()
+    seg_map = {c: m.best_segs for c, m in models.items()}
+    lens = {c: m.fit_l for c, m in models.items()}
+    bins = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (nm, w, seg, v)
+                for (nm, w), m in models.items()
+                for seg, v in m.bin_arrays.items()
+            ],
+            columns=["nm", "w", "seg", "bins"],
+        ),
+        "nm boolean, w int, seg int, bins array<double>",
+    )
     key_bags = _weasel_grid_keys(
         train_arrays, seg_map, bins, lens, combos, list(word_lengths), alphabet,
         lower_bounding=lower_bounding,

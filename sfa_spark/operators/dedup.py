@@ -52,10 +52,14 @@ def jaccard_pairs(
     The uncapped mode (max_df=None) is quadratic on hot shingles — a
     stopword-like shingle appearing in d docs contributes d·(d−1)/2
     pairs. `guard_max_df` makes that blow-up structurally unreachable:
-    an in-plan raise_error() gate (broadcast 1-row max-df aggregate +
+    an in-plan assert_true() gate (broadcast 1-row max-df aggregate +
     filter) aborts execution BEFORE the pair join if any shingle's
     document frequency exceeds the guard, pointing at the df-capped
-    production mode (max_df=...). The guard travels with the plan —
+    production mode (max_df=...). The gate sits on one consumer of the
+    shingles only, the `a` side of the self-join (sizes and the `b`
+    side read the ungated shingles), so exactly one stage can fail and
+    the caller always sees one pyspark.errors.SparkRuntimeException
+    whose message names guard_max_df. The guard travels with the plan —
     it fires wherever the query runs, not just where it was built —
     and costs one extra shingle aggregate, irrelevant for the
     exactness-oracle corpora it is meant for. Mirrors the reference's
@@ -78,7 +82,8 @@ def jaccard_pairs(
             F.broadcast(df_counts.where(F.col("df") <= max_df).select("shingle")),
             "shingle",
         )
-    elif guard_max_df is not None:
+    gated = sh
+    if max_df is None and guard_max_df is not None:
         hottest = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -99,13 +104,13 @@ def jaccard_pairs(
         gate = F.assert_true(
             F.col("_max_df_seen") <= guard_max_df, msg
         ).isNull()
-        sh = (
+        gated = (
             sh.join(F.broadcast(hottest), how="cross")
             .where(gate)
             .drop("_max_df_seen")
         )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
+    a = gated.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         a.join(b, "shingle")

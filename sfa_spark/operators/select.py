@@ -12,6 +12,9 @@ Reference parity:
   * ANOVA F ranking  — SFASupervised.getFoneway
     (`.../transformation/SFASupervised.java:105-219`, a port of sklearn
     f_oneway): rank coefficient indices by F, keep top word_length.
+    anova_f is the one F statistic in the engine: q_anova_f calls it
+    with no keys, and the supervised SFA fit (ml/grid.fit_supervised_sfa)
+    calls it keyed by (nm, w), so every window ranks in one plan.
 
 Both are pure group-aggregate cascades — Catalyst plans them as two
 hash aggregations + a broadcast join; at 100 TB the per-word/per-coef
@@ -174,26 +177,40 @@ def filter_bags(bags: DataFrame, selected: DataFrame, key_col: str = "word") -> 
     )
 
 
-def anova_f(coef_labeled: DataFrame) -> DataFrame:
-    """One-way ANOVA F statistic per coefficient index.
+def anova_f(coef_labeled: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
+    """One-way ANOVA F statistic per coefficient index (per key group).
 
-    Input: (seg int, coef double, label). Output: (seg, f_stat).
-    Sufficient statistics only — Σv, Σv², count per (seg, label):
+    Input: ([*keys], seg int, coef double, label). Output: ([*keys],
+    seg, f_stat). Sufficient statistics only — Σv, Σv², count per
+    ([*keys], seg, label):
       ssbn = Σ_groups (Σv)²/n_g − (Σ_all v)²/N      (between-group)
-      sswn = Σ_all v² − Σ_groups (Σv)²/n_g          (within-group)
+      sswn = (Σ_all v² − (Σ_all v)²/N) − ssbn       (within-group)
       F    = (ssbn/(k−1)) / (sswn/(N−k))
-    Matches sklearn/reference f_oneway algebraically.
+    the reference f_oneway's arithmetic, with its double semantics where
+    Spark's ANSI mode would raise: sswn = 0 gives +inf (ranks first)
+    or −inf, and a seg with one class (k ≤ 1), one sample per class
+    (N ≤ k) or 0/0 gives NaN, which is dropped, as the reference drops
+    NaN F values.
     """
-    # decimal sums: order-independent exact addition keeps f_stat
-    # bit-stable across runs (double merges race on task order and the
-    # ulp noise can flip near-tied seg ranks — see _supervised_grid_model)
+    ks = list(keys)
+    # DECIMAL sums: double aggregation merges partials in task-
+    # completion order, so f_stat carried run-to-run ulp noise that
+    # FLIPPED near-tied seg ranks (different vocabulary → different
+    # model → TEASER earliness wobbled 0.48↔0.53 on Coffee). Decimal
+    # addition is exact and order-independent; each per-row term is
+    # deterministic, so f_stat is bit-stable under any scheduling.
     dec = "decimal(38,18)"
-    g = coef_labeled.groupBy("seg", "label").agg(
+    g = coef_labeled.groupBy(*ks, "seg", "label").agg(
         F.sum(F.col("coef").cast(dec)).cast("double").alias("s"),
         F.sum((F.col("coef") * F.col("coef")).cast(dec)).cast("double").alias("ss"),
         F.count(F.lit(1)).cast("double").alias("m"),
     )
-    tot = g.groupBy("seg").agg(
+    if ks:
+        # one exchange on the keys alone serves the per-seg totals below
+        # and a caller's per-key rank window (each needs only clustering
+        # by the keys), so ranking adds no shuffle; g is vocabulary-sized
+        g = g.repartition(*ks)
+    tot = g.groupBy(*ks, "seg").agg(
         F.sum(F.col("s").cast(dec)).cast("double").alias("S"),
         F.sum(F.col("ss").cast(dec)).cast("double").alias("SS"),
         F.sum("m").alias("N"),
@@ -203,13 +220,16 @@ def anova_f(coef_labeled: DataFrame) -> DataFrame:
         .alias("sq_over_m"),
     )
     ssbn = F.col("sq_over_m") - F.col("S") * F.col("S") / F.col("N")
-    sswn = F.col("SS") - F.col("sq_over_m")
-    msb = ssbn / (F.col("k") - 1)
-    msw = sswn / (F.col("N") - F.col("k"))
-    return tot.select(
-        "seg",
-        F.when(F.abs(msw) < 1e-12, F.lit(0.0)).otherwise(msb / msw).alias("f_stat"),
+    sswn = (F.col("SS") - F.col("S") * F.col("S") / F.col("N")) - ssbn
+    dfwn = F.col("N") - F.col("k")
+    f_expr = (
+        F.when((F.col("k") <= 1) | (dfwn <= 0), F.lit(float("nan")))
+        .when(sswn != 0, (ssbn / (F.col("k") - 1)) / (sswn / dfwn))
+        .when(ssbn > 0, F.lit(float("inf")))
+        .when(ssbn < 0, F.lit(float("-inf")))
+        .otherwise(F.lit(float("nan")))
     )
+    return tot.select(*ks, "seg", f_expr.alias("f_stat")).where(~F.isnan("f_stat"))
 
 
 def top_coefficients(f_stats: DataFrame, word_length: int) -> DataFrame:

@@ -11,12 +11,17 @@ Reference parity:
   * supervised     — SFASupervised.fitTransform
     (`.../transformation/SFASupervised.java:70-96`): rank coefficients
     by one-way ANOVA F, keep the best `word_length` indices, quantize
-    only those (IG binning by default).
+    only those with IG bins. One fit serves every caller:
+    ml/grid.fit_supervised_sfa fits all requested (norm, window) pairs
+    in one keyed plan and returns an SFAModel per pair, with best_segs,
+    fit_l and bin_arrays set.
 
 Spark shape: fit = pandas-UDF MFT → explode to coefficient long form →
 group-aggregate binning (equi-width pure SQL, equi-depth exact
-percentile, IG grouped applyInPandas). The fitted model is a tiny bins
-table (at most word_length rows), read to the driver once per model.
+percentile; the supervised fit's IG bins are a grouped applyInPandas). The fitted model is a tiny bins
+table (at most word_length rows), read to the driver once per model;
+the supervised fit reads the bins of all its windows in one collect
+and hands each model its bin_arrays, so no later job reads them.
 The sliding transform is one Arrow-batched scalar UDF per series
 (MFT → rank-order column pick → searchsorted quantize → bit-pack)
 followed by one posexplode: no coefficient explode, no join, no
@@ -40,10 +45,9 @@ from pyspark.sql.functions import pandas_udf
 
 from sfa_spark.functions import spectral
 from sfa_spark.operators import quantize as QZ
-from sfa_spark.operators import select as SEL
 from sfa_spark.operators import words as WD
 
-HISTOGRAMS = ("equi_depth", "equi_width", "information_gain")
+HISTOGRAMS = ("equi_depth", "equi_width")
 
 
 def quantize_symbols(bins: np.ndarray, v: np.ndarray) -> np.ndarray:
@@ -187,14 +191,13 @@ def fit(
     histogram: str = "equi_depth",
     norm_mean: bool = False,
     lower_bounding: bool = True,
-    labels: DataFrame | None = None,
     quantile_error: float = 0.0,
 ) -> SFAModel:
     """Fit SFA bins on disjoint windows of the corpus.
 
     histogram: equi_depth (exact percentile, or approx with
-    quantile_error>0 at scale), equi_width, or information_gain
-    (labels required — grouped applyInPandas recursion).
+    quantile_error>0 at scale) or equi_width. Information-gain bins
+    are supervised: ml/grid.fit_supervised_sfa fits them.
     quantile_error is a model parameter, not a plan switch: an
     approximate percentile gives different bins.
     Orderline rounding to 2 decimals replicated (SFA.java:402).
@@ -207,13 +210,8 @@ def fit(
     )
     if histogram == "equi_width":
         bins = QZ.fit_equi_width_bins(long, alphabet)
-    elif histogram == "equi_depth":
-        bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
     else:
-        if labels is None:
-            raise ValueError("information_gain binning needs labels")
-        labeled = long.join(labels, "series_id").select("seg", "coef", "label")
-        bins = QZ.fit_ig_bins(labeled, alphabet)
+        bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
     return SFAModel(
         word_length=word_length,
         alphabet=alphabet,
@@ -272,49 +270,6 @@ def transform_whole(model: SFAModel, arrays: DataFrame) -> DataFrame:
 
     return arrays.select("*", _sfa("values").alias("_sfa")).select(
         *arrays.columns, "_sfa.dft", "_sfa.syms"
-    )
-
-
-def fit_supervised(
-    arrays: DataFrame,
-    labels: DataFrame,
-    window: int,
-    word_length: int = 8,
-    alphabet: int = 4,
-    histogram: str = "information_gain",
-    norm_mean: bool = False,
-    lower_bounding: bool = True,
-    max_coefs: int = 16,
-) -> SFAModel:
-    """SFASupervised: ANOVA-F-rank coefficients of the max-length DFT,
-    keep the best word_length indices, then bin only those."""
-    coefs = _disjoint_window_coefs(arrays, window, max_coefs, norm_mean, lower_bounding)
-    long = spectral.coefs_to_long(coefs).withColumn("coef", F.round("coef", 2))
-    # cache: consumed by two actions (ANOVA collect + bin fit) — without
-    # this the pandas-UDF MFT chain re-executes per action
-    labeled = long.join(labels, "series_id").select("seg", "coef", "label").cache()
-    f_stats = SEL.anova_f(labeled)
-    best = SEL.top_coefficients(f_stats, word_length)
-    best_segs = [r["seg"] for r in best.orderBy("rank").collect()]
-    # bins are keyed by RANK position (the reference reorders columns to
-    # bestValues order before fitting bins, SFASupervised.java:70-96)
-    kept = (
-        labeled.join(F.broadcast(best.select("seg", "rank")), "seg")
-        .select((F.col("rank") - 1).cast("int").alias("seg"), "coef", "label")
-    )
-    if histogram == "information_gain":
-        bins = QZ.fit_ig_bins(kept, alphabet)
-    else:
-        bins = QZ.fit_equi_depth_bins(kept.select("seg", "coef"), alphabet)
-    return SFAModel(
-        word_length=word_length,
-        alphabet=alphabet,
-        window=window,
-        norm_mean=norm_mean,
-        lower_bounding=lower_bounding,
-        bins=bins.cache(),
-        best_segs=best_segs,
-        fit_l=max_coefs,
     )
 
 

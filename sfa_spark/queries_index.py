@@ -6,13 +6,12 @@ the whole probe → box-prune → row-LB → verify plan.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from sfa_spark.plans.index import SFAIndex
 from sfa_spark.queries import rnd
 from sfa_spark.sources.events import load_table
+from sfa_spark.tempdirs import process_tmpdir
 
 IDX_K = 3
 IDX_QUERIES = 10
@@ -34,7 +33,7 @@ def _index(spark, sf_dir) -> SFAIndex:
     (exactly how it would be persisted in production)."""
     if sf_dir not in _INDEX_CACHE:
         arrays = _vec_arrays(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="sfa_index_")
+        path = process_tmpdir("sfa_index_")
         _INDEX_CACHE[sf_dir] = SFAIndex.build(
             arrays, path, word_length=8, alphabet=8, prefix_len=2
         )

@@ -7,13 +7,13 @@ the STREAMING path against a plain SQL aggregation.
 from __future__ import annotations
 
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
 
 from sfa_spark.queries import rnd
 from sfa_spark.streaming import scoring
+from sfa_spark.tempdirs import process_tmpdir
 
 
 def q_stream_sfa_words(spark, sf_dir):
@@ -25,7 +25,7 @@ def q_stream_sfa_words(spark, sf_dir):
     from sfa_spark.streaming import words as SW
 
     stats = SW.fit_equi_width_stats(Q.coef_df(spark, sf_dir))
-    src = tempfile.mkdtemp(prefix="sfa_swords_src_")
+    src = process_tmpdir("sfa_swords_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     name = f"swords_{uuid.uuid4().hex[:8]}"
     from sfa_spark.sources.events import ensure_session_compat, normalize_ts
@@ -47,7 +47,7 @@ def q_stream_sfa_words(spark, sf_dir):
 
 
 def q_stream_window_stats(spark, sf_dir):
-    src = tempfile.mkdtemp(prefix="sfa_stream_src_")
+    src = process_tmpdir("sfa_stream_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     name = f"swstats_{uuid.uuid4().hex[:8]}"
     stream = scoring.events_stream(spark, src)
@@ -76,7 +76,7 @@ def q_stream_ingest_gate(spark, sf_dir):
     so it shares a plain-SQL oracle."""
     from sfa_spark.streaming import ingest
 
-    src = tempfile.mkdtemp(prefix="sfa_ingest_src_")
+    src = process_tmpdir("sfa_ingest_src_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
     name = f"singest_{uuid.uuid4().hex[:8]}"
     stream = ingest.docs_stream(spark, src)
@@ -109,7 +109,7 @@ def q_stream_near_dup(spark, sf_dir):
     static_bands = dedup.band_keys(
         dedup.minhash_signatures(ref, n_seeds=8, k=3), band_size=2
     )
-    src = tempfile.mkdtemp(prefix="sfa_neardup_src_")
+    src = process_tmpdir("sfa_neardup_src_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
     name = f"sneardup_{uuid.uuid4().hex[:8]}"
     stream = ingest.docs_stream(spark, src)
@@ -135,7 +135,7 @@ def q_stream_lm_gate(spark, sf_dir):
     from sfa_spark.streaming import ingest
 
     model = text.bigram_lm_fit(load_table(spark, sf_dir, "documents"))
-    src = tempfile.mkdtemp(prefix="sfa_lmgate_src_")
+    src = process_tmpdir("sfa_lmgate_src_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
     name = f"slmgate_{uuid.uuid4().hex[:8]}"
     stream = ingest.docs_stream(spark, src)
@@ -156,7 +156,7 @@ def q_stream_sessionize(spark, sf_dir):
     operator (30-minute gap), checked against the same islands-method
     SQL the batch q_sessionize certifies — gap boundaries at the µs
     precision of event_time."""
-    src = tempfile.mkdtemp(prefix="sfa_sess_src_")
+    src = process_tmpdir("sfa_sess_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     name = f"ssess_{uuid.uuid4().hex[:8]}"
     stream = scoring.events_stream(spark, src)
@@ -190,7 +190,7 @@ def q_stream_attribution(spark, sf_dir):
     range join is the oracle."""
     from sfa_spark.streaming import joins
 
-    src = tempfile.mkdtemp(prefix="sfa_attr_src_")
+    src = process_tmpdir("sfa_attr_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     name = f"sattr_{uuid.uuid4().hex[:8]}"
     stream = scoring.events_stream(spark, src)
@@ -223,7 +223,7 @@ def q_stream_hll_distinct(spark, sf_dir):
     from sfa_spark.operators import sketch
     from sfa_spark.operators.text import with_tokens
 
-    src = tempfile.mkdtemp(prefix="sfa_shll_src_")
+    src = process_tmpdir("sfa_shll_src_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
     name = f"shll_{uuid.uuid4().hex[:8]}"
     schema = spark.read.parquet(src).schema
@@ -266,7 +266,7 @@ def q_stream_countmin(spark, sf_dir):
     from sfa_spark.operators.topk import ranked_top_k
     from sfa_spark.queries_text import CM_DEPTH, CM_WIDTH
 
-    src = tempfile.mkdtemp(prefix="sfa_scm_src_")
+    src = process_tmpdir("sfa_scm_src_")
     shutil.copy(f"{sf_dir}/documents.parquet", f"{src}/documents.parquet")
     name = f"scm_{uuid.uuid4().hex[:8]}"
     schema = spark.read.parquet(src).schema
@@ -329,7 +329,7 @@ def q_stream_teaser(spark, sf_dir):
             "pred_label"
         ),
     )
-    src = tempfile.mkdtemp(prefix="sfa_steaser_src_")
+    src = process_tmpdir("sfa_steaser_src_")
     # one file → one micro-batch: teaser_accept sorts within a batch by
     # snapshot; multi-file sources could deliver later snapshots first
     preds.coalesce(1).write.mode("overwrite").parquet(src)
@@ -358,9 +358,9 @@ def q_stream_latest_state(spark, sf_dir):
     from sfa_spark.streaming import sinks
 
     ev = load_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="sfa_upsert_src_")
+    src = process_tmpdir("sfa_upsert_src_")
     ev.repartition(4).write.mode("overwrite").parquet(src)
-    state_dir = tempfile.mkdtemp(prefix="sfa_upsert_state_")
+    state_dir = process_tmpdir("sfa_upsert_state_")
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)
@@ -412,7 +412,7 @@ def q_stream_drift(spark, sf_dir):
         F.count(F.lit(1)).cast("bigint").alias("n_old")
     )
 
-    src = tempfile.mkdtemp(prefix="sfa_sdrift_src_")
+    src = process_tmpdir("sfa_sdrift_src_")
     ev.where(F.col("event_id") % 2 == 1).select(
         (F.col("value") * 1.25 + 0.5).alias("value")
     ).where(F.col("value").isNotNull()).repartition(4).write.mode(
@@ -471,7 +471,7 @@ def q_stream_debounce(spark, sf_dir):
     from sfa_spark.streaming import ingest as SI
     from sfa_spark.streaming import scoring
 
-    src = tempfile.mkdtemp(prefix="sfa_sdeb_src_")
+    src = process_tmpdir("sfa_sdeb_src_")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/events.parquet")
     name = f"sdeb_{uuid.uuid4().hex[:8]}"
     stream = scoring.events_stream(spark, src)
@@ -527,7 +527,7 @@ def q_stream_scd2(spark, sf_dir):
             F.expr("percentile(ts, array(0.25, 0.5, 0.75))")
         ).collect()[0][0]
     )
-    src = tempfile.mkdtemp(prefix="sfa_scd2_src_")
+    src = process_tmpdir("sfa_scd2_src_")
     q1, q2, q3 = (float(x) for x in qs)
     slice_no = (
         F.when(F.col("ts") < q1, 0)
@@ -557,7 +557,7 @@ def q_stream_scd2(spark, sf_dir):
         t = time.time() - 40 + i * 10
         os.utime(path, (t, t))
     shutil.rmtree(stage)
-    state_dir = tempfile.mkdtemp(prefix="sfa_scd2_state_")
+    state_dir = process_tmpdir("sfa_scd2_state_")
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from sfa_spark.operators import dedup, similarity, text
 from sfa_spark.queries import rnd
 from sfa_spark.sources.events import load_table
+from sfa_spark.tempdirs import process_tmpdir
 
 JACCARD_TOPK = 20
 COS_K = 5
@@ -898,13 +899,11 @@ def q_jsonl_roundtrip(spark, sf_dir):
     the JSONL COPY; the oracle computes the same from the parquet, so
     a hash match proves the roundtrip lost nothing (JSON escaping
     covers quotes/newlines/unicode)."""
-    import tempfile
-
     from sfa_spark.operators.text import with_tokens
     from sfa_spark.sources.jsonl import read_documents_jsonl, write_jsonl
 
     docs = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    tmp = tempfile.mkdtemp(prefix="sfa_jsonl_")
+    tmp = process_tmpdir("sfa_jsonl_")
     write_jsonl(docs, tmp, n_files=2)
     clean, _quarantine = read_documents_jsonl(spark, tmp)
     return with_tokens(clean).select(
@@ -918,12 +917,10 @@ def q_orc_roundtrip(spark, sf_dir):
     prefix). The oracle computes the same from the parquet, so a hash
     match proves the ORC round-trip preserved every value (strings
     with quotes/newlines/unicode included)."""
-    import tempfile
-
     from sfa_spark.sources.columnar import read_orc, write_orc
 
     docs = _docs(spark, sf_dir).select("doc_id", "text", "lang", "n_chars")
-    tmp = tempfile.mkdtemp(prefix="sfa_orc_")
+    tmp = process_tmpdir("sfa_orc_")
     write_orc(docs, tmp, n_files=2)
     back = read_orc(spark, tmp)
     return back.select(
@@ -940,8 +937,6 @@ def q_schema_evolution(spark, sf_dir):
     quality column, v2 with it — read as ONE frame via mergeSchema;
     v1 rows surface NULL quality. The oracle reproduces the
     generational split with a UNION of NULL-padded selects."""
-    import tempfile
-
     from sfa_spark.sources.columnar import read_evolved_parquet
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars")
@@ -949,7 +944,7 @@ def q_schema_evolution(spark, sf_dir):
     v2 = docs.where(F.col("doc_id") % 2 == 1).withColumn(
         "quality", (F.col("n_chars") % 100).cast("double") / 100.0
     )
-    tmp = tempfile.mkdtemp(prefix="sfa_evo_")
+    tmp = process_tmpdir("sfa_evo_")
     v1.write.mode("overwrite").parquet(f"{tmp}/v1")
     v2.write.mode("overwrite").parquet(f"{tmp}/v2")
     merged = read_evolved_parquet(spark, f"{tmp}/v1", f"{tmp}/v2")

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sfa_spark.ml import classifiers as C
+from sfa_spark.ml import grid
 from sfa_spark.sources.cbf import cbf_dataset
 
 
@@ -53,6 +54,73 @@ def test_weasel_cbf(spark, cbf):
     pred = C.weasel_predict(model, te_a)
     acc = _accuracy(pred, te_l)
     assert acc >= 0.75, f"WEASEL CBF accuracy {acc}"
+
+
+def _fit_jobs(spark, cbf, windows):
+    """(models, #jobs) of one supervised SFA fit on the CBF train set."""
+    tr_a, tr_l, _, _ = cbf
+    tr_a.count(), tr_l.count()  # the fixture cache is not the fit's work
+    sc = spark.sparkContext
+    group = f"supervised-sfa-{len(windows)}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        models = grid.fit_supervised_sfa(
+            tr_a, tr_l, [(False, w) for w in windows], 4, 4, lower_bounding=True
+        )
+        return models, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_supervised_sfa_fit_jobs_do_not_grow_with_windows(spark, cbf):
+    """One keyed plan fits every window: three windows cost the same
+    jobs as one, and every model leaves the fit with its bins already
+    on the driver, so transforming with it reads no bins table."""
+    one, jobs_one = _fit_jobs(spark, cbf, [12])
+    three, jobs_three = _fit_jobs(spark, cbf, [12, 20, 28])
+    assert sorted(three) == [(False, 12), (False, 20), (False, 28)]
+    assert jobs_one == jobs_three <= 12, (jobs_one, jobs_three)
+    for m in [*one.values(), *three.values()]:
+        assert "bin_arrays" in vars(m)
+        assert len(m.best_segs) == 4 and sorted(m.bin_arrays) == [0, 1, 2, 3]
+
+
+# Reference values for the supervised step of the WEASEL grid on the
+# CBF train set (windows 12/20/28 under both norms, word length 4,
+# alphabet 4), recorded from the grid plan that fit_supervised_sfa
+# replaced: rank-ordered segs, maxWordLength and IG bins per rank.
+_CBF_SEG_MAP = {
+    (False, 12): [2, 5, 3, 7], (False, 20): [8, 3, 14, 12],
+    (False, 28): [3, 6, 5, 21], (True, 12): [0, 3, 1, 5],
+    (True, 20): [6, 1, 12, 10], (True, 28): [1, 4, 3, 19],
+}
+_CBF_LENS = {
+    (False, 12): 8, (False, 20): 16, (False, 28): 22,
+    (True, 12): 6, (True, 20): 14, (True, 28): 20,
+}
+_CBF_BINS = {  # window → rank → bins; both norms give the same bins
+    12: [[-4.48, -4.01, -1.0], [-4.11, 1.25, 4.18],
+         [-3.26, -2.6, -2.4], [-3.52, 5.4, 5.93]],
+    20: [[-3.69, 5.16, 5.52], [-9.79, -5.27, -4.84],
+         [-2.59, -1.92, -1.58], [2.35, 3.33, 4.7]],
+    28: [[-5.07, 1.89, 13.46], [-4.75, -3.8, -2.88],
+         [-8.5, -1.04, 8.94], [-6.41, -2.15, 4.91]],
+}
+
+
+def test_supervised_sfa_matches_previous_grid_plan_on_cbf(spark, cbf):
+    tr_a, tr_l, _, _ = cbf
+    combos = [(nm, w) for nm in (True, False) for w in (12, 20, 28)]
+    models = grid.fit_supervised_sfa(tr_a, tr_l, combos, 4, 4)
+    assert {c: m.best_segs for c, m in models.items()} == _CBF_SEG_MAP
+    assert {c: m.fit_l for c, m in models.items()} == _CBF_LENS
+    for (nm, w), m in models.items():
+        assert {s: v.tolist() for s, v in m.bin_arrays.items()} == dict(
+            enumerate(_CBF_BINS[w])
+        ), (nm, w)
+        assert sorted(
+            (r["seg"], r["bins"]) for r in m.bins.collect()
+        ) == list(enumerate(_CBF_BINS[w]))
 
 
 def test_mllib_pipeline_composition(spark, cbf):
@@ -112,11 +180,10 @@ def test_weasel_features_match_sql_key_bags(spark, cbf, plan_node_names):
     from sfa_spark.operators import bags, sfa
 
     tr_a, tr_l, te_a, _ = cbf
-    models = {
-        w: sfa.fit_supervised(tr_a, tr_l, window=w, word_length=4, alphabet=4,
-                              histogram="information_gain", max_coefs=8)
-        for w in (12, 16)
-    }
+    fitted = grid.fit_supervised_sfa(
+        tr_a, tr_l, [(False, 12), (False, 16)], 4, 4, lower_bounding=True
+    )
+    models = {w: m for (_, w), m in fitted.items()}
     parts = [
         bags.weasel_keys(sfa.transform_windowing(m, te_a), window_length=w)
         for w, m in models.items()
@@ -136,11 +203,10 @@ def test_weasel_features_reject_wide_window_before_any_job(spark, cbf):
     _weasel_features itself, on the driver, before any Spark job — not
     from a worker at the first action. The model is a window-12 fit
     keyed under 600, so only the tag is out of range."""
-    from sfa_spark.operators import sfa
-
     tr_a, tr_l, te_a, _ = cbf
-    model = sfa.fit_supervised(tr_a, tr_l, window=12, word_length=4, alphabet=4,
-                               histogram="information_gain", max_coefs=8)
+    model = grid.fit_supervised_sfa(
+        tr_a, tr_l, [(False, 12)], 4, 4, lower_bounding=True
+    )[(False, 12)]
     sc = spark.sparkContext
     sc.setLocalProperty("spark.jobGroup.id", "weasel-wide-window")
     try:

@@ -251,3 +251,30 @@ def test_knn_broadcasts_prefix_join(spark, corpus, tmp_path, plan_node_names):
         assert "ShuffleExchangeExec" not in names, (side, names)
         assert not {n for n in names if "Join" in n or "Aggregate" in n}, (side, names)
     assert sides["query"].columns == ["q_id", "qvals", "qdft", "qp0", "qp1"]
+
+
+def test_process_tmpdir_lives_until_exit(tmp_path):
+    """Query scratch dirs (the index, streaming sources) stay while the
+    process runs, since returned frames read them lazily, and are gone
+    once it exits. Plain interpreter, no Spark, its own TMPDIR."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from sfa_spark.tempdirs import process_tmpdir\n"
+        "p = process_tmpdir('sfa_index_')\n"
+        "open(os.path.join(p, 'part'), 'w').write('x')\n"
+        "print(p, os.path.isfile(os.path.join(p, 'part')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo, env=dict(os.environ, TMPDIR=str(tmp_path)),
+        capture_output=True, text=True, check=True,
+    ).stdout.split()
+    assert out[1] == "True"
+    assert os.path.dirname(out[0]) == str(tmp_path)
+    assert os.path.basename(out[0]).startswith("sfa_index_")
+    assert os.listdir(tmp_path) == []

@@ -61,6 +61,60 @@ def test_anova_f_matches_scipy_formula(spark):
     assert abs(f_spark - f_ref) < 1e-6
 
 
+def _anova(spark, rows, keys=()):
+    ks = "".join(f"{k} {t}, " for k, t in keys)
+    df = spark.createDataFrame(rows, f"{ks}seg int, coef double, label double")
+    return select.anova_f(df, keys=tuple(k for k, _ in keys))
+
+
+def test_anova_f_edge_rules(spark):
+    """f_oneway's double semantics, with no divide error under ANSI: a
+    seg with one class or one sample per class has NaN F and no row; a
+    constant seg (0/0) has no row; zero within-class spread between
+    distinct class means is +inf and ranks first."""
+    one_class = [(0, v, 0.0) for v in (1.0, 2.0, 4.0)]
+    assert _anova(spark, one_class).collect() == []
+    one_each = [(0, 1.0, 0.0), (0, 2.0, 1.0), (0, 5.0, 2.0)]
+    assert _anova(spark, one_each).collect() == []
+
+    constant = [(0, 1.5, float(i % 2)) for i in range(6)]
+    separating = [(1, 1.0 + 2.0 * (i % 2), float(i % 2)) for i in range(6)]
+    noisy = [(2, float(v), float(i % 2)) for i, v in enumerate([1, 2, 4, 3, 2, 6])]
+    f = _anova(spark, constant + separating + noisy)
+    got = {r["seg"]: r["f_stat"] for r in f.collect()}
+    assert sorted(got) == [1, 2]
+    assert got[1] == math.inf and 0 < got[2] < math.inf
+    ranked = select.top_coefficients(f, 2).orderBy("rank").collect()
+    assert [r["seg"] for r in ranked] == [1, 2]
+
+
+def test_anova_f_keyed_matches_per_group(spark):
+    """keys=(nm, w) gives each key group the F of a one-key call on
+    that group alone."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    rows = [
+        (nm, w, seg, float(rng.normal(lbl * (seg + w % 3), 1.0)), float(lbl))
+        for nm in (True, False)
+        for w in (8, 12)
+        for seg in range(3)
+        for lbl in (0, 1, 2)
+        for _ in range(5)
+    ]
+    keyed = {
+        (r["nm"], r["w"], r["seg"]): r["f_stat"]
+        for r in _anova(spark, rows, (("nm", "boolean"), ("w", "int"))).collect()
+    }
+    alone = {}
+    for nm in (True, False):
+        for w in (8, 12):
+            group = [r[2:] for r in rows if r[:2] == (nm, w)]
+            for r in _anova(spark, group).collect():
+                alone[(nm, w, r["seg"])] = r["f_stat"]
+    assert len(keyed) == 12 and keyed == alone
+
+
 def test_chi2_uniform_is_zero(spark):
     # identical distribution across classes → chi2 ≈ 0 (kept only with limit 0)
     bag = spark.createDataFrame(

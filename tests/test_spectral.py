@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sfa_spark.functions import spectral
+from sfa_spark.ml import grid
 from sfa_spark.operators import sfa
 from sfa_spark.sources.synthetic import random_walk
 from sfa_spark.sources.events import series_to_arrays
@@ -143,8 +144,9 @@ def test_sfa_supervised_prefers_separating_coefficient(spark):
         labels.append((i, label))
     arrays = spark.createDataFrame(rows, "series_id long, values array<double>")
     lab = spark.createDataFrame(labels, "series_id long, label double")
-    model = sfa.fit_supervised(arrays, lab, window=64, word_length=4,
-                               alphabet=4, max_coefs=12, norm_mean=False)
+    model = grid.fit_supervised_sfa(
+        arrays, lab, [(False, 64)], 4, 4, lower_bounding=True
+    )[(False, 64)]
     assert model.best_segs is not None and len(model.best_segs) == 4
     wd = sfa.transform_windowing(model, arrays)
     assert wd.count() == 20  # one window per series (n == w)
@@ -227,9 +229,9 @@ def _fit_case(ragged_arrays, case):
     labels = clean.select(
         "series_id", (F.col("series_id") % 2).cast("double").alias("label")
     )
-    return sfa.fit_supervised(clean, labels, window=12, word_length=4,
-                              alphabet=4, histogram="information_gain",
-                              max_coefs=8)
+    return grid.fit_supervised_sfa(
+        clean, labels, [(False, 12)], 4, 4, lower_bounding=True
+    )[(False, 12)]
 
 
 @pytest.mark.parametrize(
