@@ -165,14 +165,19 @@ def mft_all_windows(
     return out * norm
 
 
-def dft(arrays: DataFrame, l: int, pad_pow2: bool = True) -> DataFrame:
-    """(series_id, values) → (series_id, coefs array<double> of length l)."""
+def dft_udf(l: int, pad_pow2: bool = True):
+    """Arrow-batched scalar UDF: values array → its l dft_values."""
 
     @pandas_udf("array<double>")
     def _dft(vals: pd.Series) -> pd.Series:
         return vals.map(lambda v: dft_values(np.asarray(v, dtype=np.float64), l, pad_pow2))
 
-    return arrays.select("series_id", _dft("values").alias("coefs"))
+    return _dft
+
+
+def dft(arrays: DataFrame, l: int, pad_pow2: bool = True) -> DataFrame:
+    """(series_id, values) → (series_id, coefs array<double> of length l)."""
+    return arrays.select("series_id", dft_udf(l, pad_pow2)("values").alias("coefs"))
 
 
 def mft_sliding(

@@ -309,7 +309,10 @@ def _fit_mllib_lr(
     ]
     lab_idx_df = F.broadcast(
         spark.createDataFrame(
-            [(l, float(i)) for i, l in enumerate(label_map)], "label double, yidx double"
+            pd.DataFrame(
+                {"label": label_map, "yidx": np.arange(len(label_map), dtype=float)}
+            ),
+            "label double, yidx double",
         )
     )
     # deterministic vocab index: vocab is χ²/WORD_LIMIT-capped, so the
@@ -347,9 +350,8 @@ def _fit_mllib_lr(
     b = list(m.interceptVector.toArray())
     key_rows = kidx.orderBy("cidx").collect()
     kidx.unpersist()
-    weights = spark.createDataFrame(
-        [(r["key"], W[:, r["cidx"]].tolist()) for r in key_rows],
-        f"key {key_schema}, w array<double>",
+    weights = _weights_frame(
+        spark, [r["key"] for r in key_rows], W[:, [r["cidx"] for r in key_rows]], key_schema
     )
     return weights, b, label_map, None, None, None, None
 
@@ -390,11 +392,19 @@ def _fit_local_softmax(
         kept.unpersist()
     lam = 1.0 / (reg_param * max(len(all_sids), 1))
     model = linear.fit_softmax(X, y, len(label_map), lam, max_iter=max_iter)
-    weights = spark.createDataFrame(
-        [(kk, model.W[:, j].tolist()) for j, kk in enumerate(keys)],
+    weights = _weights_frame(spark, keys, model.W, key_schema)
+    return weights, model.b.tolist(), label_map, keys, X, y, all_sids
+
+
+def _weights_frame(spark, keys: list, W: np.ndarray, key_schema: str) -> DataFrame:
+    """(key, w array<double>): column j of the k × d matrix W is key
+    j's per-class weights. Built from pandas, so it plans as a local
+    relation (LocalTableScan); from a list of rows it would plan as a
+    scan of a Python RDD."""
+    return spark.createDataFrame(
+        pd.DataFrame({"key": keys, "w": list(np.asarray(W, dtype=float).T)}),
         f"key {key_schema}, w array<double>",
     )
-    return weights, model.b.tolist(), label_map, keys, X, y, all_sids
 
 
 def _score_with_weights(

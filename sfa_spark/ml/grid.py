@@ -917,25 +917,19 @@ def fit_supervised_sfa(
     models = {}
     for (nm, w), best_segs in segs.items():
         ml = max(best_segs) + 1
-        b = {
-            seg: np.asarray(v, dtype=np.float64)
-            for seg, v in sorted(bins.get((nm, w), {}).items())
-        }
-        m = sfa.SFAModel(
+        models[(nm, w)] = sfa.SFAModel(
             word_length=word_length,
             alphabet=alphabet,
             window=w,
             norm_mean=nm,
             lower_bounding=lower_bounding,
-            bins=spark.createDataFrame(
-                pd.DataFrame({"seg": list(b), "bins": list(b.values())}),
-                "seg int, bins array<double>",
-            ),
+            bin_arrays={
+                seg: np.asarray(v, dtype=np.float64)
+                for seg, v in sorted(bins.get((nm, w), {}).items())
+            },
             best_segs=best_segs,
             fit_l=ml + ml % 2,
         )
-        m.bin_arrays = b
-        models[(nm, w)] = m
     return models
 
 

@@ -18,28 +18,27 @@ Reference parity:
 
 Spark shape: fit = pandas-UDF MFT → explode to coefficient long form →
 group-aggregate binning (equi-width pure SQL, equi-depth exact
-percentile; the supervised fit's IG bins are a grouped applyInPandas). The fitted model is a tiny bins
-table (at most word_length rows), read to the driver once per model;
-the supervised fit reads the bins of all its windows in one collect
-and hands each model its bin_arrays, so no later job reads them.
+percentile; the supervised fit's IG bins are a grouped applyInPandas),
+read to the driver in one collect. A fitted model holds its bins only
+as driver-side numpy arrays (bin_arrays, at most word_length of them)
+and saves to one small JSON file, so no later job reads or writes them.
 The sliding transform is one Arrow-batched scalar UDF per series
 (MFT → rank-order column pick → searchsorted quantize → bit-pack)
 followed by one posexplode: no coefficient explode, no join, no
-shuffle. The whole-series index transform is one Arrow-batched scalar
-UDF per series too (DFT → searchsorted quantize), returning the DFT
-values next to the symbols, since the index's lower bounds need both.
-Both transforms quantize with one rule, quantize_symbols. No
-driver-side loops over series anywhere.
+shuffle. The whole-series index path computes each series' DFT in one
+Arrow-batched scalar UDF (whole_dft); fit_whole fits its bins from
+that frame, and symbols() quantizes it in the JVM. Both quantize with
+quantize_symbols' rule. No driver-side loops over series anywhere.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from functools import cached_property
+import json
+from dataclasses import dataclass, fields
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -65,18 +64,9 @@ class SFAModel:
     window: int
     norm_mean: bool
     lower_bounding: bool
-    bins: DataFrame  # (seg int, bins array<double>) — alphabet-1 ascending boundaries
+    bin_arrays: dict[int, np.ndarray]  # seg → alphabet-1 ascending boundaries
     best_segs: list[int] | None = None  # supervised: kept value indices (rank order)
     fit_l: int | None = None  # supervised: number of Fourier values ranked at fit
-
-    @cached_property
-    def bin_arrays(self) -> dict[int, np.ndarray]:
-        """seg → ascending boundaries, read from the bins table on first
-        use and kept for the model's lifetime."""
-        return {
-            r["seg"]: np.asarray(r["bins"], dtype=np.float64)
-            for r in self.bins.collect()
-        }
 
     def word_kernel(self):
         """numpy kernel for one series: values → one packed word per
@@ -88,7 +78,7 @@ class SFAModel:
         bits = WD.binlog(self.alphabet)
         bins = self.bin_arrays
         # (value column, packed position, boundaries); a position with
-        # no bins row contributes nothing, as the inner bins join did
+        # no bins contributes nothing
         plan = [(c, pos, bins[pos]) for pos, c in enumerate(cols) if pos in bins]
 
         def kernel(x: np.ndarray) -> np.ndarray:
@@ -102,59 +92,28 @@ class SFAModel:
 
         return kernel
 
-    def whole_kernel(self):
-        """numpy kernel for a batch of whole series: list of value
-        arrays → (dft, syms), each (n, word_length): the DFT values of
-        each zero-padded series and their symbols (see transform_whole)."""
-        l = self.word_length
-        plan = [(pos, self.bin_arrays[pos]) for pos in range(l)]
-
-        def kernel(xs: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-            dft = np.zeros((len(xs), l))
-            for i, x in enumerate(xs):
-                dft[i] = spectral.dft_values(x, l, pad_pow2=True)
-            syms = np.zeros((len(xs), l), dtype=np.int32)
-            for pos, b in plan:
-                syms[:, pos] = quantize_symbols(b, dft[:, pos])
-            return dft, syms
-
-        return kernel
-
     def save(self, path: str) -> None:
-        """Persist as parquet (reference uses Kryo; parquet is the
-        Spark-native artifact: columnar, schema'd, partition-prunable)."""
-        meta = self.bins.sparkSession.createDataFrame(
-            [
-                (
-                    self.word_length,
-                    self.alphabet,
-                    self.window,
-                    self.norm_mean,
-                    self.lower_bounding,
-                    self.best_segs,
-                    self.fit_l,
-                )
-            ],
-            "word_length int, alphabet int, window int, norm_mean boolean, "
-            "lower_bounding boolean, best_segs array<int>, fit_l int",
-        )
-        self.bins.write.mode("overwrite").parquet(f"{path}/bins")
-        meta.write.mode("overwrite").parquet(f"{path}/meta")
+        """Write the model as one small JSON file from the driver (the
+        reference uses Kryo): a few hundred numbers need no Spark job.
+        Python's float repr round-trips every boundary exactly."""
+        doc = {f.name: getattr(self, f.name) for f in fields(self)}
+        doc["bin_arrays"] = {str(s): b.tolist() for s, b in self.bin_arrays.items()}
+        with open(path, "w") as fh:
+            json.dump(doc, fh)
 
     @classmethod
-    def load(cls, spark, path: str) -> "SFAModel":
-        bins = spark.read.parquet(f"{path}/bins")
-        m = spark.read.parquet(f"{path}/meta").collect()[0]
-        return cls(
-            word_length=m["word_length"],
-            alphabet=m["alphabet"],
-            window=m["window"],
-            norm_mean=m["norm_mean"],
-            lower_bounding=m["lower_bounding"],
-            bins=bins,
-            best_segs=list(m["best_segs"]) if m["best_segs"] is not None else None,
-            fit_l=m["fit_l"],
-        )
+    def load(cls, path: str) -> "SFAModel":
+        with open(path) as fh:
+            doc = json.load(fh)
+        doc["bin_arrays"] = _as_arrays(doc["bin_arrays"].items())
+        return cls(**doc)
+
+
+def _as_arrays(pairs) -> dict[int, np.ndarray]:
+    """(seg, boundaries) pairs, e.g. the rows of a (seg, bins) table →
+    seg → float64 array, in seg order."""
+    pairs = sorted((int(s), b) for s, b in pairs)
+    return {s: np.asarray(b, dtype=np.float64) for s, b in pairs}
 
 
 def _disjoint_window_coefs(
@@ -218,12 +177,20 @@ def fit(
         window=window,
         norm_mean=norm_mean,
         lower_bounding=lower_bounding,
-        bins=bins.cache(),
+        bin_arrays=_as_arrays(bins.collect()),
     )
 
 
+def whole_dft(arrays: DataFrame, word_length: int) -> DataFrame:
+    """The input's columns plus dft array<double>: the first
+    word_length DFT values of each zero-padded series (dft_values), one
+    Arrow-batched scalar UDF over `values`. A NaN DFT value reaches
+    Spark as null."""
+    return arrays.select("*", spectral.dft_udf(word_length)("values").alias("dft"))
+
+
 def fit_whole(
-    arrays: DataFrame,
+    dfts: DataFrame,
     word_length: int = 16,
     alphabet: int = 8,
     histogram: str = "equi_width",
@@ -231,46 +198,65 @@ def fit_whole(
 ) -> SFAModel:
     """Fit bins on WHOLE-series DFTs (the indexing path: reference
     buildIndexWholeMatching fits on each full series, SFATrie.java:108-133;
-    equi-width, alphabet 8 are the trie defaults)."""
-    coefs = spectral.dft(arrays, word_length, pad_pow2=True)
-    long = spectral.coefs_to_long(coefs).withColumn("coef", F.round("coef", 2))
+    equi-width, alphabet 8 are the trie defaults). `dfts` carries each
+    series' dft (whole_dft's output), so the caller that also quantizes
+    them runs the DFT once.
+
+    Equi-width reads the per-position min and max of the 2-dp-rounded
+    values in one aggregate and sets boundaries vmin + width·c on the
+    driver, the same double arithmetic as quantize.fit_equi_width_bins;
+    equi-depth runs quantize.fit_equi_depth_bins on the long form."""
     if histogram == "equi_width":
-        bins = QZ.fit_equi_width_bins(long, alphabet)
+        vals = [F.round(F.element_at("dft", i + 1), 2) for i in range(word_length)]
+        r = dfts.agg(*map(F.min, vals), *map(F.max, vals)).first()
+        bins = {
+            i: _equi_width(r[i], r[word_length + i], alphabet) for i in range(word_length)
+        }
     else:
-        bins = QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error)
+        long = spectral.coefs_to_long(
+            dfts.select("series_id", F.col("dft").alias("coefs"))
+        ).withColumn("coef", F.round("coef", 2))
+        bins = _as_arrays(
+            QZ.fit_equi_depth_bins(long, alphabet, relative_error=quantile_error).collect()
+        )
     return SFAModel(
         word_length=word_length,
         alphabet=alphabet,
         window=0,
         norm_mean=False,
         lower_bounding=True,
-        bins=bins.cache(),
+        bin_arrays=bins,
     )
 
 
-def transform_whole(model: SFAModel, arrays: DataFrame) -> DataFrame:
-    """Whole-series transform keeping both DFT values and symbols: the
-    input's columns plus dft array<double> and syms array<int>, each
-    word_length long — the indexing path needs the DFT values for
-    lower-bound distances, not just the word.
+def _equi_width(vmin: float | None, vmax: float | None, alphabet: int) -> np.ndarray:
+    """alphabet-1 boundaries vmin + width·c, width = (vmax − vmin) /
+    alphabet; all NaN for a position with no values (null min/max)."""
+    if vmin is None:
+        return np.full(alphabet - 1, np.nan)
+    width = (vmax - vmin) / alphabet
+    return np.array([vmin + width * float(c) for c in range(1, alphabet)])
 
-    One Arrow-batched scalar UDF over `values` runs the model's
-    whole_kernel (dft_values on the zero-padded series, then
-    quantize_symbols per position); a NaN DFT value reaches Spark as
-    null. Row-for-row equal to the long-form
-    composition dft → coefs_to_long → quantize_with_bins regathered by
-    seg (tests/test_spectral.py), with no explode, join or shuffle.
-    """
-    kernel = model.whole_kernel()
 
-    @pandas_udf("dft array<double>, syms array<int>")
-    def _sfa(vals: pd.Series) -> pd.DataFrame:
-        dft, syms = kernel([np.asarray(v, dtype=np.float64) for v in vals])
-        return pd.DataFrame({"dft": list(dft), "syms": list(syms)})
+def symbols(model: SFAModel, dft: str) -> list[Column]:
+    """Per position, the int symbol of array column `dft`'s value by
+    quantize_symbols' rule, in the JVM: the count of boundaries <= v, 0
+    for null or NaN (Spark orders NaN above every number). The index's
+    data and query sides both quantize here. One parsed SQL CASE per
+    position: built from Columns it cost 0.3 s of py4j calls per use;
+    CAST('repr' AS DOUBLE) round-trips every boundary exactly."""
 
-    return arrays.select("*", _sfa("values").alias("_sfa")).select(
-        *arrays.columns, "_sfa.dft", "_sfa.syms"
-    )
+    def sym(i: int) -> Column:
+        v = f"element_at(`{dft}`, {i + 1})"
+        hits = [
+            f"CASE WHEN {v} >= CAST('{float(b)!r}' AS DOUBLE) THEN 1 ELSE 0 END"
+            for b in model.bin_arrays.get(i, ())
+        ]
+        return F.expr(
+            f"CAST(CASE WHEN isnan({v}) THEN 0 ELSE {' + '.join(hits) or '0'} END AS INT)"
+        )
+
+    return [sym(i) for i in range(model.word_length)]
 
 
 def transform_windowing(model: SFAModel, arrays: DataFrame) -> DataFrame:

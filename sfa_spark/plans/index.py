@@ -34,7 +34,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from sfa_spark.operators import sfa as SFA
@@ -94,47 +94,47 @@ class SFAIndex:
         """Index z-normalized fixed-length series for whole-matching.
 
         Writes:
-          path/data    — (series_id, dft, syms, values) partitioned by
-                         the prefix symbols p0..p{d-1} (trie layout).
-          path/summary — (p0.., mins, maxs, cnt) bounding boxes.
-          path/model   — SFA bins.
+          path/data       — (series_id, dft, syms, values) partitioned
+                            by the prefix symbols p0..p{d-1} (trie layout).
+          path/summary    — (p0.., mins, maxs, cnt) bounding boxes.
+          path/model.json — the SFA model, written from the driver.
         Bulk load ≡ reference SFATrie.buildIndex: the partitionBy write
-        IS the bucket-sort by word prefix (SFATrie.java:171-184). The
-        data is one narrow projection of the corpus (_prefix_rows: one
-        Arrow pass per series, no shuffle); the summary aggregates the
-        written data, so the corpus is transformed twice in all — once
-        for the bin fit, once for the data.
+        IS the bucket-sort by word prefix (SFATrie.java:171-184). Each
+        series' DFT is computed once, by one Arrow UDF pass into a
+        persisted (series_id, values, dft) frame; the bin fit, the
+        symbols, the data write and the summary aggregate all read that
+        frame, and it is unpersisted before returning.
         """
-        model = SFA.fit_whole(arrays, word_length, alphabet, histogram)
-        pk = [f"p{i}" for i in range(prefix_len)]
-        cls._prefix_rows(model, arrays, prefix_len).write.mode(
-            "overwrite"
-        ).partitionBy(*pk).parquet(f"{path}/data")
-
-        data = arrays.sparkSession.read.parquet(f"{path}/data")
-        mins = F.array(
-            *[F.min(F.element_at("dft", i + 1)) for i in range(word_length)]
-        ).alias("mins")
-        maxs = F.array(
-            *[F.max(F.element_at("dft", i + 1)) for i in range(word_length)]
-        ).alias("maxs")
-        summary = data.groupBy(*pk).agg(mins, maxs, F.count(F.lit(1)).alias("cnt"))
-        summary.write.mode("overwrite").parquet(f"{path}/summary")
-        model.save(f"{path}/model")
+        dfts = SFA.whole_dft(arrays, word_length).persist()
+        try:
+            model = SFA.fit_whole(dfts, word_length, alphabet, histogram)
+            rows = cls._prefix_rows(model, dfts, prefix_len)
+            pk = [f"p{i}" for i in range(prefix_len)]
+            rows.write.mode("overwrite").partitionBy(*pk).parquet(f"{path}/data")
+            dft_i = [F.element_at("dft", i + 1) for i in range(word_length)]
+            rows.groupBy(*pk).agg(
+                F.array(*map(F.min, dft_i)).alias("mins"),
+                F.array(*map(F.max, dft_i)).alias("maxs"),
+                F.count(F.lit(1)).alias("cnt"),
+            ).write.mode("overwrite").parquet(f"{path}/summary")
+        finally:
+            dfts.unpersist()
+        model.save(f"{path}/model.json")
         return cls(path=path, model=model, prefix_len=prefix_len)
 
     @staticmethod
     def _prefix_rows(
-        model: SFA.SFAModel, arrays: DataFrame, prefix_len: int
+        model: SFA.SFAModel, dfts: DataFrame, prefix_len: int
     ) -> DataFrame:
-        """(p0..p{d-1}, series_id, dft, syms, values): each series' DFT
-        values and symbols from sfa.transform_whole, its first d
-        symbols as prefix columns. A narrow projection of `arrays` — no
-        aggregate, join or shuffle — shared by the build and the query
-        side."""
-        return SFA.transform_whole(model, arrays).select(
-            *[F.element_at("syms", i + 1).alias(f"p{i}") for i in range(prefix_len)],
-            "series_id", "dft", "syms", "values",
+        """(p0..p{d-1}, series_id, dft, syms, values): each series'
+        symbols (sfa.symbols over its dft, from sfa.whole_dft) and its
+        first d symbols as prefix columns. A narrow projection — no
+        Python, aggregate, join or shuffle — shared by the build and
+        the query side."""
+        syms = SFA.symbols(model, "dft")
+        return dfts.select(
+            *[syms[i].alias(f"p{i}") for i in range(prefix_len)],
+            "series_id", "dft", F.array(*syms).alias("syms"), "values",
         )
 
     @staticmethod
@@ -245,10 +245,10 @@ class SFAIndex:
         )
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str, prefix_len: int) -> "SFAIndex":
+    def load(cls, path: str, prefix_len: int) -> "SFAIndex":
         return cls(
             path=path,
-            model=SFA.SFAModel.load(spark, f"{path}/model"),
+            model=SFA.SFAModel.load(f"{path}/model.json"),
             prefix_len=prefix_len,
         )
 
@@ -256,9 +256,10 @@ class SFAIndex:
 
     def _query_side(self, queries: DataFrame) -> DataFrame:
         """(q_id, qvals, qdft, qp0..qp{d-1}): the build's _prefix_rows
-        projection of the query batch, renamed — one Arrow pass per
-        query series, no aggregate, join or shuffle."""
-        return self._prefix_rows(self.model, queries, self.prefix_len).select(
+        projection of the query batch's whole_dft, renamed — one Arrow
+        pass per query series, no aggregate, join or shuffle."""
+        dfts = SFA.whole_dft(queries, self.model.word_length)
+        return self._prefix_rows(self.model, dfts, self.prefix_len).select(
             F.col("series_id").alias("q_id"),
             F.col("values").alias("qvals"),
             F.col("dft").alias("qdft"),

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from sfa_spark.session import get_spark
@@ -5,6 +7,11 @@ from sfa_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
+    # The session's 16g default heap is the whole RAM of a 16 GB box,
+    # and G1 grows toward it: over the Tier-1 run the driver JVM's RSS
+    # passed 14 GB and the JVM was killed for lack of memory. The tests'
+    # live data needs a few GB; SPARK_GRAFT_DRIVER_MEM still overrides.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("sfa-tests", shuffle_partitions=8)
     yield s
 
@@ -23,16 +30,27 @@ def _drop_cache_after_heavy_fits(request):
 
 @pytest.fixture(scope="session")
 def plan_node_names():
-    """df → class names of every node of its executed plan, through the
-    AQE wrapper and query stages (run the query first for the final
-    adaptive plan). Plan tests match node classes, not plan strings."""
+    """df (or an executed SparkPlan) → Counter of the class names of
+    every node of its executed plan, through the AQE wrapper and query
+    stages (run the query first for the final adaptive plan). Plan
+    tests match node classes, not plan strings. Given a `caches` set,
+    the plan of each cached relation it scans is walked too, unless
+    its id is in the set already: a cache read by several plans counts
+    once."""
+    from collections import Counter
 
-    def names(df):
-        stack, out = [df._jdf.queryExecution().executedPlan()], set()
+    from pyspark import SparkContext
+    from pyspark.sql import DataFrame
+
+    def names(df, caches=None):
+        root = df
+        if isinstance(df, DataFrame):
+            root = df._jdf.queryExecution().executedPlan()
+        stack, out = [root], Counter()
         while stack:
             node = stack.pop()
             name = node.getClass().getSimpleName()
-            out.add(name)
+            out[name] += 1
             if name == "AdaptiveSparkPlanExec":
                 stack.append(node.executedPlan())
             elif name.endswith("QueryStageExec"):
@@ -40,6 +58,12 @@ def plan_node_names():
             else:
                 kids = node.children()
                 stack.extend(kids.apply(i) for i in range(kids.size()))
+            if name == "InMemoryTableScanExec" and caches is not None:
+                builder = node.relation().cacheBuilder()
+                key = SparkContext._jvm.System.identityHashCode(builder)
+                if key not in caches:
+                    caches.add(key)
+                    stack.append(builder.cachedPlan())
         return out
 
     return names

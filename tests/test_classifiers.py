@@ -2,6 +2,7 @@
 AbstractClassifierTest: accuracy within a tolerance on a known
 dataset; here synthetic CBF with a conservative floor)."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,9 +119,7 @@ def test_supervised_sfa_matches_previous_grid_plan_on_cbf(spark, cbf):
         assert {s: v.tolist() for s, v in m.bin_arrays.items()} == dict(
             enumerate(_CBF_BINS[w])
         ), (nm, w)
-        assert sorted(
-            (r["seg"], r["bins"]) for r in m.bins.collect()
-        ) == list(enumerate(_CBF_BINS[w]))
+        assert all(v.dtype == np.float64 for v in m.bin_arrays.values())
 
 
 def test_mllib_pipeline_composition(spark, cbf):
@@ -139,11 +138,13 @@ def test_mllib_pipeline_composition(spark, cbf):
     assert out.select("series_id").distinct().count() == te_a.count()
 
 
-def test_mllib_fallback_matches_local_solve(spark, monkeypatch):
+def test_mllib_fallback_matches_local_solve(spark, monkeypatch, plan_node_names):
     """Above the nnz gate the linear solve routes to MLlib
     LogisticRegression over distributed SparseVectors (same objective as
     the driver solve) — predictions must agree with the local path and
-    the bags must never be collected."""
+    the bags must never be collected. Both paths' weights tables, which
+    every scoring broadcasts, plan as a local relation, not a scan of a
+    Python RDD."""
     import numpy as np
 
     rng = np.random.RandomState(17)
@@ -163,6 +164,9 @@ def test_mllib_fallback_matches_local_solve(spark, monkeypatch):
     monkeypatch.setattr(C, "SOLVE_NNZ_BUDGET_BYTES", 1)
     w_dist, b_dist, lm_dist, *rest = C._fit_local_softmax(kept, labels, "bigint", 100, 1.0)
     assert lm_loc == lm_dist and rest[:3] == [None, None, None]
+    for w in (w_loc, w_dist):
+        names = plan_node_names(w)
+        assert "LocalTableScanExec" in names and "RDDScanExec" not in names, names
 
     ids = labels.select("series_id").distinct()
     p_loc = {r["series_id"]: r["pred_label"]

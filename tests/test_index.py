@@ -1,10 +1,13 @@
 """Index vs brute force — the reference SFATrieTest invariant: indexed
 k-NN distances equal linear-scan distances exactly."""
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from sfa_spark.operators import sfa as SFA
 from sfa_spark.plans.index import SFAIndex
 
 
@@ -142,13 +145,13 @@ def test_sfa_lb_distance_property(spark, corpus, tmp_path):
     import numpy as np
 
     from sfa_spark.functions.distances import sfa_lb_distance
-    from sfa_spark.operators import sfa as SFA
 
     df, Z = corpus
     sub = df.where("series_id < 30")
-    model = SFA.fit_whole(sub, word_length=8, alphabet=8)
-    rows = SFA.transform_whole(model, sub).collect()
-    bins = {r["seg"]: list(r["bins"]) for r in model.bins.collect()}
+    dfts = SFA.whole_dft(sub, 8)
+    model = SFA.fit_whole(dfts, word_length=8, alphabet=8)
+    rows = dfts.withColumn("syms", F.array(*SFA.symbols(model, "dft"))).collect()
+    bins = {s: b.tolist() for s, b in model.bin_arrays.items()}
     dfts = {r["series_id"]: list(r["dft"]) for r in rows}
     syms = {r["series_id"]: list(r["syms"]) for r in rows}
     ids = sorted(dfts)
@@ -207,7 +210,7 @@ def test_index_load_roundtrip(spark, corpus, tmp_path):
     df, Z = corpus
     path = str(tmp_path / "persist")
     built = SFAIndex.build(df, path, word_length=8, alphabet=8, prefix_len=2)
-    loaded = SFAIndex.load(spark, path, prefix_len=2)
+    loaded = SFAIndex.load(path, prefix_len=2)
     q = df.where("series_id < 3")
     a = sorted(
         (r["q_id"], r["rk"], r["nn_id"], round(r["dist"], 9))
@@ -244,7 +247,7 @@ def test_knn_broadcasts_prefix_join(spark, corpus, tmp_path, plan_node_names):
     assert "BroadcastHashJoinExec" in names, names
     sides = {
         "query": idx._query_side(queries),
-        "data": SFAIndex._prefix_rows(idx.model, df, 2),
+        "data": SFAIndex._prefix_rows(idx.model, SFA.whole_dft(df, 8), 2),
     }
     for side, frame in sides.items():
         names = plan_node_names(frame)
@@ -278,3 +281,149 @@ def test_process_tmpdir_lives_until_exit(tmp_path):
     assert os.path.dirname(out[0]) == str(tmp_path)
     assert os.path.basename(out[0]).startswith("sfa_index_")
     assert os.listdir(tmp_path) == []
+
+
+class _ExecutedPlans:
+    """A QueryExecutionListener, through py4j: keeps the executed plan
+    of every action the session finishes."""
+
+    def __init__(self):
+        self.plans = []
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.plans.append(qe.executedPlan())
+
+    def onFailure(self, func_name, qe, exception):
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def test_build_runs_the_dft_once(spark, corpus, tmp_path, plan_node_names):
+    """SFAIndex.build runs at most 6 jobs, and its executed plans, with
+    the persisted DFT frame they read counted once, hold exactly one
+    Python evaluation node: each series' DFT is computed once."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    df, _ = corpus
+    df.count()  # the fixture cache is not the build's work
+    sc = spark.sparkContext
+    ensure_callback_server_started(sc._gateway)
+    rec = _ExecutedPlans()
+    listeners = spark._jsparkSession.listenerManager()
+    listeners.register(rec)
+    sc.setLocalProperty("spark.jobGroup.id", "index-build")
+    try:
+        SFAIndex.build(df, str(tmp_path / "once"), word_length=8, alphabet=8, prefix_len=2)
+        jobs = sc.statusTracker().getJobIdsForGroup("index-build")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        listeners.unregister(rec)
+    assert 0 < len(jobs) <= 6, jobs
+    caches: set = set()
+    names = sum((plan_node_names(p, caches) for p in rec.plans), Counter())
+    assert names["ArrowEvalPythonExec"] + names["BatchEvalPythonExec"] == 1, names
+
+
+def test_model_save_runs_no_job_and_load_round_trips(spark, corpus, tmp_path):
+    """SFAModel.save writes from the driver, with no Spark job, and load
+    gives back every field, the bins bit for bit: a whole-series model,
+    a windowed sfa.fit model and a supervised model."""
+    from sfa_spark.ml import grid
+
+    df, _ = corpus
+    labels = df.select("series_id", (F.col("series_id") % 2).cast("double").alias("label"))
+    models = {
+        "whole": SFA.fit_whole(SFA.whole_dft(df, 8), word_length=8, alphabet=8),
+        "windowed": SFA.fit(df, window=16, word_length=4, alphabet=4),
+        "supervised": grid.fit_supervised_sfa(df, labels, [(False, 16)], 4, 4)[(False, 16)],
+    }
+    assert models["supervised"].best_segs and models["supervised"].fit_l
+    sc = spark.sparkContext
+
+    def fields(m):
+        out = dict(vars(m))
+        out["bin_arrays"] = {s: [v.hex() for v in b] for s, b in m.bin_arrays.items()}
+        return out
+
+    for name, m in models.items():
+        path = str(tmp_path / f"{name}.json")
+        sc.setLocalProperty("spark.jobGroup.id", f"save-{name}")
+        try:
+            m.save(path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(f"save-{name}")) == 0, name
+        assert fields(SFA.SFAModel.load(path)) == fields(m), name
+
+
+@pytest.mark.parametrize("histogram", ["equi_width", "equi_depth"])
+def test_build_rows_match_long_form(spark, tmp_path, histogram):
+    """Every `data` and `summary` row of the index equals the long-form
+    composition dft → coefs_to_long → quantize_with_bins, regathered
+    per series and grouped by prefix, with bins fitted on that long
+    form as quantize fits them (DFT values compared by float.hex), on
+    random walks, a constant series and a series with a NaN value
+    (null DFT values, symbol 0)."""
+    import pandas as pd
+
+    from sfa_spark.functions import spectral
+    from sfa_spark.operators import quantize
+
+    rng = np.random.default_rng(3)
+    rows = [(i, np.cumsum(rng.normal(0, 1, 64)).tolist()) for i in range(40)]
+    rows += [(60, [2.5] * 64), (70, [1.0, float("nan")] + rng.normal(0, 1, 62).tolist())]
+    arrays = spark.createDataFrame(rows, "series_id long, values array<double>")
+    path = str(tmp_path / histogram)
+    idx = SFAIndex.build(arrays, path, word_length=8, alphabet=4, prefix_len=2,
+                         histogram=histogram)
+
+    long = spectral.coefs_to_long(spectral.dft(arrays, 8))
+    rounded = long.withColumn("coef", F.round("coef", 2))
+    fit = (
+        quantize.fit_equi_width_bins(rounded, 4)
+        if histogram == "equi_width"
+        else quantize.fit_equi_depth_bins(rounded, 4)
+    )
+    want_bins = {r["seg"]: [v.hex() for v in r["bins"]] for r in fit.collect()}
+    assert {s: [v.hex() for v in b] for s, b in idx.model.bin_arrays.items()} == want_bins
+    bins = spark.createDataFrame(
+        pd.DataFrame({"seg": list(idx.model.bin_arrays),
+                      "bins": list(idx.model.bin_arrays.values())}),
+        "seg int, bins array<double>",
+    )
+    per_series = quantize.quantize_with_bins(long, bins).groupBy("series_id").agg(
+        F.transform(F.sort_array(F.collect_list(F.struct("seg", "coef"))),
+                    lambda s: s["coef"]).alias("dft"),
+        F.transform(F.sort_array(F.collect_list(F.struct("seg", "symbol"))),
+                    lambda s: s["symbol"]).alias("syms"),
+    )
+
+    def hexes(vs):
+        return [None if v is None else v.hex() for v in vs]
+
+    want = {
+        r["series_id"]: (r["syms"][0], r["syms"][1], hexes(r["dft"]), list(r["syms"]))
+        for r in per_series.collect()
+    }
+    data = spark.read.parquet(f"{path}/data").collect()
+    assert {
+        r["series_id"]: (r["p0"], r["p1"], hexes(r["dft"]), list(r["syms"])) for r in data
+    } == want
+    assert want[70][2] == [None] * 8 and want[70][3] == [0] * 8
+
+    boxes: dict = {}
+    for p0, p1, dft, _ in want.values():
+        boxes.setdefault((p0, p1), []).append([v and float.fromhex(v) for v in dft])
+
+    def box(dfts, agg):
+        cols = ([v for v in col if v is not None] for col in zip(*dfts))
+        return hexes([agg(c) if c else None for c in cols])
+
+    want_summary = {k: (box(d, min), box(d, max), len(d)) for k, d in boxes.items()}
+    summary = spark.read.parquet(f"{path}/summary").collect()
+    assert {
+        (r["p0"], r["p1"]): (hexes(r["mins"]), hexes(r["maxs"]), r["cnt"]) for r in summary
+    } == want_summary

@@ -111,7 +111,7 @@ def test_sfa_words_invariants(spark, walk_arrays):
     w, l, a = 24, 6, 4
     model = sfa.fit(walk_arrays, window=w, word_length=l, alphabet=a,
                     histogram="equi_depth", norm_mean=True)
-    bins = {r["seg"]: r["bins"] for r in model.bins.collect()}
+    bins = {s: b.tolist() for s, b in model.bin_arrays.items()}
     assert set(bins) == set(range(l))
     for bs in bins.values():
         assert len(bs) == a - 1
@@ -127,7 +127,7 @@ def test_sfa_model_save_load_roundtrip(spark, walk_arrays, tmp_path):
     model = sfa.fit(walk_arrays, window=16, word_length=4, alphabet=4)
     words1 = sfa.transform_windowing(model, walk_arrays).orderBy("series_id", "win")
     model.save(str(tmp_path / "m"))
-    model2 = sfa.SFAModel.load(spark, str(tmp_path / "m"))
+    model2 = sfa.SFAModel.load(str(tmp_path / "m"))
     words2 = sfa.transform_windowing(model2, walk_arrays).orderBy("series_id", "win")
     assert [r["word"] for r in words1.collect()] == [r["word"] for r in words2.collect()]
 
@@ -169,6 +169,18 @@ def test_variable_length_series_words(spark):
     assert counts == {0: 25, 1: 41, 2: 49, 3: 15}
 
 
+def _bins_frame(spark, model):
+    """The model's bin arrays as a (seg, bins) table for
+    quantize_with_bins, built from pandas (a local relation)."""
+    import pandas as pd
+
+    b = model.bin_arrays
+    return spark.createDataFrame(
+        pd.DataFrame({"seg": list(b), "bins": list(b.values())}),
+        "seg int, bins array<double>",
+    )
+
+
 def _long_form_words(model, arrays):
     """The pre-fusion composition, kept as the reference for the fused
     transform: mft_sliding → coefs_to_long → rank remap → broadcast
@@ -192,7 +204,7 @@ def _long_form_words(model, arrays):
             .drop("seg")
             .withColumnRenamed("rank", "seg")
         )
-    sym = quantize.quantize_with_bins(long, model.bins)
+    sym = quantize.quantize_with_bins(long, _bins_frame(arrays.sparkSession, model))
     return words.pack_words(
         sym.select("series_id", "win", "seg", "symbol"), model.alphabet
     )
@@ -295,7 +307,8 @@ def _long_form_whole(model, arrays):
     from sfa_spark.operators import quantize
 
     long = quantize.quantize_with_bins(
-        spectral.coefs_to_long(spectral.dft(arrays, model.word_length)), model.bins
+        spectral.coefs_to_long(spectral.dft(arrays, model.word_length)),
+        _bins_frame(arrays.sparkSession, model),
     )
     return long.groupBy("series_id").agg(
         F.transform(
@@ -309,8 +322,8 @@ def _long_form_whole(model, arrays):
 
 @pytest.mark.parametrize("histogram", ["equi_width", "equi_depth"])
 def test_transform_whole_matches_long_form(spark, plan_node_names, histogram):
-    """Row for row, transform_whole's dft is bit-equal and its syms are
-    equal to the long form's, on random walks of length 64, lengths 50
+    """Row for row, the whole-series transform (whole_dft, then
+    symbols) gives a dft bit-equal and syms equal to the long form's, on random walks of length 64, lengths 50
     and 37 (zero-padded to 64), a constant series and a series with a
     NaN value (null DFT values, symbol 0 in both)."""
     rng = np.random.default_rng(11)
@@ -322,8 +335,9 @@ def test_transform_whole_matches_long_form(spark, plan_node_names, histogram):
         (70, [1.0, float("nan")] + np.cumsum(rng.normal(0, 1, 62)).tolist()),
     ]
     arrays = spark.createDataFrame(rows, "series_id long, values array<double>")
-    model = sfa.fit_whole(arrays, word_length=8, alphabet=8, histogram=histogram)
-    fused = sfa.transform_whole(model, arrays)
+    dfts = sfa.whole_dft(arrays, 8)
+    model = sfa.fit_whole(dfts, word_length=8, alphabet=8, histogram=histogram)
+    fused = dfts.withColumn("syms", F.array(*sfa.symbols(model, "dft")))
     assert fused.columns == ["series_id", "values", "dft", "syms"]
     assert [f.dataType.simpleString() for f in fused.schema.fields[2:]] == [
         "array<double>", "array<int>"
