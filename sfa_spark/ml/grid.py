@@ -31,6 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from sfa_spark.functions import spectral
 from sfa_spark.operators import bags, folds, knn, quantize, select, sfa, tfidf
@@ -166,6 +167,14 @@ def _multi_coefs(
 GRID_KEYS = ("nm", "w")
 
 
+def _local_frame(spark, rows: list, schema: str) -> DataFrame:
+    """A driver-side table built from pandas, so it plans as a local
+    relation (LocalTableScan); a list of rows would plan as a scan of
+    a Python RDD, and broadcasting it costs a Python job."""
+    names = DataType.fromDDL(schema).names
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
 def fit_grid_bins(
     train_arrays: DataFrame,
     combos: list[tuple[bool, int]],
@@ -212,7 +221,7 @@ def masked_grid_bags(
     row-multiplication of the packed words, not a recompute."""
     spark = words.sparkSession
     bits = binlog(alphabet)
-    f_df = spark.createDataFrame([(int(f),) for f in f_values], "f int")
+    f_df = _local_frame(spark, [(int(f),) for f in f_values], "f int")
     masked = words.join(F.broadcast(f_df)).withColumn(
         "word",
         F.expr(f"word & (shiftleft(cast(1 as bigint), {bits} * f) - 1)"),
@@ -246,7 +255,8 @@ class BossGridModel:
             self.bins, test_arrays, combos, self.max_f, self.alphabet
         )
         member_df = F.broadcast(
-            spark.createDataFrame(
+            _local_frame(
+                spark,
                 [(m.nm, m.w, m.f, m.train_correct) for m in self.members],
                 "nm boolean, w int, f int, weight long",
             )
@@ -347,9 +357,7 @@ def boss_ensemble_grid_fit(
         for m in per_norm[nm]
     ]
     member_df = F.broadcast(
-        spark.createDataFrame(
-            member_rows, "nm boolean, w int, f int, weight long"
-        )
+        _local_frame(spark, member_rows, "nm boolean, w int, f int, weight long")
     )
     votes = (
         nn.join(member_df.select("nm", "w", "f"), ["nm", "w", "f"], "left_semi")
@@ -391,13 +399,13 @@ def boss_ensemble_grid_fit(
         top.train_correct = int(best_c)
 
     mdf = F.broadcast(
-        spark.createDataFrame(
-            [(m.nm, m.w, m.f) for m in members], "nm boolean, w int, f int"
+        _local_frame(
+            spark, [(m.nm, m.w, m.f) for m in members], "nm boolean, w int, f int"
         )
     )
     train_bags = all_bags.join(mdf, ["nm", "w", "f"], "left_semi").cache()
-    member_combos = spark.createDataFrame(
-        [(m.nm, m.w) for m in members], "nm boolean, w int"
+    member_combos = _local_frame(
+        spark, [(m.nm, m.w) for m in members], "nm boolean, w int"
     )
     kept_bins = bins.join(F.broadcast(member_combos), ["nm", "w"], "left_semi").cache()
     all_bags.unpersist()
@@ -428,7 +436,8 @@ class BossVSGridModel:
             self.bins, test_arrays, combos, self.max_f, self.alphabet
         )
         member_df = F.broadcast(
-            spark.createDataFrame(
+            _local_frame(
+                spark,
                 [(m.nm, m.w, m.f, m.train_correct) for m in self.members],
                 "nm boolean, w int, f int, weight long",
             )
@@ -477,7 +486,7 @@ def bossvs_grid_fit(
 
     lab = labels.select("series_id", "label")
     folded = folds.stratified_folds(lab, n_folds).select("series_id", "fold")
-    fold_df = spark.createDataFrame([(int(s),) for s in range(n_folds)], "s int")
+    fold_df = _local_frame(spark, [(int(s),) for s in range(n_folds)], "s int")
     keys = ("nm", "w", "f")
     bl = all_bags.join(F.broadcast(folded), "series_id").join(lab, "series_id")
     # CV-as-data: tag each bag row with every fold id s; train slice =
@@ -509,7 +518,7 @@ def bossvs_grid_fit(
         for m in per_norm[nm]
     ]
     member_df = F.broadcast(
-        spark.createDataFrame(member_rows, "nm boolean, w int, f int, weight long")
+        _local_frame(spark, member_rows, "nm boolean, w int, f int, weight long")
     )
     # final per-member tf-idf on ALL train data
     final_models = tfidf.fit_tfidf(
@@ -549,13 +558,13 @@ def bossvs_grid_fit(
         top.train_correct = int(best_c)
 
     mdf = F.broadcast(
-        spark.createDataFrame(
-            [(m.nm, m.w, m.f) for m in members], "nm boolean, w int, f int"
+        _local_frame(
+            spark, [(m.nm, m.w, m.f) for m in members], "nm boolean, w int, f int"
         )
     )
     kept_models = final_models.join(mdf, ["nm", "w", "f"], "left_semi").cache()
-    member_combos = spark.createDataFrame(
-        [(m.nm, m.w) for m in members], "nm boolean, w int"
+    member_combos = _local_frame(
+        spark, [(m.nm, m.w) for m in members], "nm boolean, w int"
     )
     kept_bins = bins.join(F.broadcast(member_combos), ["nm", "w"], "left_semi").cache()
     all_bags.unpersist()
@@ -599,9 +608,7 @@ def _shotgun_nn_frame(
     """
     spark = queries.sparkSession
     combo_df = F.broadcast(
-        spark.createDataFrame(
-            sorted(set(combos)), "nm boolean, w int"
-        )
+        _local_frame(spark, sorted(set(combos)), "nm boolean, w int")
     )
     q = queries.select(
         "series_id", "values", F.lit(True).alias("is_q")
@@ -708,7 +715,8 @@ class ShotgunGridModel:
         combos = sorted({(m.nm, m.w) for m in self.members})
         nn = _shotgun_nn_frame(test_arrays, self.train_arrays, combos, loo=False)
         member_df = F.broadcast(
-            spark.createDataFrame(
+            _local_frame(
+                spark,
                 [(m.nm, m.w, m.train_correct) for m in self.members],
                 "nm boolean, w int, weight long",
             )
@@ -797,7 +805,7 @@ def shotgun_grid_fit(
             for m in per_norm[nm]
         ]
         member_df = F.broadcast(
-            spark.createDataFrame(member_rows, "nm boolean, w int, weight long")
+            _local_frame(spark, member_rows, "nm boolean, w int, weight long")
         )
         votes = (
             nn.join(member_df, ["nm", "w"])
@@ -892,12 +900,7 @@ def fit_supervised_sfa(
         )
         if not ranked:
             return {}
-        # pandas in, so the rank map is a local relation: a list of rows
-        # would be a Python RDD, and broadcasting it costs a Python job
-        rank_map = spark.createDataFrame(
-            pd.DataFrame(ranked, columns=["nm", "w", "seg", "rank"]),
-            "nm boolean, w int, seg int, rank int",
-        )
+        rank_map = _local_frame(spark, ranked, "nm boolean, w int, seg int, rank int")
         kept = labeled.join(F.broadcast(rank_map), ["nm", "w", "seg"]).select(
             "nm", "w",
             F.col("rank").alias("seg"),
@@ -971,7 +974,7 @@ def _weasel_grid_keys(
     )
     spark = arrays.sparkSession
     bits = binlog(alphabet)
-    f_df = spark.createDataFrame([(int(f),) for f in f_values], "f int")
+    f_df = _local_frame(spark, [(int(f),) for f in f_values], "f int")
     masked = words.join(F.broadcast(f_df)).withColumn(
         "word", F.expr(f"word & (shiftleft(cast(1 as bigint), {bits} * f) - 1)")
     )
@@ -1250,7 +1253,8 @@ def weasel_grid_fit(
     nm, f = best_key
     keys, X = _combo_matrix(nm, f)
     final = _fit(X, y)
-    weights = spark.createDataFrame(
+    weights = _local_frame(
+        spark,
         [(int(key), final.W[:, j].tolist()) for j, key in enumerate(keys)],
         "key bigint, w array<double>",
     )
@@ -1565,9 +1569,10 @@ def muse_grid_fit(
     ).select("series_id", "key", "cnt")
     keys_list, X = _collect_bags(kept, all_sids)
     final = linear.fit_softmax(X, y, len(label_map), lam, max_iter=max_iter)
-    weights = spark.createDataFrame(
+    weights = _local_frame(
+        spark,
         [
-            ((int(k[0]), int(k[1]), int(k[2]), int(k[3])), final.W[:, j].tolist())
+            (dict(zip(("w", "d", "word", "word2"), map(int, k))), final.W[:, j].tolist())
             for j, k in enumerate(keys_list)
         ],
         "key struct<w:int,d:int,word:bigint,word2:bigint>, w array<double>",

@@ -1,4 +1,4 @@
-"""Bag-space 1-NN and Euclidean k-NN joins (SURVEY §2.7 C2, §2.8).
+"""Bag-space and Shotgun 1-NN (SURVEY §2.7 C2, C8).
 
 Reference parity:
   * BOSS 1-NN — BOSSEnsembleClassifier.predict
@@ -10,22 +10,95 @@ Reference parity:
     word (or whose cross terms cancel to the no-match distance, or with
     an identical bag projection) are SKIPPED; a query with no accepted
     candidate gets no prediction (null label → scored incorrect).
+  * Shotgun 1-NN — ShotgunClassifier.java:161-238.
 
-Decomposition (so only matching words are ever joined):
-    dist(q, c) = sumsq(q) + Σ_{w ∈ both} (tf_c[w]² − 2·tf_q[w]·tf_c[w])
-The `dist != sumsq` acceptance rule means zero-overlap candidates can
-never win, so the argmin runs over the sparse word-join pairs ONLY —
-no cross join anywhere. Counts are integers so distances are EXACT
-bigints — no float-ordering ambiguity.
-
-Scale: the word-join is the only shuffle; its key distribution is the
-word histogram (Zipfian) → AQE skew-join handles hot words.
+Both run on one chunked plan (`_chunked_1nn`): the corpus is
+hash-chunked, the queries are replicated to every chunk, each
+(*keys, chunk) group resolves its LOCAL argmin in numpy, and a final
+min(struct(dist, nn_id)) merges chunks. Shuffle volume is |Q|·n_chunks
++ |C| input rows — linear in the corpus, never pairs. A word-join
+would instead materialize Σ_w df_test(w)·df_train(w) pair rows: SFA
+bags draw from a small fixed vocabulary, so that join is quadratic in
+series count (measured at sf10, 150k series: ~78 GB of shuffle spill).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+
+def _chunked_1nn(
+    queries: DataFrame,
+    corpus: DataFrame,
+    keys: tuple[str, ...],
+    n_chunks: int,
+    block,
+    dist_type,
+) -> DataFrame:
+    """Shared 1-NN skeleton. `queries`/`corpus` carry (*keys,
+    series_id, payload...); every query row is replicated to each of
+    `n_chunks` chunks, every corpus row goes to the chunk its
+    series_id hashes to. `block(q_pdf, c_pdf)` returns the group's
+    (q_ids, c_ids, dists) argmin arrays, or None for no row; ties must
+    go to the smaller c_id, as the chunk merge's struct min does.
+    Output: (*keys, series_id, nn_id, dist)."""
+    spark = queries.sparkSession
+    ks = list(keys)
+    P = int(n_chunks)
+    chunks = spark.range(P).select(F.col("id").cast("int").alias("chunk"))
+    both = (
+        queries.withColumn("is_q", F.lit(True))
+        .join(F.broadcast(chunks))
+        .unionByName(
+            corpus.withColumn("is_q", F.lit(False)).withColumn(
+                "chunk", F.pmod(F.hash("series_id"), F.lit(P)).cast("int")
+            )
+        )
+    )
+    schema = StructType(
+        [queries.schema[k] for k in ks]
+        + [
+            StructField("q_id", LongType()),
+            StructField("c_id", LongType()),
+            StructField("dist", dist_type),
+        ]
+    )
+
+    def _group(kv, pdf):
+        is_q = pdf["is_q"].to_numpy(dtype=bool)
+        res = block(pdf[is_q], pdf[~is_q]) if is_q.any() and not is_q.all() else None
+        q_ids, c_ids, dist = ([], [], []) if res is None else res
+        out = {k: [v] * len(q_ids) for k, v in zip(ks, kv)}
+        out.update(q_id=q_ids, c_id=c_ids, dist=dist)
+        return pd.DataFrame(out)
+
+    local = both.groupBy(*ks, "chunk").applyInPandas(_group, schema)
+    if P == 1:  # one group per key: its argmin is already final
+        return local.select(
+            *ks, F.col("q_id").alias("series_id"), F.col("c_id").alias("nn_id"), "dist"
+        )
+    return (
+        local.groupBy(*ks, "q_id")
+        .agg(F.min(F.struct("dist", "c_id")).alias("b"))
+        .select(
+            *ks,
+            F.col("q_id").alias("series_id"),
+            F.col("b.c_id").alias("nn_id"),
+            F.col("b.dist").alias("dist"),
+        )
+    )
+
+
+def _dense(sids: np.ndarray, cols: np.ndarray, cnt: np.ndarray, n_cols: int):
+    """Long (series, column, count) rows → (sorted ids, dense matrix)."""
+    ids, rows = np.unique(np.asarray(sids, dtype=np.int64), return_inverse=True)
+    m = np.zeros((len(ids), n_cols))
+    m[rows, cols] = np.asarray(cnt, dtype=np.float64)
+    return ids, m
 
 
 def boss_1nn(
@@ -33,201 +106,87 @@ def boss_1nn(
     train_bags: DataFrame,
     loo: bool = False,
     keys: tuple[str, ...] = (),
+    n_chunks: int | None = None,
 ) -> DataFrame:
     """1-NN by BOSS distance. Inputs: (series_id, word, cnt[, *keys]).
 
-    Output: (series_id, nn_id, dist[, *keys]). loo=True skips
+    Output: (*keys, series_id, nn_id, dist bigint). loo=True skips
     self-matches (leave-one-out over a single corpus). `keys` are extra
     partition columns (e.g. norm/window/word-length) so one call
     resolves 1-NN for EVERY grid combination in a single plan — the
     grid-as-data ensemble fit path.
 
-    Reference acceptance (BOSSEnsembleClassifier.java:216): a neighbor
-    must have dist > 0 and dist != sumsq(q), so the argmin needs only
-    the word-overlap pairs; queries with no accepted candidate emit no
-    row (reference predicts null).
-    """
-    ks = list(keys)
-    q = test_bags.select(
-        *ks, F.col("series_id").alias("q_id"), "word", F.col("cnt").alias("q_cnt")
-    )
-    c = train_bags.select(
-        *ks, F.col("series_id").alias("c_id"), "word", F.col("cnt").alias("c_cnt")
-    )
-    sumsq = q.groupBy(*ks, "q_id").agg(
-        F.sum(F.col("q_cnt") * F.col("q_cnt")).alias("sumsq")
-    )
-    pairs = (
-        q.join(c, [*ks, "word"])
-        .groupBy(*ks, "q_id", "c_id")
-        .agg(
-            F.sum(
-                F.col("c_cnt") * F.col("c_cnt")
-                - F.lit(2) * F.col("q_cnt") * F.col("c_cnt")
-            ).alias("corr")
-        )
-        .join(sumsq, [*ks, "q_id"])
-        .withColumn("dist", F.col("sumsq") + F.col("corr"))
-        .where((F.col("corr") != 0) & (F.col("dist") > 0))
-    )
-    if loo:
-        pairs = pairs.where(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy(*ks, "q_id").orderBy(
-        F.col("dist").asc(), F.col("c_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(
-            *ks, F.col("q_id").alias("series_id"), F.col("c_id").alias("nn_id"), "dist"
-        )
-    )
-
-
-def boss_1nn_blocked(
-    test_bags: DataFrame,
-    train_bags: DataFrame,
-    loo: bool = False,
-    n_chunks: int | None = None,
-) -> DataFrame:
-    """boss_1nn with the SAME semantics (exact integer BOSS distances,
-    reference acceptance rule corr ≠ 0 ∧ dist > 0, ties → smaller
-    nn_id) but a dense blocked-BLAS plan — the big-corpus path.
-
-    Why: the sparse word-join plan materializes Σ_w df_test(w)·df_train(w)
-    pair rows. SFA bags have a SMALL FIXED vocabulary (alphabet^len,
-    ~128 words here) that every series draws from, so df(w) ~ n and
-    the join is quadratic in SERIES COUNT — measured: at sf10 (150k
-    series) it wrote ~78 GB of shuffle spill and died, while the
-    dense form is two GEMMs per block:
+    Each (*keys, chunk) group is two GEMMs per query slice:
 
         dist(q, c) = sumsq(q) − 2·(Q Cᵀ)[q,c] + (M_q (C∘C)ᵀ)[q,c]
 
     with M_q = (Q > 0) the query's word mask (the asymmetric "test
-    words only" term). The corpus is hash-chunked and the queries (a
-    classification test set) are replicated to every chunk; each chunk
-    group densifies its long rows into local matrices and resolves its
-    LOCAL argmin in numpy without materializing the pair matrix into
-    the plan; a final min(struct(dist, nn_id)) merges chunks. Shuffle
-    volume is |bags_q|·n_chunks + |bags_c| long rows — linear in the
-    corpus, never pairs. n_chunks defaults to defaultParallelism;
-    q_boss_1nn sizes it from its input.
+    words only" term). The group indexes its own words: only the
+    query side's words get a column, since a candidate word no query
+    holds adds nothing to any distance, so word ids may be any bigint
+    (hashed or 32-bit grid words included). Counts are small ints, so
+    float64 GEMMs are exact and dist is an exact bigint.
 
-    The word id itself is the dense column index, so words must be
-    small non-negative ints — packed SFA words live in
-    [0, alphabet^word_length), 256 here; anything else raises
-    ValueError. Columns for words absent from a group are all-zero on
-    both sides and cancel in every term (mask·(C∘C), Q·Cᵀ, sumsq), so
-    no global vocabulary index (three driver-blocking stages, ~1.2 s of
-    q_boss_1nn's 2.8 s at sf0.1) is needed.
+    Reference acceptance (BOSSEnsembleClassifier.java:216): zero-overlap
+    candidates have corr == 0, identical-projection candidates dist
+    == 0; both are skipped. Ties go to the smaller nn_id; queries with
+    no accepted candidate emit no row (reference predicts null).
 
-    Counts are small ints so float64 GEMMs are exact; dist is cast
-    back to long. Zero-overlap candidates have corr == 0 (excluded),
-    identical-projection candidates dist == 0 (excluded) — matching
-    BOSSEnsembleClassifier.java:216 exactly like the sparse path.
-    Output: (series_id, nn_id, dist) — bit-identical to boss_1nn
-    (tests/test_models.py::test_boss_1nn_blocked_dense_vocab).
+    n_chunks defaults to defaultParallelism for an unkeyed call and to
+    1 for a keyed one, whose key groups already spread the work (the
+    grid fits ran fastest so; q_boss_1nn sizes it from its input).
     """
-    import numpy as np
-    import pandas as pd
-
     spark = test_bags.sparkSession
-    P = int(n_chunks or spark.sparkContext.defaultParallelism)
+    if n_chunks is None:
+        n_chunks = 1 if keys else spark.sparkContext.defaultParallelism
 
-    chunks = spark.range(P).select(F.col("id").cast("int").alias("chunk"))
-    q = test_bags.select(
-        F.col("series_id").alias("sid"),
-        F.col("word").cast("int").alias("widx"),
-        "cnt",
-        F.lit(True).alias("is_q"),
-    ).join(F.broadcast(chunks))
-    c = train_bags.select(
-        F.col("series_id").alias("sid"),
-        F.col("word").cast("int").alias("widx"),
-        "cnt",
-        F.lit(False).alias("is_q"),
-        F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
-    )
-
-    def _dense(pdf):
-        sids = np.sort(pdf["sid"].unique())
-        pos = {s: i for i, s in enumerate(sids)}
-        m = np.zeros((len(sids), int(pdf["widx"].max()) + 1))
-        m[
-            pdf["sid"].map(pos).to_numpy(),
-            pdf["widx"].to_numpy(dtype=np.int64),
-        ] = pdf["cnt"].to_numpy(dtype=np.float64)
-        return sids, m
-
-    def _group(kv, pdf):
-        qs, cs = pdf[pdf["is_q"]], pdf[~pdf["is_q"]]
-        if not len(qs) or not len(cs):
-            return pd.DataFrame({"q_id": [], "c_id": [], "dist": []})
-        V = int(pdf["widx"].max()) + 1
-        # word ids ARE the dense column index, so they must be small
-        # non-negative ints. A hashed or negative id would silently
-        # wrap on the int cast or allocate a max(widx)+1-wide zero
-        # matrix per group — fail fast instead
-        # (1<<22 ≈ 32 MB/row of float64, far above any packed-SFA
-        # vocabulary: alphabet**word_length is 256 here).
-        if int(pdf["widx"].min()) < 0 or V > (1 << 22):
-            raise ValueError(
-                f"dense word index out of range: [{pdf['widx'].min()}, "
-                f"{V - 1}] — boss_1nn_blocked requires word ids in "
-                "[0, alphabet**word_length)"
-            )
-        q_ids, Q = _dense(qs)
-        c_ids, C = _dense(cs)
-        if Q.shape[1] < V:
-            Q = np.pad(Q, ((0, 0), (0, V - Q.shape[1])))
-        if C.shape[1] < V:
-            C = np.pad(C, ((0, 0), (0, V - C.shape[1])))
-        CC = (C * C).T
-        CT = C.T
+    def _block(qs, cs):
+        # the group's word index: the query side's words only
+        words, q_col = np.unique(qs["word"].to_numpy(np.int64), return_inverse=True)
+        c_word = cs["word"].to_numpy(np.int64)
+        c_col = np.minimum(np.searchsorted(words, c_word), len(words) - 1)
+        hit = words[c_col] == c_word
+        if not hit.any():
+            return None
+        q_ids, Q = _dense(qs["series_id"], q_col, qs["cnt"], len(words))
+        c_ids, C = _dense(cs["series_id"][hit], c_col[hit], cs["cnt"][hit], len(words))
+        CC, CT = (C * C).T, C.T
         # Slice the query side so the block distance matrix stays ~32 MB:
         # the full |Q|×|C| matrix at 30k×4k is ~1 GB/task and with 32
         # concurrent tasks thrashed memory (measured 339 s at sf10 for
         # what is ~25 s of GEMM). The slices reuse the same C factors.
-        qstep = max(256, int(4_000_000 / max(1, len(c_ids))))
+        qstep = max(256, int(4_000_000 / len(c_ids)))
         out_q, out_c, out_d = [], [], []
         for s in range(0, len(q_ids), qstep):
-            Qs = Q[s : s + qstep]
-            qi = q_ids[s : s + qstep]
+            Qs, qi = Q[s : s + qstep], q_ids[s : s + qstep]
             corr = (Qs > 0).astype(np.float64) @ CC - 2.0 * (Qs @ CT)
             dist = (Qs * Qs).sum(axis=1)[:, None] + corr
             invalid = (corr == 0.0) | (dist <= 0.0)
             if loo:
                 invalid |= qi[:, None] == c_ids[None, :]
             dist[invalid] = np.inf
-            # c_ids ascend, argmin takes the FIRST minimum → smaller
-            # nn_id on ties, matching sparse (dist asc, c_id asc).
+            # c_ids ascend and argmin takes the FIRST minimum → the
+            # smaller nn_id on ties
             j = dist.argmin(axis=1)
             best = dist[np.arange(len(qi)), j]
             keep = np.isfinite(best)
             out_q.append(qi[keep])
             out_c.append(c_ids[j[keep]])
             out_d.append(best[keep])
-        return pd.DataFrame(
-            {
-                "q_id": pd.Series(np.concatenate(out_q), dtype="int64"),
-                "c_id": pd.Series(np.concatenate(out_c), dtype="int64"),
-                "dist": pd.Series(np.concatenate(out_d), dtype="float64"),
-            }
+        return (
+            np.concatenate(out_q),
+            np.concatenate(out_c),
+            np.concatenate(out_d).astype(np.int64),
         )
 
-    local = (
-        q.unionByName(c)
-        .groupBy("chunk")
-        .applyInPandas(_group, schema="q_id bigint, c_id bigint, dist double")
-    )
-    return (
-        local.groupBy("q_id")
-        .agg(F.min(F.struct("dist", F.col("c_id").alias("c_id"))).alias("b"))
-        .select(
-            F.col("q_id").alias("series_id"),
-            F.col("b.c_id").alias("nn_id"),
-            F.col("b.dist").cast("bigint").alias("dist"),
-        )
+    cols = [*keys, "series_id", F.col("word").cast("bigint").alias("word"), "cnt"]
+    return _chunked_1nn(
+        test_bags.select(*cols),
+        train_bags.select(*cols),
+        keys,
+        n_chunks,
+        _block,
+        LongType(),
     )
 
 
@@ -244,37 +203,16 @@ def shotgun_1nn(
     argmin candidate. Window normalization: σ-divide with σ < 1e-8 → 1,
     mean-subtract iff norm_mean.
 
-    Scale plan: the corpus is hash-CHUNKED; queries are replicated to
-    every chunk (a classification query set is broadcast-sized); each
-    chunk group resolves its local argmin with one Arrow-batched numpy
-    matmul cascade; a final min(struct(dist, c_id)) merges chunks.
-    Work is the same O(|Q|·|C|·n·w) as the reference's nested loop but
-    spread over n_chunks partitions with BLAS constants — no
-    w-amplified crossJoin of exploded window rows (the former plan
-    shuffled |Q|·n/w × |C|·n pair ROWS; this ships each series array
-    once per chunk).
+    Runs on the chunked 1-NN plan: each chunk group resolves its local
+    argmin with a numpy matmul per (query, candidate) pair. Work is the
+    same O(|Q|·|C|·n·w) as the reference's nested loop, spread over
+    n_chunks (default defaultParallelism) partitions with BLAS
+    constants; each series array ships once per chunk.
 
     Output: (series_id, nn_id, dist).
     """
-    import numpy as np
-    import pandas as pd
-
     spark = query_arrays.sparkSession
-    P = int(n_chunks or spark.sparkContext.defaultParallelism)
     w_len, nm = int(window), bool(norm_mean)
-
-    chunks = spark.range(P).select(F.col("id").cast("int").alias("chunk"))
-    q = (
-        query_arrays.where(F.size("values") >= w_len)
-        .select("series_id", "values", F.lit(True).alias("is_q"))
-        .join(F.broadcast(chunks))
-    )
-    c = corpus_arrays.where(F.size("values") >= w_len).select(
-        "series_id",
-        "values",
-        F.lit(False).alias("is_q"),
-        F.pmod(F.hash("series_id"), F.lit(P)).cast("int").alias("chunk"),
-    )
 
     def _norm(m):
         mu = m.mean(axis=1, keepdims=True)
@@ -282,11 +220,8 @@ def shotgun_1nn(
         inv = 1.0 / np.where(sd < 1e-8, 1.0, sd)
         return (m - mu) * inv if nm else m * inv
 
-    def _group(kv, pdf):
-        qs = pdf[pdf["is_q"]].sort_values("series_id")
-        cs = pdf[~pdf["is_q"]].sort_values("series_id")
-        if not len(qs) or not len(cs):
-            return pd.DataFrame({"q_id": [], "c_id": [], "dist": []})
+    def _block(qs, cs):
+        qs, cs = qs.sort_values("series_id"), cs.sort_values("series_id")
         c_mats = []
         for cid, vals in zip(cs["series_id"], cs["values"]):
             x = np.asarray(vals, dtype=np.float64)
@@ -307,60 +242,20 @@ def shotgun_1nn(
             out_q.append(int(qid))
             out_c.append(best_c)
             out_d.append(best_d)
-        return pd.DataFrame(
-            {
-                "q_id": pd.Series(out_q, dtype="int64"),
-                "c_id": pd.Series(out_c, dtype="int64"),
-                "dist": pd.Series(out_d, dtype="float64"),
-            }
+        return (
+            np.asarray(out_q, dtype=np.int64),
+            np.asarray(out_c, dtype=np.int64),
+            np.asarray(out_d, dtype=np.float64),
         )
 
-    local = (
-        q.unionByName(c)
-        .groupBy("chunk")
-        .applyInPandas(_group, schema="q_id bigint, c_id bigint, dist double")
-    )
-    return (
-        local.groupBy("q_id")
-        .agg(F.min(F.struct(F.col("dist"), F.col("c_id").alias("c_id"))).alias("b"))
-        .select(
-            F.col("q_id").alias("series_id"),
-            F.col("b.c_id").alias("nn_id"),
-            F.col("b.dist").alias("dist"),
-        )
-    )
+    def _arrays(df):
+        return df.where(F.size("values") >= w_len).select("series_id", "values")
 
-
-def euclidean_knn_long(
-    query_long: DataFrame, corpus_long: DataFrame, k: int
-) -> DataFrame:
-    """Brute-force ED k-NN between equal-length long-form series.
-
-    Join on pos → Σ(a−b)² per pair → top-k per query. This is the
-    correctness oracle for the indexed two-phase search (plans/index.py);
-    at scale the join is pos-partitioned and the pair aggregation is the
-    only wide shuffle.
-    Output: (series_id, nn_id, dist, rk).
-    """
-    qq = query_long.select(
-        F.col("series_id").alias("q_id"), "pos", F.col("value").alias("qv")
-    )
-    cc = corpus_long.select(
-        F.col("series_id").alias("c_id"), "pos", F.col("value").alias("cv")
-    )
-    d = (
-        qq.join(cc, "pos")
-        .groupBy("q_id", "c_id")
-        .agg(F.sum((F.col("qv") - F.col("cv")) ** 2).alias("sqdist"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("sqdist").asc(), F.col("c_id").asc())
-    return (
-        d.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(
-            F.col("q_id").alias("series_id"),
-            F.col("c_id").alias("nn_id"),
-            F.sqrt("sqdist").alias("dist"),
-            "rk",
-        )
+    return _chunked_1nn(
+        _arrays(query_arrays),
+        _arrays(corpus_arrays),
+        (),
+        n_chunks or spark.sparkContext.defaultParallelism,
+        _block,
+        DoubleType(),
     )

@@ -1,9 +1,10 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-  * brute-force cosine top-k — the correctness baseline. The dot
-    product is a JVM-side zip_with/aggregate fold (deterministic
+  * brute-force cosine top-k — the correctness baseline, one arm. The
+    dot product is a JVM-side zip_with/aggregate fold (deterministic
     left-to-right summation — reproducible across runs AND mirrorable
-    in an oracle), no Python.
+    in an oracle), no Python, no construction-time collect; the same
+    fold scores hard-negative mining.
   * sign-bucket IVF — the scale path: a cheap coarse quantizer (sign
     bits of the first b dims) buckets vectors; queries probe only their
     bucket. Same two-phase signature→partition→verify shape as the SFA
@@ -22,11 +23,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# corpus size estimate (bytes) from which exact cosine scores with the
-# Arrow GEMM instead of the JVM fold; see _brute_cosine_rank
-GEMM_MIN_BYTES = 16 << 20
-
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -68,61 +64,17 @@ def _brute_cosine_rank(
     excl_pair: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Shared exact-scan core: broadcast the (small) query side, scan
-    the corpus once, score cosine, rank per query. ``q_carry``/
-    ``c_carry`` pass extra columns through; ``excl_pair=(q_col,
-    c_col)`` prunes pairs whose carried values are EQUAL before
-    ranking (hard_negatives' same-label exclusion).
+    the corpus once, score cosine with the JVM dot-product fold, rank
+    per query. ``q_carry``/``c_carry`` pass extra columns through;
+    ``excl_pair=(q_col, c_col)`` prunes pairs whose carried values are
+    EQUAL before ranking (hard_negatives' same-label exclusion).
 
-    Large-corpus path (r9): one GEMM per Arrow batch (guide §4.2 —
-    hand whole batches to BLAS instead of folding per pair). The JVM
-    zip_with/aggregate fold evaluates an interpreted lambda per
-    vector element per PAIR — |C|·|Q|·d evaluations, linear in the
-    corpus at ~10 s per million 64-dim rows on this box, where the
-    same scores are one BLAS matmul. Each task reshapes its batch's
-    flat float buffer, scores all queries at once, and emits only its
-    per-batch top-k candidates per query (top-k is distributive: a
-    pair outside a batch's top-k cannot be in the global top-k, which
-    the final window still resolves exactly, including the (cosine
-    desc, nn_id asc) tie order and Spark's NaN-largest DESC
-    placement). Scores differ from the fold only by float64
-    reassociation, absorbed by the declared 4-dp rounding and the
-    oracle's +1e-9 nudge — verified green at sf0.001/0.01/0.1.
-
-    The switch is SIZE-ADAPTIVE (measured crossover, interleaved
-    noop A/Bs): the GEMM pays ~0.4-0.5 s fixed — a
-    construction-time collect of the query side plus Python worker
-    spin-up — so at 20k corpus rows (sf1, 5.7 MB) the fold wins
-    (1.10 vs 1.50 s) while at 500k rows (42 MB estimated) the GEMM
-    wins (3.6 vs 5.1 s) and the gap grows linearly with |C|. The GEMM
-    runs when the optimizer's corpus size estimate is at least
-    GEMM_MIN_BYTES (16 MB ≈ the ~200k-row crossover); streaming frames
-    and corpora without a size estimate always fold.
-    """
-    if queries.isStreaming or corpus.isStreaming or not _gemm_sized(corpus):
-        return _brute_cosine_rank_fold(
-            queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-        )
-    return _brute_cosine_rank_gemm(
-        queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-    )
-
-
-def _gemm_sized(corpus: DataFrame) -> bool:
-    try:
-        est = int(
-            str(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: fold
-        return False
-    # estimates near Long.MaxValue mean "unknown" (Spark's
-    # defaultSizeInBytes for un-stat'd relations) — fold then
-    return GEMM_MIN_BYTES <= est < (1 << 62)
-
-
-def _brute_cosine_rank_fold(
-    queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-) -> DataFrame:
-    """The pre-r9 JVM fold form — streaming-safe reference path."""
+    Lazy and streaming-safe: no construction-time collect and no
+    Python worker. The fold evaluates one lambda per vector element
+    per pair, linear in |C|·|Q|·d: ~10 s per million 64-dim corpus
+    rows (measured r9), where one BLAS matmul per Arrow batch would
+    win. No corpus here comes near that: the optimizer estimates the
+    sf1 embeddings (20k rows) at 5.6 MB."""
     from sfa_spark.sources.events import spread_scan
 
     q = with_norm(queries, vec_col).select(
@@ -159,116 +111,6 @@ def _brute_cosine_rank_fold(
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("int"))
         .where(F.col("rk") <= k)
-    )
-
-
-def _brute_cosine_rank_gemm(
-    queries, corpus, k, vec_col, id_col, nn_id, q_carry, c_carry, excl_pair
-) -> DataFrame:
-    """Arrow-batched GEMM scorer. The query side is collected (it is
-    broadcast-small by the operator's contract — same construction-time
-    collect as kmeans_fit's codebook); the corpus crosses the Python
-    boundary once as Arrow batches carrying only (id, vec, c_carry)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DoubleType, StructField, StructType
-    from sfa_spark.sources.events import spread_scan
-
-    q_excl = excl_pair[0] if excl_pair else None
-    c_excl = excl_pair[1] if excl_pair else None
-
-    q_sel = queries.select(
-        F.col(id_col).alias("q_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-        *q_carry,
-    )
-    q_rows = sorted(q_sel.collect(), key=lambda r: r["q_id"])
-    Q = np.array([list(r["qv"]) for r in q_rows], dtype=np.float64)
-    qn = np.sqrt((Q * Q).sum(axis=1)) if Q.size else np.zeros(len(q_rows))
-    q_ids = [r["q_id"] for r in q_rows]
-    q_carry_vals = {c: [r[c] for r in q_rows] for c in q_carry}
-    d = Q.shape[1] if Q.ndim == 2 and Q.size else 0
-    kk = int(k)
-
-    c_sel = spread_scan(corpus, id_col).select(
-        F.col(id_col).alias(nn_id),
-        _as_double(F.col(vec_col)).alias("cv"),
-        *c_carry,
-    )
-    q_fields = {f.name: f for f in q_sel.schema.fields}
-    c_fields = {f.name: f for f in c_sel.schema.fields}
-    out_schema = StructType(
-        [q_fields["q_id"]]
-        + [q_fields[c] for c in q_carry]
-        + [c_fields[nn_id]]
-        + [c_fields[c] for c in c_carry]
-        + [StructField("cosine", DoubleType())]
-    )
-    pa_schema = to_arrow_schema(out_schema)
-
-    def _score(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0 or not q_ids:
-                continue
-            vec = b.column("cv")
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            assert flat.size == n * d, (
-                f"ragged {vec_col}: {flat.size} values for {n} rows of dim {d}"
-            )
-            X = flat.reshape(n, d)
-            cn = np.sqrt((X * X).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                S = (X @ Q.T) / (cn[:, None] * qn[None, :])
-            c_ids = b.column(nn_id).to_numpy(zero_copy_only=False)
-            c_excl_v = (
-                b.column(c_excl).to_numpy(zero_copy_only=False) if c_excl else None
-            )
-            sel_i, sel_j = [], []
-            for j in range(len(q_ids)):
-                valid = c_ids != q_ids[j]
-                if c_excl_v is not None:
-                    valid &= c_excl_v != q_carry_vals[q_excl][j]
-                idx = np.flatnonzero(valid)
-                if idx.size == 0:
-                    continue
-                s = S[idx, j]
-                # Spark DESC order: NaN first, then -cosine, then nn_id
-                nan_rank = np.where(np.isnan(s), 0, 1)
-                order = np.lexsort((c_ids[idx], np.negative(s), nan_rank))[:kk]
-                pick = idx[order]
-                sel_i.append(pick)
-                sel_j.append(np.full(pick.size, j, dtype=np.int64))
-            if not sel_i:
-                continue
-            ii = np.concatenate(sel_i)
-            jj = np.concatenate(sel_j)
-            take = pa.array(ii)
-            arrays = [
-                pa.array([q_ids[j] for j in jj], type=pa_schema.field("q_id").type)
-            ]
-            for c in q_carry:
-                arrays.append(
-                    pa.array(
-                        [q_carry_vals[c][j] for j in jj],
-                        type=pa_schema.field(c).type,
-                    )
-                )
-            arrays.append(b.column(nn_id).take(take))
-            for c in c_carry:
-                arrays.append(b.column(c).take(take))
-            arrays.append(pa.array(S[ii, jj], type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa_schema)
-
-    scored = c_sel.mapInArrow(_score, out_schema)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col(nn_id).asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .where(F.col("rk") <= kk)
     )
 
 

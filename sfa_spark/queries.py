@@ -361,21 +361,14 @@ def _adaptive_chunks(
 
 
 def q_boss_1nn(spark, sf_dir):
-    """BOSS 1-NN over the corpus split — on the dense blocked-BLAS
-    path (knn.boss_1nn_blocked), which is semantically identical to
-    the sparse word-join boss_1nn but linear-shuffle: SFA's small
-    fixed vocabulary makes the word join quadratic in series count
-    (measured at sf10: ~78 GB spill, OOM-by-disk), while the blocked
-    form ships each bag once per corpus chunk and resolves block
-    argmins in two exact GEMMs. The sparse path remains the keyed
-    grid-fit route (bounded UCR-size inputs).
-
-    r8: the chunk count adapts to the input size instead of pinning to
-    the core count, which cuts fixed per-task overhead at small scale;
-    at sf10 the chunk count still saturates the cluster (clamped to
+    """BOSS 1-NN over the corpus split (knn.boss_1nn: the corpus is
+    hash-chunked, each bag ships once per chunk, block argmins are two
+    exact GEMMs). The chunk count adapts to the input size instead of
+    pinning to the core count, which cuts fixed per-task overhead at
+    small scale; at sf10 it still saturates the cluster (clamped to
     defaultParallelism)."""
     train, test = _split_bags(spark, sf_dir)
-    nn = knn.boss_1nn_blocked(test, train, n_chunks=_adaptive_chunks(spark, sf_dir))
+    nn = knn.boss_1nn(test, train, n_chunks=_adaptive_chunks(spark, sf_dir))
     return nn.select("series_id", "nn_id", F.col("dist").cast("bigint").alias("dist"))
 
 

@@ -15,6 +15,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """Half the box's physical memory, capped at 16g. A heap the size of
+    RAM is not safe: G1 grows toward it, and on a 16 GB box the
+    driver JVM's RSS passed 14 GB and was killed for lack of memory."""
+    try:
+        half_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (2 << 20)
+    except (ValueError, OSError):  # sysconf name unknown on this OS
+        return "16g"
+    return f"{min(half_mib, 16 << 10)}m"
+
+
 def get_spark(
     app_name: str = "sfa-spark",
     master: str | None = None,
@@ -53,10 +64,12 @@ def get_spark(
         # epoch_ns() to agree).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # local[N] runs driver+executors in ONE JVM — size the heap for
-        # 32 concurrent tasks plus cached grid tables. On a real
-        # cluster executor memory is configured separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # local[N] runs driver+executors in ONE JVM; on a real cluster
+        # executor memory is configured separately.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
+        )
         .config("spark.ui.enabled", "false")
         # the status store retains full plan-description strings per SQL
         # execution EVEN with the UI off (default 1000 executions); the

@@ -1,5 +1,3 @@
-import os
-
 import pytest
 
 from sfa_spark.session import get_spark
@@ -7,11 +5,6 @@ from sfa_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # The session's 16g default heap is the whole RAM of a 16 GB box,
-    # and G1 grows toward it: over the Tier-1 run the driver JVM's RSS
-    # passed 14 GB and the JVM was killed for lack of memory. The tests'
-    # live data needs a few GB; SPARK_GRAFT_DRIVER_MEM still overrides.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
     s = get_spark("sfa-tests", shuffle_partitions=8)
     yield s
 

@@ -50,7 +50,7 @@ def _acc(pred, te):
     return r or 0.0
 
 
-def test_boss_grid_ensemble(synth):
+def test_boss_grid_ensemble(synth, plan_node_names):
     tr, te = synth
     m = grid.boss_ensemble_grid_fit(
         tr.select("series_id", "values"),
@@ -60,7 +60,11 @@ def test_boss_grid_ensemble(synth):
     assert len(m.members) >= 1
     # all members share the winning norm
     assert len({x.nm for x in m.members}) == 1
-    assert _acc(m.predict(te.select("series_id", "values")), te) >= 0.8
+    pred = m.predict(te.select("series_id", "values"))
+    assert _acc(pred, te) >= 0.8
+    # the member and word-length tables are local relations, not scans
+    # of a Python RDD
+    assert plan_node_names(pred)["RDDScanExec"] == 0
 
 
 def test_bossvs_grid(synth):

@@ -229,51 +229,6 @@ def test_cosine_topk_matches_numpy(spark):
         assert S[r["q_id"], r["nn_id"]] == pytest.approx(r["cosine"], abs=1e-9)
 
 
-def test_brute_cosine_gemm_matches_fold(spark, monkeypatch, tmp_path):
-    """r9: the Arrow GEMM scorer must return the SAME rows as the JVM
-    fold path — ids and ranks exactly, cosine to fp tolerance — for
-    both the plain top-k and the excl_pair (hard_negatives) shapes.
-    The corpus is a parquet scan, so the optimizer has the size
-    estimate the arm choice reads."""
-    rng = np.random.default_rng(11)
-    E = rng.normal(0, 1, (60, 16))
-    spark.createDataFrame(
-        [(i, [float(x) for x in row], int(i % 3)) for i, row in enumerate(E)],
-        "vec_id long, embedding array<double>, label int",
-    ).write.parquet(str(tmp_path / "emb"))
-    df = spark.read.parquet(str(tmp_path / "emb"))
-
-    def rows(res, keys):
-        return sorted(
-            (tuple(r[k] for k in keys), round(r["cosine"], 9))
-            for r in res.collect()
-        )
-
-    # force each arm through the size threshold: 0 → every corpus
-    # scores with the GEMM, 2**62 → none does
-    monkeypatch.setattr(similarity, "GEMM_MIN_BYTES", 0)
-    gemm = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    gemm_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.setattr(similarity, "GEMM_MIN_BYTES", 1 << 62)
-    fold = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    fold_hn = similarity.hard_negatives(df.where("vec_id < 4"), df, k=5)
-    monkeypatch.undo()
-    assert rows(gemm, ("q_id", "nn_id", "rk")) == rows(fold, ("q_id", "nn_id", "rk"))
-    ks = ("q_id", "q_label", "neg_id", "neg_label", "rk")
-    assert rows(gemm_hn, ks) == rows(fold_hn, ks)
-    # the exclusion really applied
-    assert all(r["q_label"] != r["neg_label"] for r in gemm_hn.collect())
-
-    # plan shapes: the GEMM arm crosses the Arrow boundary, the fold
-    # does not; at the default threshold a tiny corpus folds
-    def arrow(df_):
-        return "MapInArrow" in df_._jdf.queryExecution().executedPlan().toString()
-
-    assert arrow(gemm) and not arrow(fold)
-    auto = similarity.cosine_topk(df.where("vec_id < 4"), df, k=5)
-    assert not arrow(auto)
-
-
 def test_bucketed_neighbors_subset_of_bucket(spark):
     rng = np.random.default_rng(4)
     E = rng.normal(0, 1, (50, 8))

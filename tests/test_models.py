@@ -125,41 +125,111 @@ def test_chi2_uniform_is_zero(spark):
     assert all(abs(r["chi2"]) < 1e-9 for r in rows)
 
 
+def _brute_boss_1nn(test, train, loo):
+    """Pure-Python BOSSEnsembleClassifier.predict (java:184-236): the
+    asymmetric distance over the query's words, a candidate accepted
+    only when dist != the no-match distance (sumsq of the query) and
+    dist > 0, ties to the smaller id, no entry without an accepted
+    candidate."""
+    out = {}
+    for qid, q in test.items():
+        no_match = sum(v * v for v in q.values())
+        best = None
+        for cid in sorted(train):
+            if loo and cid == qid:
+                continue
+            d = sum((qv - train[cid].get(w, 0)) ** 2 for w, qv in q.items())
+            if d != no_match and d > 0 and (best is None or d < best[1]):
+                best = (cid, d)
+        if best is not None:
+            out[qid] = best
+    return out
+
+
 def test_boss_1nn_vs_bruteforce(spark):
+    """knn.boss_1nn against an independent brute force, over loo, key
+    columns and chunk counts (1, 3, 4: the chunk merge), with word ids
+    ≥ 2^22 and < 0 (the group's own word index takes any bigint).
+    Planted per key group: a candidate identical to a query's bag
+    (dist 0), one sharing no word with any query (corr 0), one whose
+    only shared word cancels to the no-match distance (c = 2q), and an
+    exact tie between two candidates."""
     import numpy as np
 
-    rng = np.random.default_rng(1)
-    n_train, n_test, vocab = 12, 4, 20
-    train = {i: {int(w): int(rng.integers(1, 5)) for w in rng.choice(vocab, 6, replace=False)} for i in range(n_train)}
-    test = {100 + i: {int(w): int(rng.integers(1, 5)) for w in rng.choice(vocab, 6, replace=False)} for i in range(n_test)}
+    rng = np.random.default_rng(7)
+    vocab = np.unique(
+        np.concatenate(
+            [
+                rng.choice(40, 10, replace=False),
+                rng.integers(1 << 22, 1 << 40, 10),
+                rng.integers(-(1 << 40), 0, 10),
+            ]
+        )
+    )
+    spare = [int(vocab.max()) + 1 + i for i in range(4)]  # no query holds these
 
-    def dist(q, c):
-        return sum((qv - c.get(w, 0)) ** 2 for w, qv in q.items())
+    def corpus(seed):
+        r = np.random.default_rng(seed)
+        bag = lambda: {
+            int(w): int(r.integers(1, 6)) for w in r.choice(vocab, 8, replace=False)
+        }
+        test = {100 + i: bag() for i in range(10)}
+        train = {i: bag() for i in range(30)}
+        train[200] = dict(test[100])
+        train[201] = {w: 3 for w in spare[1:]}
+        w0 = next(iter(test[102]))
+        train[202] = {w0: 2 * test[102][w0], spare[0]: 1}
+        near = dict(test[101])
+        near[next(iter(near))] += 1
+        train[300], train[301] = dict(near), dict(near)
+        return test, train
 
-    expected = {}
-    for qid, q in test.items():
-        best = min(train, key=lambda cid: (dist(q, train[cid]), cid))
-        expected[qid] = (best, dist(q, train[best]))
+    key_cases = {(): [()], ("nm", "f"): [(True, 6), (True, 8), (False, 8)]}
+    for keys, groups in key_cases.items():
+        data = {g: corpus(i) for i, g in enumerate(groups)}
+        for loo in (False, True):
+            expected, rows_q, rows_c = {}, [], []
+            for g, (test, train) in data.items():
+                if loo:
+                    test = train = {**test, **train}
+                for qid, hit in _brute_boss_1nn(test, train, loo).items():
+                    expected[(*g, qid)] = hit
+                rows_q += [(*g, s, w, c) for s, b in test.items() for w, c in b.items()]
+                rows_c += [(*g, s, w, c) for s, b in train.items() for w, c in b.items()]
+            # the planted candidates really are skipped or tie-broken
+            for g in groups:
+                assert expected[(*g, 100)][0] != 200
+                assert expected[(*g, 101)] == (300, 1)
+                assert expected[(*g, 102)][0] != 202
+                assert (*g, 201) not in expected
+                assert all(v[0] != 201 for v in expected.values())
+            schema = "".join(f"{k} {t}, " for k, t in zip(keys, ("boolean", "int")))
+            schema += "series_id long, word long, cnt long"
+            q_df = spark.createDataFrame(rows_q, schema)
+            c_df = q_df if loo else spark.createDataFrame(rows_c, schema)
+            for n_chunks in (1, 3, 4):
+                got = {
+                    (*(r[k] for k in keys), r["series_id"]): (r["nn_id"], r["dist"])
+                    for r in knn.boss_1nn(
+                        q_df, c_df, loo=loo, keys=keys, n_chunks=n_chunks
+                    ).collect()
+                }
+                assert got == expected, (keys, loo, n_chunks)
 
-    to_df = lambda bags: spark.createDataFrame(
+
+def _boss_bags_df(spark, bags):
+    return spark.createDataFrame(
         [(sid, w, c) for sid, b in bags.items() for w, c in b.items()],
         "series_id long, word long, cnt long",
     )
-    got = {
-        r["series_id"]: (r["nn_id"], r["dist"])
-        for r in knn.boss_1nn(to_df(test), to_df(train)).collect()
-    }
-    assert got == expected
 
 
 def test_boss_1nn_blocked_dense_vocab(spark):
-    """The dense blocked-BLAS path (word id = dense column index) must
-    be BIT-identical to the sparse word-join path — same argmin, same
-    exact integer distances, same acceptance rule (zero-overlap and
-    identical-bag candidates skipped), same smaller-nn_id tie-break —
-    with one and with several corpus chunks, so the chunk merge is
-    exercised. Absent-word columns are all-zero on both sides and
-    cancel in every distance term."""
+    """A dense small vocabulary (every query word shared by many
+    candidates) gives the same exact integer distances, argmin,
+    acceptance rule (zero-overlap and identical-bag candidates
+    skipped) and smaller-nn_id tie-break as the brute force, with one
+    and with several corpus chunks, so the chunk merge is exercised."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -178,63 +248,29 @@ def test_boss_1nn_blocked_dense_vocab(spark):
     train[200] = dict(test[100])
     train[201] = {w + vocab: 3 for w in range(4)}
 
-    to_df = lambda bags: spark.createDataFrame(
-        [(sid, w, c) for sid, b in bags.items() for w, c in b.items()],
-        "series_id long, word long, cnt long",
-    )
-    sparse = {
-        r["series_id"]: (r["nn_id"], r["dist"])
-        for r in knn.boss_1nn(to_df(test), to_df(train)).collect()
-    }
-    assert sparse.get(100, (None,))[0] != 200
-    assert all(nn != 201 for nn, _ in sparse.values())
+    expected = _brute_boss_1nn(test, train, loo=False)
+    assert expected.get(100, (None,))[0] != 200
+    assert all(nn != 201 for nn, _ in expected.values())
     for n_chunks in (1, 3, 4):
-        dense = {
+        got = {
             r["series_id"]: (r["nn_id"], r["dist"])
-            for r in knn.boss_1nn_blocked(
-                to_df(test), to_df(train), n_chunks=n_chunks
+            for r in knn.boss_1nn(
+                _boss_bags_df(spark, test), _boss_bags_df(spark, train), n_chunks=n_chunks
             ).collect()
         }
-        assert dense == sparse, n_chunks
+        assert got == expected, n_chunks
 
 
 def test_boss_1nn_blocked_loo(spark):
-    """loo=True must skip self-matches on the blocked path too."""
-    bags = spark.createDataFrame(
-        [(0, 1, 2), (0, 2, 1), (1, 1, 2), (1, 2, 1), (2, 1, 5)],
-        "series_id long, word long, cnt long",
-    )
-    sparse = {
+    """loo=True skips self-matches with the corpus split into chunks."""
+    bags = {0: {1: 2, 2: 1}, 1: {1: 2, 2: 1}, 2: {1: 5}}
+    df = _boss_bags_df(spark, bags)
+    got = {
         r["series_id"]: (r["nn_id"], r["dist"])
-        for r in knn.boss_1nn(bags, bags, loo=True).collect()
+        for r in knn.boss_1nn(df, df, loo=True, n_chunks=2).collect()
     }
-    blocked = {
-        r["series_id"]: (r["nn_id"], r["dist"])
-        for r in knn.boss_1nn_blocked(bags, bags, loo=True, n_chunks=2).collect()
-    }
-    assert blocked == sparse
-
-
-def test_euclidean_knn_exact(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(2)
-    corpus = rng.normal(0, 1, (8, 16))
-    to_long = lambda mat, base: spark.createDataFrame(
-        [
-            (base + i, int(p), float(v), 16)
-            for i, row in enumerate(mat)
-            for p, v in enumerate(row)
-        ],
-        "series_id long, pos long, value double, n long",
-    )
-    res = knn.euclidean_knn_long(to_long(corpus[:2], 100), to_long(corpus, 0), k=3)
-    for r in res.collect():
-        true = np.linalg.norm(corpus[r["series_id"] - 100] - corpus[r["nn_id"]])
-        assert abs(r["dist"] - true) < 1e-9
-    # rank-1 neighbor of a corpus member is itself
-    top = {r["series_id"]: r["nn_id"] for r in res.where("rk=1").collect()}
-    assert top == {100: 0, 101: 1}
+    assert got == _brute_boss_1nn(bags, bags, loo=True)
+    assert all(qid != nn for qid, (nn, _) in got.items())
 
 
 def test_stratified_folds_balanced(spark):
