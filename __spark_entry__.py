@@ -92,8 +92,9 @@ ROTATE_FIRST = [
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry-level cache contract: a registered query MAY persist()
-    intermediates reused within its own plan (words_df's coef table,
-    the TPC-H scalar-subquery aggregates, the spectral array gather)
+    intermediates reused within its own plan (the BOSS chain's
+    coefficient frame, the TPC-H scalar-subquery aggregates, the
+    spectral array gather)
     WITHOUT unpersisting — the harness that runs a query to completion
     (bench.py, tools/qtime.py, tools/check_oracle.py, the round
     driver) calls spark.catalog.clearCache() between queries. A

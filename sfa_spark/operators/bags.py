@@ -13,10 +13,12 @@ Reference parity:
 
 Everything here is lag/filter/groupBy — pure SQL, map-side combinable.
 The words input is (series_id, win, word) sorted within series; the lag
-window reuses the (series_id) partitioning. weasel_key_array is the
-numpy twin of weasel_keys over one series' words, for per-series Arrow
-UDFs (ml/classifiers.py WEASEL features); both take the key format
-from HIGHEST_BIT and the tag check from weasel_tag.
+window reuses the (series_id) partitioning. weasel_key_array and
+bag_counts are the numpy twins of weasel_keys and of numerosity_reduce
++ bag_of_words over one series' words, for per-series Arrow passes
+(ml/classifiers.py WEASEL features, the BOSS bags in queries.py); the
+two key forms take the key format from HIGHEST_BIT and the tag check
+from weasel_tag.
 """
 
 from __future__ import annotations
@@ -40,6 +42,14 @@ def numerosity_reduce(words: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame
         .where(F.col("_prev").isNull() | (F.col("word") != F.col("_prev")))
         .drop("_prev")
     )
+
+
+def bag_counts(words: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """numerosity_reduce + bag_of_words over ONE series' words in window
+    order: (distinct words ascending, their counts)."""
+    keep = np.ones(len(words), dtype=bool)
+    keep[1:] = words[1:] != words[:-1]
+    return np.unique(words[keep], return_counts=True)
 
 
 def bag_of_words(words: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:

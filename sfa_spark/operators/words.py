@@ -9,12 +9,21 @@ Reference parity:
 
 bigint word keys are deliberate: they shuffle/compare as primitives
 (Tungsten-optimal), exactly why the reference bit-packs too.
+
+window_paa and equi_width_words are the numpy twins of the SQL chain
+window_znorm → paa_long → quantize.equi_width_symbols → pack_words over
+ONE series' sliding windows, for per-series Arrow passes (the batch BOSS
+chain in queries.py, the streaming words operator).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sfa_spark.operators.quantize import EPS
+from sfa_spark.operators.window import EPS as STD_EPS
 
 
 def binlog(alphabet: int) -> int:
@@ -42,6 +51,38 @@ def paa_long(win_long: DataFrame, w: int, l: int, value_col: str = "value_z") ->
         .groupBy("series_id", "win", "seg")
         .agg(F.avg(value_col).alias("coef"))
     )
+
+
+def window_paa(vals: np.ndarray, w: int, l: int) -> np.ndarray:
+    """(n − w + 1, l) PAA coefficients of every sliding window of vals
+    by the row-z-norm spec: each window's mean and two-pass population
+    std (std < 1e-8 → 1), z-normalize its values, then the mean of each
+    of l equal segments (l | w). A series shorter than w has none."""
+    if len(vals) < w:
+        return np.zeros((0, l))
+    wins = np.lib.stride_tricks.sliding_window_view(vals, w)
+    mean = wins.mean(axis=1, keepdims=True)
+    std = wins.std(axis=1, keepdims=True)
+    z = (wins - mean) / np.where(std < STD_EPS, 1.0, std)
+    return z.reshape(len(wins), l, w // l).mean(axis=2)
+
+
+def equi_width_words(
+    coefs: np.ndarray, vmin: np.ndarray, vmax: np.ndarray, alphabet: int
+) -> np.ndarray:
+    """Packed int64 words of (windows, l) coefficients against per-seg
+    [vmin, vmax]: quantize.equi_width_symbols' rule in its operation
+    order, clamp(floor(((c − vmin)·a) / rng), 0, a − 1), symbol 0 when
+    rng < EPS, then pack_words' bit layout."""
+    bits = binlog(alphabet)
+    out = np.zeros(len(coefs), dtype=np.int64)
+    for seg in range(coefs.shape[1]):
+        rng = vmax[seg] - vmin[seg]
+        if rng < EPS:
+            continue
+        sym = np.floor(((coefs[:, seg] - vmin[seg]) * alphabet) / rng)
+        out |= np.clip(sym, 0, alphabet - 1).astype(np.int64) << (bits * seg)
+    return out
 
 
 def pack_words(

@@ -16,11 +16,18 @@ Flagship parameters: window w=16, PAA length l=4, alphabet a=4
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from sfa_spark.operators import bags, folds, knn, quantize, select, tfidf, window, words
-from sfa_spark.sources.events import load_table, series_from_events
+from sfa_spark.sources.events import (
+    load_table,
+    series_arrays_from_events,
+    series_from_events,
+)
 
 W, L, A = 16, 4, 4
 ROLL_W = 8
@@ -54,95 +61,83 @@ def series_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return series_from_events(load_table(spark, sf_dir, "events"))
 
 
-def coef_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → sliding windows → per-window znorm → PAA coefficients.
+def _coef_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(series_id, coefs array<array<double>>), one row per series of at
+    least W values: coefs[seg][win] is the PAA coefficient of segment
+    seg of sliding window win, z-normalized per window (words.window_paa,
+    the oracle's row-z-norm spec). One Arrow pass per series over
+    series_arrays_from_events; shorter series are dropped."""
 
-    Plan (r8): sliding explode (w× rows) → ONE hash aggregate straight
-    to (series, win, seg) partials → window-combine the l=4 segment
-    partials into per-window mean/std → coef = (seg_mean −
-    win_mean)/win_std. Division distributes over the segment mean, so
-    this equals z-normalizing every window row first and averaging.
-    The r1-r7 plan did exactly that, which forced a Sort + WindowExec
-    over the w×-amplified rows (1.6M at sf0.1) BEFORE the aggregate;
-    partial-aggregating first shrinks the sorted/windowed row count
-    w/l = 4× (guide §2.3 "aggregate before you shuffle" — here: before
-    you SORT) while the single series_id Exchange is unchanged.
-    Measured sf0.1 (qtime, min-of-3): q_sfa_words 0.81 → 0.55 s with
-    this + the words_df persist.
-
-    The DuckDB oracles mirror the row-znorm explode formulation as the
-    spec; this plan hash-matches it (the 4-dp rnd() nudge absorbs the
-    ulp-level reassociation differences exactly as it already absorbs
-    the Spark↔DuckDB aggregation-order differences; re-verified at
-    sf0.001/sf0.01/sf0.1 for every consumer of this chain).
-    σ-guard parity note (r9): the window std is combined from CENTERED
-    segment partials — per-seg var_pop (Spark's stable central-moment
-    aggregate) merged across the l segments with Chan's parallel
-    formula M2 = Σ cᵢ·varᵢ + Σ cᵢ·(meanᵢ − mean)² — so the computed
-    std cannot go negative and does not lose precision to the
-    E[x²]−E[x]² cancellation for near-constant or large-mean windows;
-    the <1e-8 → 1.0 guard therefore fires iff the window is genuinely
-    near-constant, matching the row-znorm spec's stddev_pop (itself
-    central-moment based) rather than relying on an input-domain
-    assumption. The combine is a second window layer over the SAME
-    (series_id, win) partitioning — no extra Exchange or Sort in the
-    plan, one extra WindowExec over the already-aggregated
-    (series×windows×l)-row table.
-    """
-    s = series_df(spark, sf_dir)
-    sw = window.sliding_long(s, W)
-    part = (
-        sw.withColumn("seg", F.floor(F.col("off") * L / W).cast("int"))
-        .groupBy("series_id", "win", "seg")
-        .agg(
-            F.avg("value").alias("_m"),
-            F.var_pop("value").alias("_v"),
-            F.count(F.lit(1)).alias("_c"),
+    @pandas_udf("array<array<double>>")
+    def _paa(vals: pd.Series) -> pd.Series:
+        return vals.map(
+            lambda v: words.window_paa(np.asarray(v, dtype=np.float64), W, L).T.tolist()
         )
+
+    arrays = series_arrays_from_events(load_table(spark, sf_dir, "events"))
+    return arrays.where(F.col("n") >= W).select("series_id", _paa("values").alias("coefs"))
+
+
+def coef_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Long form (series_id, win bigint, seg int, coef) of every sliding
+    window's PAA coefficients: _coef_arrays through two posexplodes."""
+    return (
+        _coef_arrays(spark, sf_dir)
+        .select("series_id", F.posexplode("coefs").alias("seg", "_c"))
+        .select("series_id", F.posexplode("_c").alias("win", "coef"), "seg")
+        .select("series_id", F.col("win").cast("bigint").alias("win"), "seg", "coef")
     )
-    wwin = Window.partitionBy("series_id", "win")
-    C = F.sum("_c").over(wwin)
-    mean = F.sum(F.col("_m") * F.col("_c")).over(wwin) / C
-    lay = part.select(
-        "series_id",
-        "win",
-        "seg",
-        "_m",
-        "_v",
-        "_c",
-        mean.alias("_mean"),
-        C.alias("_n"),
+
+
+def _word_pass(spark: SparkSession, sf_dir: str, bag: bool) -> DataFrame:
+    """Equi-width words of _coef_arrays in a second Arrow pass per
+    series: (series_id, win, word) rows, or with `bag` its bag of
+    patterns (series_id, word, cnt) after numerosity reduction.
+
+    The coefficient frame (one row per series) is persisted and read
+    twice: once by the one-row aggregate of every segment's min and max
+    (the equi-width fit), broadcast into the pass, and once by the pass
+    itself, which quantizes with words.equi_width_words and counts with
+    bags.bag_counts. Every integer output equals the SQL chain's
+    (equi_width_symbols → pack_words → numerosity_reduce →
+    bag_of_words): the bins are the min/max of the same doubles and the
+    symbol rule keeps its operation order. No window rows reach Spark."""
+    arr = _coef_arrays(spark, sf_dir).persist()
+    segs = [F.col("coefs")[s] for s in range(L)]
+    bins = arr.agg(
+        F.array(*[F.min(F.array_min(c)) for c in segs]).alias("vmin"),
+        F.array(*[F.max(F.array_max(c)) for c in segs]).alias("vmax"),
     )
-    dm = F.col("_m") - F.col("_mean")
-    m2 = F.sum(F.col("_v") * F.col("_c") + F.col("_c") * dm * dm).over(wwin)
-    std_raw = F.sqrt(m2 / F.col("_n"))
-    std = F.when(std_raw < 1e-8, F.lit(1.0)).otherwise(std_raw)
-    return lay.select("series_id", "win", "seg", (dm / std).alias("coef"))
+
+    names = ("series_id", "word", "cnt") if bag else ("series_id", "win", "word")
+
+    def run(batches):
+        for pdf in batches:
+            parts = []
+            for sid, c, lo, hi in zip(pdf["series_id"], pdf["coefs"], pdf["vmin"], pdf["vmax"]):
+                wd = words.equi_width_words(np.stack(c, axis=1), lo, hi, A)
+                x, y = bags.bag_counts(wd) if bag else (np.arange(len(wd)), wd)
+                parts.append((np.full(len(x), sid), x, y))
+            if parts:
+                yield pd.DataFrame(
+                    {n: np.concatenate(v).astype(np.int64) for n, v in zip(names, zip(*parts))}
+                )
+
+    return arr.crossJoin(F.broadcast(bins)).mapInPandas(
+        run, ", ".join(f"{n} bigint" for n in names)
+    )
 
 
 def words_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PAA coefficients → equi-width symbols → packed SFA words.
-
-    The coef table is persisted (r8): equi-width binning is inherently
-    two-pass — a global per-seg min/max fit plus the quantize join —
-    and without the persist the ENTIRE upstream chain (scan → explode
-    → aggregate → window) executed twice, once under the broadcast
-    stats aggregate and once on the probe side (both subtrees visible
-    in plans/r08/q_bag_topk_before.txt; only the scan Exchange was
-    AQE-reused). Guide §5: the chain is reused and recomputation costs
-    more than the (series×windows×l)-row cache; MEMORY_AND_DISK
-    default spills gracefully at scale. Harnesses clear the cache
-    between queries (bench.py / check_oracle.py), matching the
-    existing _split_bags / incremental_lsh_dedup persist convention.
-    """
-    coef = coef_df(spark, sf_dir).persist()
-    sym = quantize.equi_width_symbols(coef, A)
-    return words.pack_words(sym.select("series_id", "win", "seg", "symbol"), A)
+    """(series_id, win, word): every sliding window's packed SFA word
+    (equi-width symbols, A letters, L segments) — _word_pass."""
+    return _word_pass(spark, sf_dir, bag=False)
 
 
 def bag_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """words → numerosity reduction → bag-of-patterns counts."""
-    return bags.bag_of_words(bags.numerosity_reduce(words_df(spark, sf_dir)))
+    """(series_id, word, cnt): each series' bag of patterns after
+    numerosity reduction — _word_pass, with no window rows in Spark."""
+    return _word_pass(spark, sf_dir, bag=True)
 
 
 def _label(col="series_id"):
@@ -292,19 +287,16 @@ def q_anova_f(spark, sf_dir):
 
 
 def q_tfidf_fit(spark, sf_dir):
+    # the class count is fit_tfidf's in-plan scalar over the cached bag
     bag = bag_df(spark, sf_dir).persist().withColumn("label", _label())
-    # n_classes via one cheap job over the cached bag — keeps the
-    # countDistinct branch out of the broadcast-side fit chain (the
-    # r2 bench regression: the in-plan scalar re-ran the bag chain)
-    n_classes = bag.select(F.countDistinct("label")).collect()[0][0]
-    m = tfidf.fit_tfidf(bag, n_classes=n_classes)
+    m = tfidf.fit_tfidf(bag)
     return m.select("label", "word", rnd("weight", 4).alias("weight"))
 
 
 def _split_bags(spark, sf_dir):
     # persist: the bag feeds multiple plan branches (train/test filters,
-    # tf totals, distance probes) — materialize the explode-heavy chain
-    # once. Bag size is bounded (≤ series × vocab), safe to cache.
+    # tf totals, distance probes) — run the word pass once. Bag size is
+    # bounded (≤ series × vocab), safe to cache.
     bag = bag_df(spark, sf_dir).persist()
     test = bag.where(F.col("series_id") % TEST_MOD == 0)
     train = bag.where(F.col("series_id") % TEST_MOD != 0)
@@ -313,10 +305,7 @@ def _split_bags(spark, sf_dir):
 
 def q_tfidf_predict(spark, sf_dir):
     train, test = _split_bags(spark, sf_dir)
-    train_l = train.withColumn("label", _label())
-    # explicit n_classes (cheap job on the cached bag) — see q_tfidf_fit
-    n_classes = train_l.select(F.countDistinct("label")).collect()[0][0]
-    model = tfidf.fit_tfidf(train_l, n_classes=n_classes)
+    model = tfidf.fit_tfidf(train.withColumn("label", _label()))
     pred = tfidf.score_tfidf(test, model)
     return pred.select("series_id", F.col("pred_label").cast("bigint").alias("pred_label"))
 

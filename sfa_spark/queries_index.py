@@ -23,7 +23,7 @@ _INDEX_CACHE: dict[str, SFAIndex] = {}
 def _vec_arrays(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("series_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("values"),
+        F.col("embedding").cast("array<double>").alias("values"),
     )
 
 

@@ -73,60 +73,32 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     8-core ≈ 32-core walltime for the whole dedup family (VERDICT r8
     item 3).
 
-    When the scan yields fewer partitions than defaultParallelism,
-    hash-repartition by ``keys`` (deterministic under retry, unlike a
-    rand-derived key). The explicit partition count pins the exchange
-    against AQE's byte-based coalescing, which would fold a small but
-    compute-dense input back onto one core (its 1 MB/partition floor
-    measures bytes, not work). Downstream groupBy/window keyed on a
-    superset of ``keys`` reuses the partitioning, so the chain gains
-    NO second exchange — the one that previously ran AFTER the heavy
-    compute moves in front of it and carries the raw rows instead.
+    The rule: a file input of fewer files than defaultParallelism is
+    hash-repartitioned by ``keys`` (deterministic under retry, unlike a
+    rand-derived key). It reads only the plan's file list, so it plans
+    nothing and runs no job. A frame with no input files (local or
+    generated data) or whose last step is already a repartition keeps
+    the partitioning it was made with. The explicit partition count
+    pins the exchange against AQE's byte-based coalescing, which would
+    fold a small but compute-dense input back onto one core (its 1
+    MB/partition floor measures bytes, not work). Downstream
+    groupBy/window keyed on a superset of ``keys`` reuses the
+    partitioning, so the chain gains NO second exchange — the one that
+    previously ran AFTER the heavy compute moves in front of it and
+    carries the raw rows instead.
 
-    Scale behaviour: any real multi-file table yields >= cores scan
-    partitions and this is the identity — no extra pass of the corpus
-    at 100 TB, where the input split count, not this guard, provides
-    the parallelism. Streaming inputs pass through untouched.
+    Scale behaviour: any real multi-file table has >= cores files and
+    this is the identity — no extra pass of the corpus at 100 TB, where
+    the input split count, not this guard, provides the parallelism.
+    Streaming inputs pass through untouched.
     """
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        # cheap short-circuit: >= target input files always means >=
-        # target scan splits, skipping the physical-planning probe
-        # below — the common case on any real deployment
-        if len(df.inputFiles()) >= target:
-            return df
-    except Exception:  # noqa: BLE001 — non-file relations: fall through
-        pass
-    # memoize the probe per (app, conf-target, canonical plan): the
-    # probe is ~0.1 s of driver-side physical planning, and
-    # multi-reference plans (e.g. the two shingle subtrees of
-    # lsh_verified_dedup) would otherwise pay it once per reference.
-    # semanticHash keys on the CANONICALIZED plan, so a repartitioned
-    # or otherwise reshaped frame over the same files never shares an
-    # entry with the bare scan. Partition counts are METADATA — this
-    # never caches results across runs.
-    try:
-        memo_key = (sc.applicationId, target, df.semanticHash())
-    except Exception:  # noqa: BLE001
-        memo_key = None
-    if memo_key is not None and memo_key in _SPREAD_PROBE_CACHE:
-        n_scan = _SPREAD_PROBE_CACHE[memo_key]
-    else:
-        try:
-            n_scan = df.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — planning quirk: skip the guard
-            return df
-        if memo_key is not None:
-            _SPREAD_PROBE_CACHE[memo_key] = n_scan
-    if n_scan >= target:
+    root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if root.startswith("Repartition") or not 0 < len(df.inputFiles()) < target:
         return df
     return df.repartition(target, *[F.col(k) for k in keys])
-
-
-_SPREAD_PROBE_CACHE: dict[tuple, int] = {}
 
 
 def series_from_events(

@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from sfa_spark.operators import words as WD
+
 WORDS_OUTPUT = StructType(
     [
         StructField("series_id", LongType()),
@@ -45,35 +47,6 @@ WORDS_STATE = StructType(
 )
 
 
-def window_words_numpy(
-    vals: np.ndarray, w: int, l: int, a: int, stats: dict[int, tuple[float, float]]
-) -> np.ndarray:
-    """All windows of `vals` → packed words; mirrors the batch SQL chain
-    exactly (window z-norm with 1e-8 guard, integer-segment PAA,
-    equi-width clamp, 2-bit packing for a=4)."""
-    if len(vals) < w:
-        return np.zeros(0, dtype=np.int64)
-    wins = np.lib.stride_tricks.sliding_window_view(vals, w)
-    mean = wins.mean(axis=1, keepdims=True)
-    std = wins.std(axis=1, keepdims=True)
-    std = np.where(std < 1e-8, 1.0, std)
-    z = (wins - mean) / std
-    seg = z.reshape(len(wins), l, w // l).mean(axis=2)  # integer PAA (l | w)
-    bits = max(1, (a - 1).bit_length())
-    words = np.zeros(len(wins), dtype=np.int64)
-    for i in range(l):
-        vmin, vmax = stats[i]
-        rng = vmax - vmin
-        if rng < 1e-12:
-            sym = np.zeros(len(wins), dtype=np.int64)
-        else:
-            sym = np.clip(
-                np.floor((seg[:, i] - vmin) * a / rng), 0, a - 1
-            ).astype(np.int64)
-        words |= sym << (bits * i)
-    return words
-
-
 def stream_sfa_words(
     event_stream: DataFrame,
     stats: dict[int, tuple[float, float]],
@@ -84,8 +57,11 @@ def stream_sfa_words(
     """(user_id, ts, event_id, value) stream → (series_id, win, word).
 
     Each micro-batch emits exactly the windows that END inside it; the
-    w−1 tail carries across batches in state.
+    w−1 tail carries across batches in state. Words come from the batch
+    chain's kernels (words.window_paa, words.equi_width_words) against
+    the fitted per-seg (vmin, vmax).
     """
+    vmin, vmax = (np.array([stats[i][j] for i in range(l)]) for j in (0, 1))
 
     def fn(key, pdfs, state: GroupState):
         (sid,) = key
@@ -97,7 +73,7 @@ def stream_sfa_words(
             state.update((pos, tail))
             return
         concat = np.concatenate([np.asarray(tail, dtype=np.float64), new])
-        words = window_words_numpy(concat, w, l, a, stats)
+        words = WD.equi_width_words(WD.window_paa(concat, w, l), vmin, vmax, a)
         base = pos - len(tail)  # absolute index of concat[0]
         out = pd.DataFrame(
             {

@@ -26,6 +26,23 @@ def test_tfidf_weights_manual(spark):
     assert m[(0, 2)] == 0.0 and m[(1, 2)] == 0.0
 
 
+def test_tfidf_fit_builds_with_at_most_one_job(spark, sf_dir):
+    """Building q_tfidf_fit runs at most one Spark job (the parquet
+    schema read): the class count is fit_tfidf's in-plan scalar over the
+    cached bag, not a driver-side collect."""
+    from sfa_spark import queries as Q
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "tfidf-build")
+    try:
+        df = Q.q_tfidf_fit(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("tfidf-build")) <= 1
+    assert df.count() > 0
+    spark.catalog.clearCache()
+
+
 def test_tfidf_predict_argmax(spark):
     model = spark.createDataFrame(
         [(0, 1, 0.9), (0, 2, 0.1), (1, 2, 0.9), (1, 3, 0.3)],

@@ -366,3 +366,31 @@ def test_spread_scan_identity_when_parallel(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     wide = docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     assert spread_scan(wide, "doc_id") is wide
+
+
+def test_spread_scan_rule_is_file_count_and_runs_no_job(spark, tmp_path):
+    """spread_scan's rule is the input file count against
+    defaultParallelism: a 1-file input is hash-repartitioned to
+    defaultParallelism, an input of >= defaultParallelism files is left
+    as it is, and deciding runs no Spark job either way."""
+    from sfa_spark.sources.events import spread_scan
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    base = spark.range(400).select((F.col("id") % 40).alias("doc_id"), "id")
+    base.coalesce(1).write.parquet(str(tmp_path / "one"))
+    base.repartition(par).write.parquet(str(tmp_path / "many"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    many = spark.read.parquet(str(tmp_path / "many"))
+    assert len(one.inputFiles()) == 1 and len(many.inputFiles()) >= par
+
+    sc.setLocalProperty("spark.jobGroup.id", "spread-rule")
+    try:
+        spread_one = spread_scan(one, "doc_id")
+        spread_many = spread_scan(many, "doc_id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("spread-rule") == []
+    assert spread_many is many
+    assert spread_one.rdd.getNumPartitions() == par
+    assert sorted(spread_one.collect()) == sorted(one.collect())

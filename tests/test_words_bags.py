@@ -195,3 +195,104 @@ def test_weasel_tag_rejects_wide_tag():
     assert bags.weasel_tag(600, window_tag=3) == 3
     with pytest.raises(ValueError, match="window tag 600"):
         bags.weasel_tag(600)
+
+
+def _row_znorm_reference(vals, w, l, a, fit):
+    """Pure-Python loops over the row-z-norm spec and the SQL word
+    rules: per window its mean and population std (std < 1e-8 → 1),
+    z-normalized values, segment means; equi-width symbols against the
+    per-seg min/max of the coefficients of every series in `fit`;
+    2-bit packing; numerosity reduction; bag counts."""
+    import math
+    from collections import Counter
+
+    def coefs(x):
+        out = []
+        for s in range(len(x) - w + 1):
+            win = x[s : s + w]
+            mean = sum(win) / w
+            std = math.sqrt(sum((v - mean) ** 2 for v in win) / w)
+            std = 1.0 if std < 1e-8 else std
+            z = [(v - mean) / std for v in win]
+            k = w // l
+            out.append([sum(z[g * k : (g + 1) * k]) / k for g in range(l)])
+        return out
+
+    fitted = [c for x in fit for c in coefs(x)]
+    lo = [min(c[g] for c in fitted) for g in range(l)]
+    hi = [max(c[g] for c in fitted) for g in range(l)]
+    cs = coefs(vals)
+    wds = []
+    for c in cs:
+        word = 0
+        for g in range(l):
+            rng = hi[g] - lo[g]
+            sym = 0 if rng < 1e-12 else min(a - 1, max(0, math.floor(((c[g] - lo[g]) * a) / rng)))
+            word |= sym << (2 * g)
+        wds.append(word)
+    reduced = [x for i, x in enumerate(wds) if i == 0 or x != wds[i - 1]]
+    return cs, wds, reduced, Counter(reduced)
+
+
+def test_window_paa_words_bags_match_row_znorm_reference():
+    """The per-series kernels of the BOSS chain (words.window_paa,
+    words.equi_width_words, bags.bag_counts) against the pure-Python
+    spec: coefficients within 1e-9, words, numerosity-reduced words and
+    bag counts exactly equal. Random walks, a constant series, a
+    near-constant window (std < 1e-8), n == W; n < W has no windows."""
+    import numpy as np
+
+    w, l, a = 16, 4, 4
+    rng = np.random.default_rng(3)
+    walks = [np.cumsum(rng.normal(size=n)) for n in (40, 97, 200)]
+    near = np.concatenate([np.full(20, 3.0), 3.0 + 1e-10 * rng.normal(size=4), rng.normal(size=20)])
+    series = walks + [np.full(30, 5.0), near, rng.normal(size=w)]
+    assert words.window_paa(rng.normal(size=w - 1), w, l).shape == (0, l)
+
+    got = [words.window_paa(x, w, l) for x in series]
+    allc = np.concatenate(got)
+    vmin, vmax = allc.min(axis=0), allc.max(axis=0)
+    for x, c in zip(series, got):
+        ref_c, ref_w, ref_r, ref_bag = _row_znorm_reference(list(x), w, l, a, series)
+        assert c.shape == (len(x) - w + 1, l)
+        np.testing.assert_allclose(c, np.array(ref_c), rtol=0, atol=1e-9)
+        wd = words.equi_width_words(c, vmin, vmax, a)
+        assert wd.tolist() == ref_w
+        uniq, cnt = bags.bag_counts(wd)
+        keep = np.r_[True, wd[1:] != wd[:-1]]
+        assert wd[keep].tolist() == ref_r
+        assert dict(zip(uniq.tolist(), cnt.tolist())) == dict(ref_bag)
+    # a zero-range fit (one constant series) gives symbol 0 everywhere
+    const = words.window_paa(np.full(30, 5.0), w, l)
+    assert not words.equi_width_words(const, const.min(0), const.max(0), a).any()
+
+
+def test_bag_df_plans_no_window_rows(spark, sf_dir, plan_node_names):
+    """bag_df runs two Arrow passes over one row per series: its plan
+    (and the plan of the cached coefficient frame) has no Generate and
+    no WindowExec, and it reads at most 2 cached rows per series."""
+    from sfa_spark import queries as Q
+
+    spark.catalog.clearCache()
+    bag = Q.bag_df(spark, sf_dir)
+    assert bag.collect()
+    names = plan_node_names(bag, caches=set())
+    assert not [n for n in names if n.startswith("Generate") or n == "WindowExec"], names
+
+    stack = [bag._jdf.queryExecution().executedPlan()]
+    cached = 0
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "InMemoryTableScanExec":
+            cached += node.metrics().apply("numOutputRows").value()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    n_series = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id").distinct().count()
+    assert 0 < cached <= 2 * n_series, (cached, n_series)
+    spark.catalog.clearCache()
