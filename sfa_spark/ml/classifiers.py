@@ -28,7 +28,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -164,18 +164,6 @@ class BossVSModel:
         return folds.weighted_vote(allv)
 
 
-def sqrt_spaced_windows(min_w: int, max_w: int, count: int) -> list[int]:
-    """BOSS VS's √-spaced window sampling (BOSSVSClassifier.java:98-103):
-    denser at small windows, sparser at large — √-scale interpolation."""
-    import math
-
-    if count <= 1 or max_w <= min_w:
-        return [min_w]
-    lo, hi = math.sqrt(min_w), math.sqrt(max_w)
-    ws = {int(round((lo + (hi - lo) * i / (count - 1)) ** 2)) for i in range(count)}
-    return sorted(max(min_w, min(max_w, w)) for w in ws)
-
-
 def bossvs_fit(
     train_arrays: DataFrame,
     labels: DataFrame,
@@ -240,8 +228,6 @@ def _collect_bags(kept: DataFrame, all_sids: list):
     matrix (keys factorized in sorted order) — dense below the driver
     budget, CooRows (COO index arrays, memory ∝ nnz) above it. Struct
     keys (MUSE) land as Row — normalized to tuples for sorting."""
-    import numpy as np
-
     from sfa_spark.ml import linear
 
     pdf = kept.select("series_id", "key", "cnt").toPandas()
@@ -265,97 +251,6 @@ def _collect_bags(kept: DataFrame, all_sids: list):
     return keys, X
 
 
-# Above this estimated COO footprint (24 bytes per nnz: row + col +
-# value) the χ²-kept bag no longer fits the driver and the solve routes
-# to MLlib LogisticRegression over distributed SparseVectors instead of
-# a toPandas() collect. Module-level so tests can lower the gate.
-SOLVE_NNZ_BUDGET_BYTES = 2 << 30
-
-
-def _fit_mllib_lr(
-    kept: DataFrame,
-    labels: DataFrame,
-    key_schema: str,
-    max_iter: int,
-    reg_param: float,
-):
-    """Distributed escape hatch for the linear solve: same objective as
-    linear.fit_softmax ((1/n)Σ CE + λ·½‖W‖², intercept free, λ =
-    1/(C·n) — the documented MLlib-parity objective in ml/linear.py),
-    fit by MLlib's multinomial LogisticRegression on SparseVectors
-    assembled in-plan. The bag table is NEVER collected: only the
-    vocab-sized key index and the final (vocab × k) weight matrix touch
-    the driver — both are the same size as the weights table every
-    scoring path broadcasts anyway. Trade-off: ~1 treeAggregate job per
-    L-BFGS iteration vs. zero jobs for the driver solve — only worth it
-    past the nnz gate (SURVEY §2.6 M4/M5; PLANS.md row)."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.linalg import Vectors, VectorUDT
-    from pyspark.sql.functions import udf
-
-    # Vector assembly must cross into Python (no JVM SQL constructor
-    # for sparse vectors), but not row-at-a-time over pickle:
-    # useArrow=True ships the grouped (cidx, cnt) arrays to the worker
-    # as Arrow batches. A @pandas_udf cannot be used here — Arrow-based
-    # pandas serialization rejects UDT return types (VectorUDT), while
-    # the arrow-optimized scalar UDF carries the UDT through its SQL
-    # representation. This is the one Python boundary on the
-    # distributed-solve path; it runs once per training series.
-
-    spark = kept.sparkSession
-    n_train = labels.select("series_id").distinct().count()
-    label_map = [
-        r["label"] for r in labels.select("label").distinct().orderBy("label").collect()
-    ]
-    lab_idx_df = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {"label": label_map, "yidx": np.arange(len(label_map), dtype=float)}
-            ),
-            "label double, yidx double",
-        )
-    )
-    # deterministic vocab index: vocab is χ²/WORD_LIMIT-capped, so the
-    # single-partition row_number sort is bounded (and the weight table
-    # it indexes is driver-broadcast downstream regardless)
-    kidx = (
-        kept.select("key").distinct()
-        .withColumn("cidx", F.row_number().over(Window.orderBy("key")) - 1)
-    ).cache()
-    d = kidx.count()
-
-    @udf(VectorUDT(), useArrow=True)
-    def _to_vec(iv):
-        iv = sorted((int(i), float(c)) for i, c in iv or [])
-        return Vectors.sparse(d, [i for i, _ in iv], [c for _, c in iv])
-
-    feats = (
-        kept.join(F.broadcast(kidx), "key")
-        .groupBy("series_id")
-        .agg(F.collect_list(F.struct("cidx", "cnt")).alias("_iv"))
-    )
-    train = (
-        labels.select("series_id", "label").join(lab_idx_df, "label")
-        .join(feats, "series_id", "left")
-        .select("series_id", "yidx", _to_vec("_iv").alias("features"))
-    )
-    lam = 1.0 / (reg_param * max(n_train, 1))
-    lr = LogisticRegression(
-        featuresCol="features", labelCol="yidx", family="multinomial",
-        standardization=False, fitIntercept=True, regParam=lam,
-        elasticNetParam=0.0, maxIter=max_iter, tol=1e-7,
-    )
-    m = lr.fit(train)
-    W = m.coefficientMatrix.toArray()  # k × d
-    b = list(m.interceptVector.toArray())
-    key_rows = kidx.orderBy("cidx").collect()
-    kidx.unpersist()
-    weights = _weights_frame(
-        spark, [r["key"] for r in key_rows], W[:, [r["cidx"] for r in key_rows]], key_schema
-    )
-    return weights, b, label_map, None, None, None, None
-
-
 def _fit_local_softmax(
     kept: DataFrame,
     labels: DataFrame,
@@ -365,35 +260,24 @@ def _fit_local_softmax(
 ):
     """The reference's liblinear call, as a driver-local numpy solve
     (WEASELClassifier.java:35 — the solve is single-node there too;
-    featurization and scoring stay distributed). Returns
-    (weights_df, intercept, label_map, keys, X, y, all_sids).
-
-    Above SOLVE_NNZ_BUDGET_BYTES of estimated COO footprint the solve
-    routes to _fit_mllib_lr — no driver collect of the bags at all."""
+    featurization and scoring stay distributed): one collect of the
+    labels, one of the kept bag, then linear.fit_softmax on the driver.
+    Returns (weights_df, intercept, label_map)."""
     from sfa_spark.ml import linear
 
-    spark = kept.sparkSession
-    # persisted: the count and the bag collect (or the MLlib fit) would
-    # each re-run the whole χ² selection chain
-    kept = kept.persist()
-    try:
-        if kept.count() * 24 > SOLVE_NNZ_BUDGET_BYTES:
-            return _fit_mllib_lr(kept, labels, key_schema, max_iter, reg_param)
-        label_rows = labels.select("series_id", "label").collect()
-        label_map = sorted({r["label"] for r in label_rows})
-        lab_idx = {l: i for i, l in enumerate(label_map)}
-        all_sids = sorted({r["series_id"] for r in label_rows})
-        y = np.asarray(
-            [lab_idx[r["label"]] for r in sorted(label_rows, key=lambda r: r["series_id"])],
-            dtype=np.int64,
-        )
-        keys, X = _collect_bags(kept, all_sids)
-    finally:
-        kept.unpersist()
+    label_rows = labels.select("series_id", "label").collect()
+    label_map = sorted({r["label"] for r in label_rows})
+    lab_idx = {l: i for i, l in enumerate(label_map)}
+    all_sids = sorted({r["series_id"] for r in label_rows})
+    y = np.asarray(
+        [lab_idx[r["label"]] for r in sorted(label_rows, key=lambda r: r["series_id"])],
+        dtype=np.int64,
+    )
+    keys, X = _collect_bags(kept, all_sids)
     lam = 1.0 / (reg_param * max(len(all_sids), 1))
     model = linear.fit_softmax(X, y, len(label_map), lam, max_iter=max_iter)
-    weights = _weights_frame(spark, keys, model.W, key_schema)
-    return weights, model.b.tolist(), label_map, keys, X, y, all_sids
+    weights = _weights_frame(kept.sparkSession, keys, model.W, key_schema)
+    return weights, model.b.tolist(), label_map
 
 
 def _weights_frame(spark, keys: list, W: np.ndarray, key_schema: str) -> DataFrame:
@@ -512,7 +396,7 @@ def weasel_fit(
         limit=chi2_limit, word_limit=word_limit, key_col="key",
     )
     kept = select.filter_bags(key_bags, selected, key_col="key")
-    weights, intercept, label_map, *_ = _fit_local_softmax(
+    weights, intercept, label_map = _fit_local_softmax(
         kept, labels, "bigint", max_iter, reg_param
     )
     key_bags.unpersist()
@@ -530,111 +414,4 @@ def weasel_predict(
         model.intercept,
         model.label_map,
         with_scores=with_scores,
-    )
-
-
-# ---------------------------------------------------------------- MUSE
-
-@dataclass
-class MuseModel:
-    sfa_models: dict[tuple[int, int], sfa.SFAModel]  # (dim, window) → SFA
-    weights: DataFrame  # (key struct, w array<double> per class)
-    intercept: list[float]
-    label_map: list[float]
-
-
-def _muse_keys(words: DataFrame, dim: int, window: int, bigrams: bool) -> DataFrame:
-    """MUSE struct key {w, dim, word, word2} (reference MuseWord,
-    MUSE.java:152-183); unigrams have word2 = -1."""
-    uni = words.select(
-        "series_id",
-        F.struct(
-            F.lit(window).alias("w"),
-            F.lit(dim).alias("d"),
-            F.col("word").alias("word"),
-            F.lit(-1).cast("bigint").alias("word2"),
-        ).alias("key"),
-    )
-    if not bigrams:
-        return uni
-    wspec = Window.partitionBy("series_id").orderBy("win")
-    bi = (
-        words.withColumn("prev", F.lag("word", window).over(wspec))
-        .where(F.col("prev").isNotNull())
-        .select(
-            "series_id",
-            F.struct(
-                F.lit(window).alias("w"),
-                F.lit(dim).alias("d"),
-                F.col("prev").alias("word"),
-                F.col("word").alias("word2"),
-            ).alias("key"),
-        )
-    )
-    return uni.unionByName(bi)
-
-
-def muse_fit(
-    mv_arrays: DataFrame,
-    labels: DataFrame,
-    windows: list[int],
-    word_length: int = 4,
-    alphabet: int = 4,
-    histogram: str = "equi_depth",
-    chi2_limit: float = 2.0,
-    bigrams: bool = True,
-    max_iter: int = 25,
-    reg_param: float = 1.0,
-) -> MuseModel:
-    """MUSE (multivariate WEASEL, reference MUSEClassifier.java:163-268):
-    per (dimension × window) unsupervised SFA words → struct keys →
-    χ² → driver-local softmax solve.
-
-    mv_arrays: (series_id, dim, values array<double>)."""
-    dims = [r["dim"] for r in mv_arrays.select("dim").distinct().orderBy("dim").collect()]
-    sfa_models: dict[tuple[int, int], sfa.SFAModel] = {}
-    parts = []
-    for d in dims:
-        arr_d = mv_arrays.where(F.col("dim") == d).select("series_id", "values")
-        for w in windows:
-            m = sfa.fit(
-                arr_d, window=w, word_length=word_length, alphabet=alphabet,
-                histogram=histogram,
-            )
-            sfa_models[(d, w)] = m
-            words = sfa.transform_windowing(m, arr_d)
-            parts.append(_muse_keys(words, d, w, bigrams))
-    allk = parts[0]
-    for p in parts[1:]:
-        allk = allk.unionByName(p)
-    key_bags = bags.bag_of_keys(allk).cache()
-    selected = select.chi_squared(
-        key_bags.join(labels, "series_id"), limit=chi2_limit,
-        word_limit=10000, key_col="key",
-    )
-    kept = select.filter_bags(key_bags, selected, key_col="key")
-    weights, intercept, label_map, *_ = _fit_local_softmax(
-        kept, labels, "struct<w:int,d:int,word:bigint,word2:bigint>",
-        max_iter, reg_param,
-    )
-    key_bags.unpersist()
-    return MuseModel(sfa_models, weights, intercept, label_map)
-
-
-def muse_predict(model: MuseModel, mv_arrays: DataFrame, bigrams: bool = True) -> DataFrame:
-    parts = []
-    for (d, w), m in model.sfa_models.items():
-        arr_d = mv_arrays.where(F.col("dim") == d).select("series_id", "values")
-        words = sfa.transform_windowing(m, arr_d)
-        parts.append(_muse_keys(words, d, w, bigrams))
-    allk = parts[0]
-    for p in parts[1:]:
-        allk = allk.unionByName(p)
-    key_bags = bags.bag_of_keys(allk)
-    return _score_with_weights(
-        key_bags,
-        mv_arrays.select("series_id").distinct(),
-        model.weights,
-        model.intercept,
-        model.label_map,
     )

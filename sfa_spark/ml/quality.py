@@ -10,19 +10,20 @@ Classification", re-expressed Spark-first):
     bucket space (the hashing trick): one row-local explode + xxhash64
     mod D, then a per-doc (bucket, cnt) aggregate. Fully distributed,
     map-side combinable; vocabulary never materializes.
-  * solve — the same size-gated path as WEASEL/MUSE
-    (ml/classifiers._fit_local_softmax): driver CooRows softmax below
-    SOLVE_NNZ_BUDGET_BYTES, MLlib LogisticRegression over in-plan
-    SparseVectors above it. The reference's liblinear solve is
-    single-node too (WEASELClassifier.java:35); this reuses that
-    exact machinery on text bags instead of SFA-word bags.
+  * solve — the same driver-local solve as WEASEL
+    (ml/classifiers._fit_local_softmax, and weasel_grid_fit /
+    muse_grid_fit in ml/grid.py): one collect of the bags, then a
+    numpy softmax solve, dense below linear.DENSE_BUDGET_BYTES and
+    CooRows (driver memory ∝ nnz) above it. The reference's liblinear
+    solve is single-node too (WEASELClassifier.java:35); this reuses
+    that exact machinery on text bags instead of SFA-word bags.
   * scoring — broadcast weight join → per-doc decimal-summed logits →
     argmax (ml/classifiers._score_with_weights): distributed, one
     keyed join, never doc × vocab.
 
 At 100 TB: featurization is embarrassingly parallel; the bag aggregate
-shuffles once on doc_id; above the driver budget nothing but the
-D × k weight table leaves the cluster.
+shuffles once on doc_id; the solve holds the non-zeros of the bag on
+the driver (24 bytes each as COO).
 """
 
 from __future__ import annotations
@@ -119,7 +120,7 @@ def quality_fit(
     bags = hashed_ngram_bags(docs, n_buckets, bigrams).withColumnRenamed(
         "doc_id", "series_id"
     )
-    weights, intercept, label_map, *_ = _fit_local_softmax(
+    weights, intercept, _ = _fit_local_softmax(
         bags, lab, "bigint", max_iter=max_iter, reg_param=C
     )
     return QualityModel(weights, intercept, classes, n_buckets, bigrams)

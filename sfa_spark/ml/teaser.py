@@ -1,24 +1,26 @@
-"""TEASER early time-series classification (SURVEY §2.7 C9-C10).
+"""MTEASER early multivariate time-series classification (SURVEY §2.7 C11).
 
-Reference parity:
-  * fit — TEASERClassifier.fit (`/root/reference/src/main/java/sfa/classification/TEASERClassifier.java:138-195`):
-    S prefix snapshots (equal steps); a slave classifier per snapshot;
-    a master filter deciding whether to trust the slave; then a grid
-    over v ∈ 2..5 (consecutive identical accepted predictions) choosing
-    the v that maximizes harmonic mean(accuracy, earliness) on train.
-  * predict — (`TEASERClassifier.java:273-363`): walk snapshots
-    ascending, count consecutive identical accepted predictions, emit
-    at streak ≥ v; forced decision at the last snapshot.
+Reference: MTEASERClassifier
+(`src/main/java/sfa/classification/MTEASERClassifier.java`), the TEASER
+control flow (`TEASERClassifier.java:138-195,273-363`) over
+multivariate series:
+  * fit — S prefix snapshots (equal steps, capped at 250); a slave
+    classifier per snapshot; a master filter deciding whether to trust
+    the slave; then a grid over v (consecutive identical accepted
+    predictions) choosing the v that maximizes the harmonic mean of
+    train accuracy and earliness.
+  * predict — walk snapshots ascending, count consecutive identical
+    accepted predictions, emit at streak ≥ v; forced decision at the
+    last snapshot.
 
-Deviations (documented):
-  * slave: tf-idf (BOSS VS) scorer by default — WEASEL slaves plug in
-    via the same interface but cost S full fits.
-  * master: the reference's RBF one-class SVM (M6) needs sklearn
-    (absent here); we use the quantile-threshold master: accept a
-    snapshot prediction iff its normalized top-score ≥ the q-quantile
-    of top-scores among CORRECTLY-classified train samples at that
-    snapshot — same shape (per-snapshot acceptance on the score
-    feature), swappable for the SVM when available.
+Deviations (documented): the slave is a per-dimension tf-idf (BOSS VS)
+scorer with the class scores summed over dimensions, where the
+reference uses a MUSE slave; the master accepts a snapshot prediction
+iff its normalized top score ≥ the q-quantile of top scores among
+CORRECTLY-classified train samples at that snapshot, where the
+reference fits a ν-one-class SVM. The univariate TEASER with the
+reference's WEASEL slaves and one-class SVM master is
+ml/teaser_weasel.py.
 
 The predict path is pure DataFrame ops: per-snapshot scores → accept
 flag → gaps-and-islands streak → first qualifying snapshot (or forced
@@ -37,143 +39,17 @@ from sfa_spark.operators import bags, sfa, tfidf
 from sfa_spark.operators.words import mask_word
 
 
-@dataclass
-class TeaserSlave:
-    snapshot: int  # 1..S
-    prefix_len: int
-    model: sfa.SFAModel
-    word_length: int
-    tfidf: DataFrame
-    tau: float  # master acceptance threshold on normalized top score
-
-
-@dataclass
-class TeaserModel:
-    slaves: list[TeaserSlave]
-    v: int  # consecutive-prediction threshold
-    series_len: int
-    n_snapshots: int
-
-
-def _prefix(arrays: DataFrame, prefix_len: int) -> DataFrame:
-    """Truncated prefix, re-z-normalized to its own stats — reference
-    extractUntilOffset goes through TimeSeries.getSubsequence which
-    norm()s the fresh slice (TimeSeries.java:177-182)."""
-    from sfa_spark.ml.teaser_weasel import java_norm_expr
-
-    return arrays.select(
-        "series_id",
-        java_norm_expr(F.slice("values", 1, prefix_len)).alias("values"),
-    )
-
-
-def _slave_scores(slave: TeaserSlave, arrays: DataFrame) -> DataFrame:
-    """(series_id, pred_label, top, margin): argmax class + normalized
-    top score (score / Σ scores) as the acceptance feature."""
-    words = sfa.transform_windowing(slave.model, arrays)
-    masked = words.withColumn(
-        "word", mask_word(F.col("word"), slave.word_length, slave.model.alphabet)
-    )
-    bag = bags.bag_of_words(bags.numerosity_reduce(masked))
-    scored = (
-        bag.join(F.broadcast(slave.tfidf), "word")
-        .groupBy("series_id", "label")
-        .agg(F.sum(F.col("cnt") * F.col("weight")).alias("score"))
-    )
-    w = Window.partitionBy("series_id")
-    rk = Window.partitionBy("series_id").orderBy(
-        F.col("score").desc(), F.col("label").asc()
-    )
-    return (
-        scored.withColumn("total", F.sum("score").over(w))
-        .withColumn("rn", F.row_number().over(rk))
-        .where(F.col("rn") == 1)
-        .select(
-            "series_id",
-            F.col("label").alias("pred_label"),
-            F.when(F.col("total") > 0, F.col("score") / F.col("total"))
-            .otherwise(F.lit(0.0))
-            .alias("top"),
-        )
-    )
-
-
-def teaser_fit(
-    train_arrays: DataFrame,
-    labels: DataFrame,
-    n_snapshots: int = 5,
-    window: int = 16,
-    word_length: int = 4,
-    alphabet: int = 4,
-    accept_quantile: float = 0.1,
-    v_grid: tuple[int, ...] = (1, 2, 3),
-) -> TeaserModel:
-    series_len = train_arrays.select(F.min(F.size("values"))).collect()[0][0]
-    # snapshot grid capped at 250 like the reference's
-    # getMax(samples, MAX_WINDOW_LENGTH) step base (Classifier.java:634)
-    step_base = min(series_len, 250)
-    slaves: list[TeaserSlave] = []
-    all_scores = []
-    for s in range(1, n_snapshots + 1):
-        plen = max(window, step_base * s // n_snapshots)
-        pref = _prefix(train_arrays, plen).cache()
-        model = sfa.fit(
-            pref, window=window, word_length=word_length, alphabet=alphabet,
-            histogram="equi_depth",
-        )
-        words = sfa.transform_windowing(model, pref)
-        bag = bags.bag_of_words(bags.numerosity_reduce(words))
-        m = tfidf.fit_tfidf(bag.join(labels, "series_id")).cache()
-        slave = TeaserSlave(s, plen, model, word_length, m, tau=0.0)
-        sc = _slave_scores(slave, pref).join(labels, "series_id").cache()
-        correct_tops = sc.where(F.col("pred_label") == F.col("label")).select("top")
-        try:
-            tau = correct_tops.agg(
-                F.percentile("top", F.lit(accept_quantile))
-            ).collect()[0][0]
-        except Exception:  # noqa: BLE001
-            tau = None
-        slave.tau = float(tau) if tau is not None else 0.0
-        slaves.append(slave)
-        all_scores.append(
-            sc.select(
-                "series_id", F.lit(s).alias("s"), "pred_label", "top", "label"
-            ).withColumn("accepted", F.col("top") >= F.lit(slave.tau))
-        )
-    snap = all_scores[0]
-    for x in all_scores[1:]:
-        snap = snap.unionByName(x)
-    snap = snap.cache()
-
-    # v grid: harmonic mean of accuracy and earliness on train
-    best_v, best_hm = v_grid[0], -1.0
-    for v in v_grid:
-        dec = _decide(snap.drop("label"), slaves, v, n_snapshots)
-        evald = dec.join(labels, "series_id").agg(
-            F.avg((F.col("pred_label") == F.col("label")).cast("double")).alias("acc"),
-            F.avg(F.lit(1.0) - F.col("earliness")).alias("late"),
-        ).collect()[0]
-        # evald["late"] is already avg(1 - earliness) — the earliness
-        # BENEFIT (higher = decided earlier); use it directly, matching
-        # mteaser_fit and the reference's HM(acc, 1 - earliness)
-        acc = evald["acc"] or 0.0
-        earl = evald["late"] if evald["late"] is not None else 0.0
-        hm = 2 * acc * earl / (acc + earl) if (acc + earl) > 0 else 0.0
-        if hm > best_hm:
-            best_hm, best_v = hm, v
-    return TeaserModel(slaves, best_v, series_len, n_snapshots)
-
-
 def _decide(
-    snap: DataFrame, slaves: list[TeaserSlave], v: int, n_snapshots: int
+    snap: DataFrame, plen_map: dict[int, int], v: int, n_snapshots: int
 ) -> DataFrame:
     """snapshot predictions (series_id, s, pred_label, accepted) →
     one decision per series: first snapshot whose accepted streak of
     identical predictions reaches v; else forced at the last snapshot.
-    Gaps-and-islands with window functions — no driver loop."""
+    plen_map: snapshot → prefix length; earliness is the decision
+    snapshot's prefix over the longest one. Gaps-and-islands with
+    window functions — no driver loop."""
     w = Window.partitionBy("series_id").orderBy("s")
-    plen_map = {sl.snapshot: sl.prefix_len for sl in slaves}
-    total = max(sl.prefix_len for sl in slaves)
+    total = max(plen_map.values())
     chg = (
         F.when(~F.col("accepted"), F.lit(1))
         .when(F.col("pred_label") != F.lag("pred_label").over(w), F.lit(1))
@@ -203,7 +79,7 @@ def _decide(
         .select("series_id", F.col("pred_label").alias("forced_label"))
     )
     plen_df = snap.sparkSession.createDataFrame(
-        [(s, plen_map[s]) for s in plen_map], "s int, plen int"
+        list(plen_map.items()), "s int, plen int"
     )
     return (
         forced.join(first_hit, "series_id", "left")
@@ -217,26 +93,6 @@ def _decide(
         )
     )
 
-
-def teaser_predict(model: TeaserModel, test_arrays: DataFrame) -> DataFrame:
-    """(series_id, pred_label, earliness) — earliness = fraction of the
-    series consumed before the decision (lower is earlier)."""
-    parts = []
-    for sl in model.slaves:
-        pref = _prefix(test_arrays, sl.prefix_len)
-        sc = _slave_scores(sl, pref)
-        parts.append(
-            sc.select(
-                "series_id", F.lit(sl.snapshot).alias("s"), "pred_label", "top"
-            ).withColumn("accepted", F.col("top") >= F.lit(sl.tau))
-        )
-    snap = parts[0]
-    for p in parts[1:]:
-        snap = snap.unionByName(p)
-    return _decide(snap, model.slaves, model.v, model.n_snapshots)
-
-
-# ---------------------------------------------------------------- MTEASER (C11)
 
 @dataclass
 class MTeaserSlave:
@@ -350,9 +206,9 @@ def mteaser_fit(
         snap = snap.unionByName(x)
     snap = snap.cache()
     best_v, best_hm = v_grid[0], -1.0
-    fake = [TeaserSlave(sl.snapshot, sl.prefix_len, None, 0, None, sl.tau) for sl in slaves]
+    plen_map = {sl.snapshot: sl.prefix_len for sl in slaves}
     for v in v_grid:
-        dec = _decide(snap, fake, v, n_snapshots)
+        dec = _decide(snap, plen_map, v, n_snapshots)
         ev = dec.join(labels, "series_id").agg(
             F.avg((F.col("pred_label") == F.col("label")).cast("double")).alias("acc"),
             F.avg("earliness").alias("e"),
@@ -376,5 +232,5 @@ def mteaser_predict(model: MTeaserModel, mv_arrays: DataFrame) -> DataFrame:
     snap = parts[0]
     for p in parts[1:]:
         snap = snap.unionByName(p)
-    fake = [TeaserSlave(sl.snapshot, sl.prefix_len, None, 0, None, sl.tau) for sl in model.slaves]
-    return _decide(snap, fake, model.v, model.n_snapshots)
+    plen_map = {sl.snapshot: sl.prefix_len for sl in model.slaves}
+    return _decide(snap, plen_map, model.v, model.n_snapshots)

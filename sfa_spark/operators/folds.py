@@ -1,4 +1,4 @@
-"""Stratified folds, accuracy & ensemble voting (SURVEY §2.7 C3-C4, C12-C13).
+"""Stratified folds, accuracy & ensemble voting (SURVEY §2.7 C4, C12-C13).
 
 Reference parity:
   * folds    — Classifier.generateIndices round-robin per label
@@ -6,7 +6,11 @@ Reference parity:
   * accuracy — Classifier.evalLabels, 3-decimal rounding (:116-139, :349-351)
   * vote     — Classifier.score: weighted majority, tie → larger label
                (:569-615)
-  * factor   — Classifier.filterByFactor: keep score ≥ best·factor (:550-567)
+
+Classifier.filterByFactor (keep score ≥ best·factor, :550-567) filters a
+handful of grid members, so each fit applies it on the driver
+(grid._pick_members, grid.shotgun_grid_fit, classifiers.boss_ensemble_fit,
+classifiers.bossvs_fit).
 """
 
 from __future__ import annotations
@@ -50,10 +54,3 @@ def weighted_vote(votes: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
         .select(*keys, "series_id", "pred_label")
     )
 
-
-def filter_by_factor(scores: DataFrame, factor: float) -> DataFrame:
-    """Keep ensemble members whose score ≥ best · factor."""
-    best = scores.agg(F.max("score").alias("best"))
-    return scores.crossJoin(F.broadcast(best)).where(
-        F.col("score") >= F.col("best") * factor
-    ).drop("best")

@@ -138,15 +138,13 @@ def test_mllib_pipeline_composition(spark, cbf):
     assert out.select("series_id").distinct().count() == te_a.count()
 
 
-def test_mllib_fallback_matches_local_solve(spark, monkeypatch, plan_node_names):
-    """Above the nnz gate the linear solve routes to MLlib
-    LogisticRegression over distributed SparseVectors (same objective as
-    the driver solve) — predictions must agree with the local path and
-    the bags must never be collected. Both paths' weights tables, which
-    every scoring broadcasts, plan as a local relation, not a scan of a
-    Python RDD."""
-    import numpy as np
-
+def test_local_solve_collects_once_and_plans_weights_locally(spark, plan_node_names):
+    """The linear solve is one collect of the labels and one of the
+    kept bag, then a numpy solve on the driver: on a small kept frame
+    (an aggregate, so its collect runs a shuffle map job and a result
+    job) it starts at most 3 jobs. The weights table, which every
+    scoring broadcasts, plans as a local relation, not a scan of a
+    Python RDD, and it scores the training bags well."""
     rng = np.random.RandomState(17)
     rows, lab_rows = [], []
     for sid in range(60):
@@ -160,21 +158,23 @@ def test_mllib_fallback_matches_local_solve(spark, monkeypatch, plan_node_names)
         .groupBy("series_id", "key").agg(F.sum("cnt").alias("cnt"))
     labels = spark.createDataFrame(lab_rows, "series_id long, label double")
 
-    w_loc, b_loc, lm_loc, *_ = C._fit_local_softmax(kept, labels, "bigint", 100, 1.0)
-    monkeypatch.setattr(C, "SOLVE_NNZ_BUDGET_BYTES", 1)
-    w_dist, b_dist, lm_dist, *rest = C._fit_local_softmax(kept, labels, "bigint", 100, 1.0)
-    assert lm_loc == lm_dist and rest[:3] == [None, None, None]
-    for w in (w_loc, w_dist):
-        names = plan_node_names(w)
-        assert "LocalTableScanExec" in names and "RDDScanExec" not in names, names
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "local-solve")
+    try:
+        weights, intercept, label_map = C._fit_local_softmax(
+            kept, labels, "bigint", 100, 1.0
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup("local-solve")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(jobs) <= 3, sorted(jobs)
+    assert label_map == [0.0, 1.0, 2.0] and len(intercept) == 3
+    names = plan_node_names(weights)
+    assert "LocalTableScanExec" in names and "RDDScanExec" not in names, names
 
     ids = labels.select("series_id").distinct()
-    p_loc = {r["series_id"]: r["pred_label"]
-             for r in C._score_with_weights(kept, ids, w_loc, b_loc, lm_loc).collect()}
-    p_dist = {r["series_id"]: r["pred_label"]
-              for r in C._score_with_weights(kept, ids, w_dist, b_dist, lm_dist).collect()}
-    agree = sum(p_loc[s] == p_dist[s] for s in p_loc) / len(p_loc)
-    assert agree >= 0.95, f"local vs MLlib prediction agreement {agree}"
+    pred = C._score_with_weights(kept, ids, weights, intercept, label_map)
+    assert _accuracy(pred, labels) >= 0.95
 
 
 def test_weasel_features_match_sql_key_bags(spark, cbf, plan_node_names):

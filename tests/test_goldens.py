@@ -240,18 +240,22 @@ def _load_mv(spark, name, use_derivatives=True):
 
 
 @pytest.mark.parametrize(
-    "dataset,windows,floor,test_cap",
+    "dataset,min_window,max_window,floor,test_cap",
     [
         # PenDigits: 8-point series, 2 dims (+2 derivative dims).
         # MUSE paper (Schäfer & Leser, CIKM'17) reports ~0.91 full-grid;
-        # this bounded grid floors at 0.85 on the first 1000 test series.
-        ("PenDigits", [4, 6, 8], 0.85, 1000),
-        # ECG: 2 dims, variable length (39..152). Floor 0.70.
-        ("ECG", [8, 16, 32], 0.70, None),
+        # this bounded grid (windows 4, 6, 8) floors at 0.85 on the
+        # first 1000 test series.
+        ("PenDigits", 4, 8, 0.85, 1000),
+        # ECG: 2 dims, variable length (39..152); windows 8, 20, 32.
+        # Floor 0.70.
+        ("ECG", 8, 32, 0.70, None),
     ],
 )
-def test_muse_fixture_floor(spark, dataset, windows, floor, test_cap):
-    from sfa_spark.ml.classifiers import muse_fit, muse_predict
+def test_muse_fixture_floor(spark, dataset, min_window, max_window, floor, test_cap):
+    """MUSE over a bounded grid: three windows evenly spread over
+    [min_window, max_window], f = 4, equi-depth bins."""
+    from sfa_spark.ml import grid
     from sfa_spark.sources.multivariate import dim_arrays
 
     tr, tr_lab, te, te_lab = _load_mv(spark, dataset)
@@ -262,8 +266,12 @@ def test_muse_fixture_floor(spark, dataset, windows, floor, test_cap):
         te_a = te_a.join(keep, "series_id")
         te_lab = te_lab.join(keep, "series_id")
     te_a = te_a.cache()
-    model = muse_fit(tr_a, tr_lab, windows=windows)
-    acc = _accuracy(muse_predict(model, te_a), te_lab)
+    model = grid.muse_grid_fit(
+        tr_a, tr_lab, hist_types=("equi_depth",), f_values=(4,),
+        min_window=min_window, max_window=max_window, max_windows=3,
+        max_iter=25,
+    )
+    acc = _accuracy(model.predict(te_a), te_lab)
     assert acc >= floor, f"MUSE {dataset}: acc {acc} < floor {floor}"
 
 

@@ -336,12 +336,3 @@ def test_chi2_pvalue_selection(spark):
     kept = {r["word"] for r in sel.collect()}
     assert 1 in kept and 2 in kept  # separating words survive
     assert 3 not in kept  # uniform word filtered
-
-
-def test_filter_by_factor(spark):
-    scores = spark.createDataFrame(
-        [(1, 1.00), (2, 0.95), (3, 0.90), (4, 0.50)],
-        "member long, score double",
-    )
-    kept = {r["member"] for r in folds.filter_by_factor(scores, 0.92).collect()}
-    assert kept == {1, 2}  # >= best * 0.92 = 0.92

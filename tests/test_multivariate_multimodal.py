@@ -39,7 +39,7 @@ def mv_corpus(spark):
 
 
 def test_muse_separates_classes(spark, mv_corpus):
-    from sfa_spark.ml import classifiers as C
+    from sfa_spark.ml import grid
 
     arrays, labels = mv_corpus
     train_l = labels.where("series_id < 16")
@@ -47,8 +47,11 @@ def test_muse_separates_classes(spark, mv_corpus):
     test_a = arrays.join(
         labels.where("series_id >= 16").select("series_id"), "series_id"
     )
-    model = C.muse_fit(train_a, train_l, windows=[16], word_length=4, alphabet=4)
-    pred = C.muse_predict(model, test_a)
+    model = grid.muse_grid_fit(
+        train_a, train_l, f_values=(4,), min_window=8, max_window=32,
+        max_windows=3, n_folds=2, max_iter=12,
+    )
+    pred = model.predict(test_a)
     acc = (
         pred.join(labels, "series_id")
         .agg(F.avg((F.col("pred_label") == F.col("label")).cast("double")))

@@ -2,20 +2,20 @@
 seeded CBF (reference asserts accuracy AND earliness, e.g. CBF
 1.0/0.982/0.64)."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from sfa_spark.ml import teaser as T
+from sfa_spark.ml import teaser_weasel as TW
 from sfa_spark.sources.cbf import cbf_dataset
 
 
 def test_teaser_cbf_accuracy_and_earliness(spark):
     tr_a, tr_l = cbf_dataset(spark, n_per_class=8, seed=5)
     te_a, te_l = cbf_dataset(spark, n_per_class=10, seed=6, id_offset=500)
-    model = T.teaser_fit(
-        tr_a.cache(), tr_l.cache(), n_snapshots=4, window=16, word_length=4
+    model = TW.teaser_weasel_fit(
+        tr_a.cache(), tr_l.cache(), s_total=4,
+        weasel_kw=dict(n_folds=3, max_iter=15, max_windows=32),
     )
-    dec = T.teaser_predict(model, te_a.cache()).cache()
+    dec = TW.teaser_weasel_predict(model, te_a.cache()).cache()
     joined = dec.join(te_l, "series_id")
     acc = joined.agg(
         F.avg((F.col("pred_label") == F.col("label")).cast("double"))

@@ -110,15 +110,6 @@ def test_short_series_dropped_everywhere(spark):
     assert window.disjoint_long(short, 16).count() == 0
 
 
-def test_sqrt_spaced_windows():
-    from sfa_spark.ml.classifiers import sqrt_spaced_windows
-
-    ws = sqrt_spaced_windows(10, 250, 8)
-    assert ws[0] == 10 and ws[-1] == 250 and ws == sorted(set(ws))
-    gaps = [b - a for a, b in zip(ws, ws[1:])]
-    assert gaps[0] < gaps[-1]  # denser at the small end
-
-
 def test_coef_large_mean_stability(spark, tmp_path):
     """r9 (ADVICE): the coef combine must not lose precision
     to E[x²]−E[x]² cancellation. Values of magnitude 1e8 with
